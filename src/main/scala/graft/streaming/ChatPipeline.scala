@@ -17,8 +17,8 @@ import graft.sources.{ChatMessage, RawPage, Scans}
   *                merge-upsert (S9)
   *
   * One linear plan per micro-batch; the reference's per-listener task
-  * fan-out becomes two writes of one cached batch (it guarantees no
-  * cross-sink ordering anyway, events.py:23).
+  * fan-out becomes two merges of one deduplicated, cached batch (it
+  * guarantees no cross-sink ordering anyway, events.py:23).
   */
 object ChatPipeline {
 
@@ -59,12 +59,16 @@ object ChatPipeline {
     val spark = pages.sparkSession
     import spark.implicits._
     val changed = changedMessages(pages, now)
+    val keys = Seq("room", "id")
     val sink: (Dataset[ChatMessage], Long) => Unit = (batch, _) => {
-      val cached = batch.toDF().cache()
+      // deduplicated and cached once for both stores; an empty batch
+      // (e.g. the no-data batch that only advances the watermark) writes
+      // nothing to either
+      val rows = batch.toDF().dropDuplicates(keys).persist()
       try {
-        MergeSink.merge(cached, Seq("room", "id"), msgStorePath, MergeSink.Upsert)
-        MergeSink.merge(toDocRows(cached), Seq("room", "id"), docStorePath, MergeSink.Upsert)
-      } finally cached.unpersist()
+        MergeSink.mergeDistinct(rows, keys, msgStorePath, MergeSink.Upsert)
+        MergeSink.mergeDistinct(toDocRows(rows), keys, docStorePath, MergeSink.Upsert)
+      } finally rows.unpersist()
     }
     val w = changed.writeStream
       .queryName("chat-pipeline")

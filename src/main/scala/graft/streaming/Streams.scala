@@ -178,9 +178,34 @@ object Streams {
 }
 
 /** S7–S9 sink semantics without a transactional table format in the
-  * environment (no Delta/Iceberg jars): a keyed snapshot-merge over
-  * parquet. On a production cluster this `merge` is a Delta/Iceberg
-  * `MERGE INTO` inside `foreachBatch` — the call sites don't change.
+  * environment (no Delta/Iceberg jars): a keyed parquet store merged by
+  * touched-file copy-on-write, the local-filesystem form of what Delta's
+  * `MERGE INTO` does. On a production cluster this `merge` is a
+  * Delta/Iceberg `MERGE INTO` inside `foreachBatch` — the call sites
+  * don't change.
+  *
+  * A merge rewrites only the data files that hold a key of the
+  * deduplicated batch. One scan of the key columns finds them
+  * (`_metadata.file_path` left-semi-joined to the broadcast batch keys).
+  * The batch's merged rows go to one new file, the touched files'
+  * surviving rows are rewritten, and every other data file is hard-linked
+  * into the next snapshot as it is. So a merge writes in proportion to
+  * the batch and the files it touches, not to the store. A batch that is
+  * empty after deduplication writes nothing.
+  *
+  * File count: each merge also folds the store's smallest files into the
+  * new file, smallest first, while the next one holds at most twice the
+  * rows gathered so far. Every file left beside the new one then holds
+  * more than twice its rows, so sizes at least double from one file to
+  * the next larger and a store built by merges holds O(log rows) files.
+  * Touched files too large to fold have their surviving rows rewritten
+  * apart from the new file, one output file per input file, so a small
+  * batch never grows a large file.
+  *
+  * Crash contract: the next snapshot (new file plus links) is assembled
+  * in `path.tmp` and swapped in by two atomic renames (see [[merge]]);
+  * a leftover `path.tmp` is never read and is overwritten by the next
+  * merge.
   *
   * Semantics per mode (all idempotent under batch replay, which is what
   * makes at-least-once delivery exactly-once in effect — db/chat.py:13-26,
@@ -188,8 +213,18 @@ object Streams {
   *   - insert-ignore (S7): WHEN NOT MATCHED INSERT; matched rows keep state.
   *   - update (S8):        WHEN MATCHED overwrite non-key columns.
   *   - upsert (S9):        update ∪ insert.
+  * Each mode reads only the touched files as its state: every stored row
+  * whose key is in the batch lies in a touched file, so the result equals
+  * the same merge over the whole store.
   */
 object MergeSink {
+  import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+  import scala.jdk.CollectionConverters._
+  import org.apache.parquet.hadoop.ParquetFileReader
+  import org.apache.parquet.hadoop.util.HadoopInputFile
+  import org.apache.spark.sql.Row
+  import org.apache.spark.sql.types.{DataType, StructType}
+
   sealed trait Mode
   case object InsertIgnore extends Mode
   case object UpdateOnly extends Mode
@@ -199,10 +234,10 @@ object MergeSink {
     * with no live dir IS the last complete snapshot — move it back.
     * Called on every merge before reading state (and usable at startup). */
   private def recover(path: String): Unit = {
-    val live = java.nio.file.Paths.get(path)
-    val old = java.nio.file.Paths.get(path + ".old")
-    if (!java.nio.file.Files.exists(live) && java.nio.file.Files.exists(old))
-      java.nio.file.Files.move(old, live, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    val live = Paths.get(path)
+    val old = Paths.get(path + ".old")
+    if (!Files.exists(live) && Files.exists(old))
+      Files.move(old, live, StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** Merge `batch` into the keyed parquet state at `path`.
@@ -218,44 +253,108 @@ object MergeSink {
     * a transactional format (Delta/Iceberg `MERGE INTO`, see object doc).
     */
   def merge(batch: DataFrame, keys: Seq[String], path: String, mode: Mode): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val spark = batch.sparkSession
-    recover(path)
-    val dir = new java.io.File(path)
-    val dedupedBatch = batch.dropDuplicates(keys) // replay/page-overlap safety
-    val merged =
-      if (!dir.exists()) {
-        if (mode == UpdateOnly) return else dedupedBatch
-      } else {
-        val state = spark.read.parquet(path)
-        val joined = mode match {
-          case InsertIgnore => // state wins on match
-            state.unionByName(
-              dedupedBatch.join(state.select(keys.map(col): _*), keys, "left_anti"))
-          case UpdateOnly => // batch overwrites matched, unmatched batch rows dropped
-            state.join(dedupedBatch.select(keys.map(col): _*), keys, "left_anti")
-              .unionByName(dedupedBatch.join(state.select(keys.map(col): _*), keys, "left_semi"))
-          case Upsert => // batch overwrites matched + inserts new
-            state.join(dedupedBatch.select(keys.map(col): _*), keys, "left_anti")
-              .unionByName(dedupedBatch)
-        }
-        joined
-      }
-    writeSnapshot(merged, path)
+    val rows = batch.dropDuplicates(keys).persist() // replay/page-overlap safety
+    try mergeDistinct(rows, keys, path, mode) finally rows.unpersist()
   }
 
-  /** Snapshot swap: write next to the live dir, then two atomic renames
-    * (see [[merge]] Scaladoc for the crash-recovery contract). Shared
-    * with [[IncrementalStream]]'s hash-state store. */
-  private[streaming] def writeSnapshot(merged: DataFrame, path: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val tmp = path + ".tmp"
-    merged.write.mode("overwrite").parquet(tmp)
+  /** [[merge]] of a batch that holds at most one row per key. The batch
+    * is read several times, so the caller should have it cached. */
+  private[streaming] def mergeDistinct(rows: DataFrame, keys: Seq[String], path: String,
+      mode: Mode): Unit =
+    rewrite(rows, keys, path, inserts = mode != UpdateOnly) { (state, batchKeys) =>
+      mode match {
+        case InsertIgnore => // state wins on match
+          state.join(batchKeys, keys, "left_semi")
+            .unionByName(rows.join(state.select(keys.map(col): _*), keys, "left_anti"))
+        case UpdateOnly => // batch overwrites matched, unmatched batch rows dropped
+          rows.join(state.select(keys.map(col): _*), keys, "left_semi")
+        case Upsert => rows // batch overwrites matched + inserts new
+      }
+    }
+
+  /** Touched-file copy-on-write shared by every merge (see the object
+    * doc). `matched(state, batchKeys)` gives the rows the batch's keys
+    * hold after the merge, from the rows of the touched files and the
+    * broadcast batch keys; every other stored row survives as it is.
+    * `inserts` says whether a batch key absent from the store adds a
+    * row: a batch that can only update writes nothing when it touches
+    * no file. */
+  private def rewrite(rows: DataFrame, keys: Seq[String], path: String, inserts: Boolean)(
+      matched: (DataFrame, DataFrame) => DataFrame): Unit = {
+    val spark = rows.sparkSession
+    recover(path)
+    val keyRows = rows.select(keys.map(col): _*)
+    val batchKeys = keyRows.collect()
+    if (batchKeys.isEmpty) return
+    if (!Files.exists(Paths.get(path))) {
+      if (inserts) writeSnapshot(rows.coalesce(1), path)
+      return
+    }
+    val files = dataFiles(Paths.get(path))
+    val footers = files.map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toUri), spark.sparkContext.hadoopConfiguration))
+      try reader.getFooter finally reader.close()
+    }
+    // the schema Spark stored in the footer, read on the driver: schema
+    // inference would run a Spark job per merge
+    val schema = DataType.fromJson(footers.head.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata")).asInstanceOf[StructType]
+    def read(files: Seq[Path]): DataFrame =
+      if (files.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
+      else spark.read.schema(schema).parquet(files.map(_.toString): _*)
+    val batchKeyRel = broadcast(spark.createDataFrame(batchKeys.toSeq.asJava, keyRows.schema))
+    def survivors(files: Seq[Path]): DataFrame = read(files).join(batchKeyRel, keys, "left_anti")
+    val hit = read(files)
+      .select(keys.map(col) :+ col("_metadata.file_path"): _*)
+      .join(batchKeyRel, keys, "left_semi")
+      .collect().map(r => Paths.get(new java.net.URI(r.getString(keys.size))).getFileName).toSet
+    val touched = files.filter(f => hit(f.getFileName))
+    if (touched.isEmpty && !inserts) return
+    val bySize = files.zip(footers.map(_.getBlocks.asScala.map(_.getRowCount).sum))
+      .sortBy { case (f, n) => (n, f.getFileName.toString) }
+    // rows gathered before each file: the batch plus every smaller file
+    val gathered = bySize.scanLeft(batchKeys.length.toLong)(_ + _._2)
+    val folded = bySize.zip(gathered).takeWhile { case ((_, n), g) => n <= 2 * g }.map(_._1._1)
+    val apart = touched.filterNot(folded.contains)
+    val newFile = matched(read(touched), batchKeyRel).select(schema.fieldNames.toSeq.map(col): _*)
+      .unionByName(survivors(folded)).coalesce(1)
+    // survivors(apart) keeps its scan's partitions (about one per file),
+    // so its rows stay out of the new file; a coalesce(1) here would make
+    // the union a single partition and so a single file
+    writeSnapshot(if (apart.isEmpty) newFile else survivors(apart).unionByName(newFile),
+      path, files.filterNot(f => touched.contains(f) || folded.contains(f)))
+  }
+
+  /** The parquet data files of a snapshot dir. */
+  private def dataFiles(dir: Path): Seq[Path] = {
+    val listing = Files.list(dir)
+    try listing.iterator().asScala.filter { f =>
+      val name = f.getFileName.toString
+      !name.startsWith("_") && !name.startsWith(".")
+    }.toSeq
+    finally listing.close()
+  }
+
+  /** Snapshot swap: write `rows` next to the live dir, hard-link the
+    * `carried` data files (and their checksums) of the live snapshot in
+    * beside them, then two atomic renames (see [[merge]] Scaladoc for the
+    * crash-recovery contract). A whole-snapshot write carries no files;
+    * [[IncrementalStream]]'s hash-state store writes that way. */
+  private[streaming] def writeSnapshot(rows: DataFrame, path: String,
+      carried: Seq[Path] = Nil): Unit = {
+    val tmp = Paths.get(path + ".tmp")
+    rows.write.mode("overwrite").parquet(tmp.toString)
+    carried.foreach { f =>
+      Files.createLink(tmp.resolve(f.getFileName), f)
+      val crc = f.resolveSibling(s".${f.getFileName}.crc")
+      if (Files.exists(crc)) Files.createLink(tmp.resolve(crc.getFileName), crc)
+    }
     val old = Paths.get(path + ".old")
     if (Files.exists(old)) org.apache.commons.io.FileUtils.deleteDirectory(old.toFile)
     if (Files.exists(Paths.get(path)))
       Files.move(Paths.get(path), old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(tmp), Paths.get(path), StandardCopyOption.ATOMIC_MOVE)
+    Files.move(tmp, Paths.get(path), StandardCopyOption.ATOMIC_MOVE)
     if (Files.exists(old)) org.apache.commons.io.FileUtils.deleteDirectory(old.toFile)
   }
 
@@ -268,32 +367,26 @@ object MergeSink {
     * set-on-subdocument without clobbering sibling fields, as one
     * relational merge; on a transactional table format it is the
     * `MERGE INTO ... UPDATE SET sub.f = coalesce(src.sub.f, tgt.sub.f)`
-    * form with identical call sites.
+    * form with identical call sites. Rewrites only touched files, like
+    * [[merge]].
     */
   def mergeStruct(batch: DataFrame, keys: Seq[String], path: String, structCol: String): Unit = {
-    recover(path)
-    val spark = batch.sparkSession
-    val deduped = batch.dropDuplicates(keys)
-    val merged =
-      if (!new java.io.File(path).exists()) deduped
-      else {
-        val state = spark.read.parquet(path)
-        val others = state.columns.filterNot(c => keys.contains(c) || c == structCol).toSeq
-        val fields = state.schema(structCol).dataType
-          .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames.toSeq
-        val st = state.select(keys.map(col) ++ others.map(c => col(c).as(s"_s_$c")) :+
-          col(structCol).as("_s_sub"): _*)
-        val bt = deduped.select(keys.map(col) ++ others.map(c => col(c).as(s"_b_$c")) :+
-          col(structCol).as("_b_sub"): _*)
-        val mergedSub = struct(fields.map(f =>
-          coalesce(col(s"_b_sub.$f"), col(s"_s_sub.$f")).as(f)): _*)
-        st.join(bt, keys, "full_outer")
-          .select(keys.map(col) ++
-            others.map(c => coalesce(col(s"_b_$c"), col(s"_s_$c")).as(c)) :+
-            when(col("_b_sub").isNull, col("_s_sub"))
-              .when(col("_s_sub").isNull, col("_b_sub"))
-              .otherwise(mergedSub).as(structCol): _*)
-      }
-    writeSnapshot(merged, path)
+    val deduped = batch.dropDuplicates(keys).persist()
+    try rewrite(deduped, keys, path, inserts = true) { (state, _) =>
+      val others = state.columns.filterNot(c => keys.contains(c) || c == structCol).toSeq
+      val fields = state.schema(structCol).dataType.asInstanceOf[StructType].fieldNames.toSeq
+      val st = state.select(keys.map(col) ++ others.map(c => col(c).as(s"_s_$c")) :+
+        col(structCol).as("_s_sub"): _*)
+      val bt = deduped.select(keys.map(col) ++ others.map(c => col(c).as(s"_b_$c")) :+
+        col(structCol).as("_b_sub"): _*)
+      val mergedSub = struct(fields.map(f =>
+        coalesce(col(s"_b_sub.$f"), col(s"_s_sub.$f")).as(f)): _*)
+      bt.join(st, keys, "left_outer")
+        .select(keys.map(col) ++
+          others.map(c => coalesce(col(s"_b_$c"), col(s"_s_$c")).as(c)) :+
+          when(col("_b_sub").isNull, col("_s_sub"))
+            .when(col("_s_sub").isNull, col("_b_sub"))
+            .otherwise(mergedSub).as(structCol): _*)
+    } finally deduped.unpersist()
   }
 }

@@ -49,4 +49,31 @@ class ArchiveBackfillSpec extends AnyFunSuite {
     assert(streamed == batch, "backfill store must equal the batch parse of the archive")
     assert(spark.read.parquet(docStore).count() == batch.size)
   }
+
+  test("a drain of more than 32 files per trigger lists its files without a Spark job") {
+    // 40 rooms × 2 fetches: each trigger reads 40 new files, above the
+    // default 32-path threshold at which a file read lists its paths
+    // with a Spark job
+    val archive = Files.createTempDirectory("backfill-wide")
+    val posted = Now.minusSeconds(600)
+    for (r <- 0 until 40; s <- 0 until 2) {
+      val msgs = (0 to s).map(i => (r * 10L + i, posted.plusSeconds(i)))
+      val f = archive.resolve(f"room$r%02d__$s.html")
+      Files.writeString(f, ChatPages.page(msgs))
+      f.toFile.setLastModified(posted.toEpochMilli + s * 1000L + r)
+    }
+    val out = Files.createTempDirectory("backfill-wide-out").toString
+    val (q, jobs) = TestSpark.jobDescriptions {
+      val q = ChatPipeline.start(
+        Scans.streamArchive(spark, archive.toString, maxFilesPerTrigger = 40), Now,
+        s"$out/messages", s"$out/docs", trigger = Some(Trigger.AvailableNow()))
+      try assert(q.awaitTermination(120000), "AvailableNow query must stop after draining")
+      finally if (q.isActive) q.stop()
+      q
+    }
+    assert(q.recentProgress.count(_.numInputRows > 0) == 2, "one trigger per 40 files")
+    val listing = jobs.filter(_.startsWith("Listing leaf files"))
+    assert(listing.isEmpty, s"listing jobs ran: $listing")
+    assert(spark.read.parquet(s"$out/messages").count() == 80)
+  }
 }

@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.sql.Timestamp
 import java.time.Instant
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.sources.RawPage
@@ -59,6 +60,37 @@ class ChatPipelineSpec extends AnyFunSuite {
       assert(docs.columns.contains("mentions"))
       val unchanged = docs.filter("id = '5363757'").collect().head
       assert(!unchanged.getAs[Boolean]("deleted"))
+    } finally q.stop()
+  }
+
+  test("a micro-batch whose diff is empty writes no store file") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("chatpipe-empty")
+    val stores = Seq(dir.resolve("messages"), dir.resolve("docs"))
+    def snapshot() = stores.map { s =>
+      val listing = Files.list(s)
+      try listing.iterator().asScala.map(f => f.getFileName.toString ->
+        Files.getLastModifiedTime(f)).toMap
+      finally listing.close()
+    }
+    val page = RawPage("global", ChatPages.page(
+      (1L to 3L).map(i => (i, Now.minusSeconds(300 - i)))), new Timestamp(0))
+    val in = MemoryStream[RawPage]
+    val q = ChatPipeline.start(in.toDS(), Now, stores(0).toString, stores(1).toString,
+      intervalMs = 10)
+    try {
+      in.addData(page)
+      q.processAllAvailable()
+      assert(spark.read.parquet(stores(0).toString).count() == 3)
+      val before = snapshot()
+      // a re-scrape of the unchanged page: every message is already in
+      // the diff state, so the micro-batch's diff is empty
+      in.addData(page)
+      q.processAllAvailable()
+      assert(q.recentProgress.count(_.numInputRows > 0) == 2)
+      assert(snapshot() == before, "an empty diff must leave both stores' files as they were")
+      assert(stores.forall(s => !Files.exists(java.nio.file.Paths.get(s.toString + ".tmp"))))
     } finally q.stop()
   }
 }

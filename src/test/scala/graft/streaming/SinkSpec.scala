@@ -3,6 +3,7 @@ package graft.streaming
 import java.nio.file.Files
 import java.sql.Timestamp
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 import graft.sources.UserSnapshot
@@ -78,5 +79,80 @@ class SinkSpec extends AnyFunSuite {
     assert(s2 == Seq(
       ("m1", "hello", Some(3), Some(222L)),
       ("m2", "new", Some(1), Some(5L))))
+  }
+
+  private def dataFiles(path: String): Seq[java.nio.file.Path] = {
+    val listing = Files.list(java.nio.file.Paths.get(path))
+    try listing.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+    finally listing.close()
+  }
+
+  /** A store of 101 rows in two files (100 rows, then 1), so the next
+    * merge carries a file by link. */
+  private def twoFileStore(dir: String): String = {
+    import spark.implicits._
+    val path = s"$dir/state"
+    MergeSink.merge((0L until 100L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"), path,
+      MergeSink.Upsert)
+    MergeSink.merge(Seq((100L, "v100")).toDF("id", "v"), Seq("id"), path, MergeSink.Upsert)
+    assert(dataFiles(path).size == 2)
+    path
+  }
+
+  /** A parquet file holding `row`, written apart and moved into `dir`. */
+  private def looseFile(row: (Long, String), dir: java.nio.file.Path): Unit = {
+    import spark.implicits._
+    val out = Files.createTempDirectory("loose").toString + "/f"
+    Seq(row).toDF("id", "v").coalesce(1).write.parquet(out)
+    dataFiles(out).foreach(f => Files.move(f, dir.resolve(f.getFileName)))
+  }
+
+  private def assertOneRowPerKey(path: String, expected: Map[Long, String]): Unit = {
+    import spark.implicits._
+    val rows = spark.read.parquet(path).as[(Long, String)].collect().toSeq
+    assert(rows.map(_._1).distinct.size == rows.size, "one row per key")
+    assert(rows.toMap == expected)
+    assert(!Files.exists(java.nio.file.Paths.get(path + ".tmp")))
+    assert(!Files.exists(java.nio.file.Paths.get(path + ".old")))
+  }
+
+  test("a leftover path.tmp holding links and new files is never read") {
+    import spark.implicits._
+    val path = twoFileStore(Files.createTempDirectory("crash-tmp").toString)
+    // a crash while the next snapshot was being assembled: links to the
+    // live files and a new file of the unfinished merge
+    val tmp = java.nio.file.Paths.get(path + ".tmp")
+    Files.createDirectories(tmp)
+    dataFiles(path).foreach(f => Files.createLink(tmp.resolve(f.getFileName), f))
+    looseFile((0L, "STALE"), tmp)
+    MergeSink.merge(Seq((101L, "v101")).toDF("id", "v"), Seq("id"), path, MergeSink.Upsert)
+    assertOneRowPerKey(path, (0L to 101L).map(i => i -> s"v$i").toMap)
+  }
+
+  test("a crash between the two renames, with the next snapshot's links in path.tmp, recovers") {
+    import spark.implicits._
+    val path = twoFileStore(Files.createTempDirectory("crash-links").toString)
+    val live = java.nio.file.Paths.get(path)
+    val tmp = java.nio.file.Paths.get(path + ".tmp")
+    // the unfinished merge assembled its snapshot (links plus a new file
+    // updating key 0), moved live→.old, and died before tmp→live
+    Files.createDirectories(tmp)
+    dataFiles(path).foreach(f => Files.createLink(tmp.resolve(f.getFileName), f))
+    looseFile((0L, "lost"), tmp)
+    Files.move(live, java.nio.file.Paths.get(path + ".old"))
+    // the replayed batch merges onto the recovered last snapshot
+    MergeSink.merge(Seq((0L, "replayed")).toDF("id", "v"), Seq("id"), path, MergeSink.Upsert)
+    assertOneRowPerKey(path, (1L to 100L).map(i => i -> s"v$i").toMap + (0L -> "replayed"))
+  }
+
+  test("200 one-row merges leave O(log rows) files") {
+    import spark.implicits._
+    val path = Files.createTempDirectory("filecount").toString + "/state"
+    (0L until 200L).foreach { i =>
+      MergeSink.merge(Seq((i, s"v$i")).toDF("id", "v"), Seq("id"), path, MergeSink.Upsert)
+    }
+    assertOneRowPerKey(path, (0L until 200L).map(i => i -> s"v$i").toMap)
+    val files = dataFiles(path).size
+    assert(files <= 1 + (math.log(200) / math.log(2)).toInt, s"$files files for 200 rows")
   }
 }
