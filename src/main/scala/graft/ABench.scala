@@ -4,11 +4,12 @@ package graft
   * (docs/SCALE.md): per-query wall times swing ±50% across JVM
   * invocations on this host, so perf decisions are made ONLY from
   * interleaved min-of-N comparisons inside one JVM. This main runs the
-  * named query alternating the variant conf (currently AQE on/off —
-  * edit the two `spark.conf.set` lines for a different axis; code
-  * variants still use throwaway runMains). Decisions it produced are
-  * ledgered in docs/SCALE.md §r17+.
-  * Usage: runMain graft.ABench <sfDir> <query> [reps]
+  * named query alternating two values of one conf — the axis, given as
+  * args 4–6 (`<key> <valueA> <valueB>`; default: the adopted AQE
+  * coalesce floor vs Spark's default). Code variants still use
+  * throwaway runMains. Decisions it produced are ledgered in
+  * docs/SCALE.md §r17+.
+  * Usage: runMain graft.ABench <sfDir> <query> [reps [key valueA valueB]]
   */
 object ABench {
   def main(args: Array[String]): Unit = {

@@ -1,5 +1,7 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import graft.expressions.GraftExtensions
 import graft.operators.{Relational, Scalars, TimeRepair, Dedup, TextAnalysis, Similarity, Multimodal, ScanQueries, Windows, Curation, TemporalJoins, Sketches, Olap, TrainingMix, Pipeline, Indexing, Semantic, Featurize, Chunking, Layout}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
@@ -12,43 +14,17 @@ object SparkEntry {
   /** The engine's session requirements, applied idempotently so the
     * contract holds even when the CALLER owns the session (the driver
     * may smoke-check with its own): nanos-as-long for the events table
-    * and the graft_dot native function ([[graft.expressions.DotProduct]];
-    * normally injected via spark.sql.extensions in [[Sessions]]). */
-  /** Every native function the engine's queries use — ONE table shared
-    * by [[ensure]], so a kernel added to
-    * [[graft.expressions.GraftExtensions]] but forgotten here is caught
-    * by EntrySpec instead of failing only on a caller-owned session
-    * (r10 shipped exactly that bug: `graft_winhash` resolved only on
-    * extension-built sessions, breaking 7 queries on the driver's). */
-  private[graft] val nativeFns: Seq[(String,
-      Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-        org.apache.spark.sql.catalyst.expressions.Expression)] = Seq(
-    "graft_dot" -> (ch => graft.expressions.DotProduct(ch.head, ch(1))),
-    "graft_doti" -> (ch => graft.expressions.DotProductLong(ch.head, ch(1))),
-    "graft_simhash" -> (ch => graft.expressions.SimHashVotes(ch.head, ch(1))),
-    "graft_topk" -> (ch => graft.expressions.TopKByCount(ch.head, ch(1), ch(2))),
-    "graft_pairs" -> (ch => graft.expressions.PackedPairs(ch.head)),
-    "graft_winhash" -> (ch => graft.expressions.WindowHash(ch.head, ch(1))),
-    "graft_winhash_set" -> (ch => graft.expressions.WindowHashSet(ch.head, ch(1))),
-    "graft_bpe_train" -> (ch => graft.expressions.BpeTrain(ch.head, ch(1))),
-    "graft_minhash" -> (ch => graft.expressions.MinHashSig(ch.head, ch(1))),
-    "graft_repstats" -> (ch => graft.expressions.RepStats(ch.head)),
-    "graft_quant" -> (ch => graft.expressions.QuantArray(ch.head, ch(1), ch(2))),
-    "graft_mulge" -> (ch => graft.expressions.MulGe(ch.head, ch(1), ch(2), ch(3))),
-    "graft_semdedup_keep" -> (ch => graft.expressions.SemDedupKeep(ch.head)),
-    "graft_topk_min" -> (ch => graft.expressions.TopKMin(ch.head, ch(1), ch(2))),
-    "graft_set_cap" -> (ch => graft.expressions.CappedSet(ch.head, ch(1))),
-    "graft_mmr" -> (ch => graft.expressions.MmrSelect(ch.head, ch(1), ch(2))),
-    "graft_bigrams" -> (ch => graft.expressions.BigramPairs(ch.head)),
-    "graft_looprun" -> (ch => graft.expressions.LoopRun(ch.head, ch(1))),
-    "graft_inter_sorted" -> (ch => graft.expressions.InterSortedCount(ch.head, ch(1))),
-  )
-
+    * and every native kernel of [[GraftExtensions.kernels]] the session
+    * does not already resolve — normally injected via
+    * spark.sql.extensions in [[Sessions]], so an extension-built session
+    * registers nothing here and logs no "replaced a previously
+    * registered function" WARN per query call. */
   private[graft] def ensure(spark: SparkSession): Unit = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    nativeFns.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
+    val registry = spark.sessionState.functionRegistry
+    GraftExtensions.kernels.foreach { k =>
+      val id = FunctionIdentifier(k.name)
+      if (!registry.functionExists(id)) registry.registerFunction(id, k.info, k.build)
     }
   }
 

@@ -73,87 +73,45 @@ case class DotProduct(left: Expression, right: Expression)
 }
 
 /** Engine extensions, installed with
-  * `spark.sql.extensions=graft.GraftExtensions` (see [[graft.Sessions]]).
+  * `spark.sql.extensions=graft.expressions.GraftExtensions` (see [[graft.Sessions]]).
   * The injection point Spark provides for exactly this: custom
   * expressions/rules/strategies without forking the session builder. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      (children: Seq[Expression]) => DotProduct(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_doti"),
-      new ExpressionInfo(classOf[DotProductLong].getName, "graft_doti"),
-      (children: Seq[Expression]) => DotProductLong(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHashVotes].getName, "graft_simhash"),
-      (children: Seq[Expression]) => SimHashVotes(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_topk"),
-      new ExpressionInfo(classOf[TopKByCount].getName, "graft_topk"),
-      (children: Seq[Expression]) => TopKByCount(children.head, children(1), children(2))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_pairs"),
-      new ExpressionInfo(classOf[PackedPairs].getName, "graft_pairs"),
-      (children: Seq[Expression]) => PackedPairs(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_winhash"),
-      new ExpressionInfo(classOf[WindowHash].getName, "graft_winhash"),
-      (children: Seq[Expression]) => WindowHash(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_winhash_set"),
-      new ExpressionInfo(classOf[WindowHashSet].getName, "graft_winhash_set"),
-      (children: Seq[Expression]) => WindowHashSet(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bpe_train"),
-      new ExpressionInfo(classOf[BpeTrain].getName, "graft_bpe_train"),
-      (children: Seq[Expression]) => BpeTrain(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash"),
-      (children: Seq[Expression]) => MinHashSig(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_repstats"),
-      new ExpressionInfo(classOf[RepStats].getName, "graft_repstats"),
-      (children: Seq[Expression]) => RepStats(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_quant"),
-      new ExpressionInfo(classOf[QuantArray].getName, "graft_quant"),
-      (children: Seq[Expression]) => QuantArray(children.head, children(1), children(2))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_semdedup_keep"),
-      new ExpressionInfo(classOf[SemDedupKeep].getName, "graft_semdedup_keep"),
-      (children: Seq[Expression]) => SemDedupKeep(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_mulge"),
-      new ExpressionInfo(classOf[MulGe].getName, "graft_mulge"),
-      (children: Seq[Expression]) =>
-        MulGe(children.head, children(1), children(2), children(3))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_topk_min"),
-      new ExpressionInfo(classOf[TopKMin].getName, "graft_topk_min"),
-      (children: Seq[Expression]) => TopKMin(children.head, children(1), children(2))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_set_cap"),
-      new ExpressionInfo(classOf[CappedSet].getName, "graft_set_cap"),
-      (children: Seq[Expression]) => CappedSet(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_mmr"),
-      new ExpressionInfo(classOf[MmrSelect].getName, "graft_mmr"),
-      (children: Seq[Expression]) => MmrSelect(children.head, children(1), children(2))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bigrams"),
-      new ExpressionInfo(classOf[BigramPairs].getName, "graft_bigrams"),
-      (children: Seq[Expression]) => BigramPairs(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_looprun"),
-      new ExpressionInfo(classOf[LoopRun].getName, "graft_looprun"),
-      (children: Seq[Expression]) => LoopRun(children.head, children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_inter_sorted"),
-      new ExpressionInfo(classOf[InterSortedCount].getName, "graft_inter_sorted"),
-      (children: Seq[Expression]) => InterSortedCount(children.head, children(1))))
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.kernels.foreach(k =>
+      ext.injectFunction((FunctionIdentifier(k.name), k.info, k.build)))
+}
+
+object GraftExtensions {
+  /** One native kernel: its SQL name, the expression class its
+    * `ExpressionInfo` names, and the builder from argument expressions. */
+  final case class Kernel(
+      name: String, cls: Class[_ <: Expression], build: Seq[Expression] => Expression) {
+    def info: ExpressionInfo = new ExpressionInfo(cls.getName, name)
   }
+
+  /** Every native function the engine's queries use — the ONE table both
+    * the session extension and [[graft.SparkEntry.ensure]] (for a
+    * caller-owned session built without the extension) register. */
+  val kernels: Seq[Kernel] = Seq(
+    Kernel("graft_dot", classOf[DotProduct], ch => DotProduct(ch.head, ch(1))),
+    Kernel("graft_doti", classOf[DotProductLong], ch => DotProductLong(ch.head, ch(1))),
+    Kernel("graft_simhash", classOf[SimHashVotes], ch => SimHashVotes(ch.head, ch(1))),
+    Kernel("graft_topk", classOf[TopKByCount], ch => TopKByCount(ch.head, ch(1), ch(2))),
+    Kernel("graft_pairs", classOf[PackedPairs], ch => PackedPairs(ch.head)),
+    Kernel("graft_winhash", classOf[WindowHash], ch => WindowHash(ch.head, ch(1))),
+    Kernel("graft_winhash_set", classOf[WindowHashSet], ch => WindowHashSet(ch.head, ch(1))),
+    Kernel("graft_bpe_train", classOf[BpeTrain], ch => BpeTrain(ch.head, ch(1))),
+    Kernel("graft_minhash", classOf[MinHashSig], ch => MinHashSig(ch.head, ch(1))),
+    Kernel("graft_repstats", classOf[RepStats], ch => RepStats(ch.head)),
+    Kernel("graft_quant", classOf[QuantArray], ch => QuantArray(ch.head, ch(1), ch(2))),
+    Kernel("graft_semdedup_keep", classOf[SemDedupKeep], ch => SemDedupKeep(ch.head)),
+    Kernel("graft_mulge", classOf[MulGe], ch => MulGe(ch.head, ch(1), ch(2), ch(3))),
+    Kernel("graft_topk_min", classOf[TopKMin], ch => TopKMin(ch.head, ch(1), ch(2))),
+    Kernel("graft_set_cap", classOf[CappedSet], ch => CappedSet(ch.head, ch(1))),
+    Kernel("graft_mmr", classOf[MmrSelect], ch => MmrSelect(ch.head, ch(1), ch(2))),
+    Kernel("graft_bigrams", classOf[BigramPairs], ch => BigramPairs(ch.head)),
+    Kernel("graft_looprun", classOf[LoopRun], ch => LoopRun(ch.head, ch(1))),
+    Kernel("graft_inter_sorted", classOf[InterSortedCount], ch => InterSortedCount(ch.head, ch(1))),
+  )
 }

@@ -737,6 +737,23 @@ object Dedup {
 
   private val MaxCcIters = 50
 
+  /** Whether lineage cuts are reliable (see [[cut]]). */
+  private def reliableCuts(spark: SparkSession): Boolean =
+    spark.conf.get("spark.graft.reliableCheckpoints", "false").toBoolean
+
+  /** The one lineage cut every operator takes. It defaults to
+    * `localCheckpoint()`: executor-local blocks, right for the
+    * single-JVM harness but fragile on a real cluster, where losing one
+    * executor mid-campaign loses every relation cut on it. Setting
+    * `spark.graft.reliableCheckpoints=true` (plus the standard
+    * `sc.setCheckpointDir` to a fault-tolerant FS) swaps in reliable
+    * `checkpoint()`: the cut relation is then replayable from
+    * distributed storage at the cost of one write per cut — the right
+    * trade for a 100 TB campaign whose jobs run longer than the
+    * executor MTBF. */
+  private[operators] def cut(df: DataFrame): DataFrame =
+    if (reliableCuts(df.sparkSession)) df.checkpoint() else df.localCheckpoint()
+
   /** Cluster assignment: every doc in the near-dup corpus gets
     * `cluster_id` = min doc_id of its connected component in the
     * MinHash candidate graph (singletons cluster with themselves) —
@@ -748,35 +765,26 @@ object Dedup {
     * (edges join + map-side-combinable min aggregate), until a
     * fixpoint. Iterations ≤ component diameter (near-dup clusters are
     * shallow: re-crawled copies chain through their source doc), each
-    * one shuffle of the label relation; the per-iteration `count` of
-    * changed labels is the standard driver-side convergence check every
-    * iterative-graph framework does. The min-label fixpoint is unique,
-    * so the result is independent of iteration schedule — which is what
-    * lets a recursive-CTE oracle (transitive closure + min) check an
-    * iterative distributed algorithm. Labels are re-cached and lineage
-    * is cut each round (localCheckpoint) so deep graphs don't grow an
-    * unbounded plan.
-    */
-  /** The CC core, shared by `near_dup_cluster`, `dedup_resolve`, and the
+    * one shuffle of the label relation; the per-iteration sum of
+    * labels is the driver-side convergence check every iterative-graph
+    * framework does. The min-label fixpoint is unique, so the result
+    * is independent of iteration schedule — which is what lets a
+    * recursive-CTE oracle (transitive closure + min) check an
+    * iterative distributed algorithm. Each round's labels go through
+    * one [[cut]] so deep graphs don't grow an unbounded plan.
+    *
+    * The CC core, shared by `near_dup_cluster`, `dedup_resolve`, and the
     * composed `corpus_pipeline` (each computes labels exactly ONCE):
     * (doc_id, cluster_id), unordered. Input: (doc_id, text [, ...]).
     *
-    * Checkpoint durability: each round's lineage cut defaults to
-    * `localCheckpoint()` — executor-local blocks, right for the
-    * single-JVM harness but fragile on a real cluster, where losing one
-    * executor mid-campaign kills the whole CC run. Setting
-    * `spark.graft.reliableCheckpoints=true` (plus the standard
-    * `sc.setCheckpointDir` to a fault-tolerant FS) swaps in reliable
-    * `checkpoint()`: rounds are then replayable from distributed
-    * storage at the cost of a write per iteration — the right trade for
-    * a 100 TB campaign whose CC loop runs longer than the executor MTBF.
+    * Checkpoint durability: the pair relation and every round's labels
+    * go through [[cut]], so `spark.graft.reliableCheckpoints=true`
+    * makes the whole loop replayable from the checkpoint dir, at the
+    * cost of a write per round (and a separate convergence-sum job).
     */
   private[operators] def clusterLabelsOf(
       docs: DataFrame, pairsIn: Option[DataFrame] = None): DataFrame = {
-    val reliable = docs.sparkSession.conf
-      .get("spark.graft.reliableCheckpoints", "false").toBoolean
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
+    val reliable = reliableCuts(docs.sparkSession)
     // Fused cut+sum for the label rounds (r21): the convergence sum
     // rides the SAME job that materializes the round's checkpoint (an
     // Observation on the pre-cut plan — localCheckpoint's eager action
@@ -794,16 +802,11 @@ object Dedup {
         .getDecimal(0)
       if (s == null) java.math.BigDecimal.ZERO else s
     }
-    // measurement seam (ABench axis graft.cc.fusedsum=true/false):
-    // false = the r20 two-job shape (cut, then a separate labelSum scan)
-    val fused = docs.sparkSession.conf
-      .get("graft.cc.fusedsum", "true").toBoolean
     def cutWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) =
-      if (reliable || !fused) { val c = cut(df); (c, labelSum(c)) }
+      if (reliable) { val c = cut(df); (c, labelSum(c)) }
       else {
         val obs = new org.apache.spark.sql.Observation()
-        val c = df.observe(obs, sum(col("label").cast("decimal(38,0)")).as("s"))
-          .localCheckpoint()
+        val c = cut(df.observe(obs, sum(col("label").cast("decimal(38,0)")).as("s")))
         val s = obs.get("s").asInstanceOf[java.math.BigDecimal]
         (c, if (s == null) java.math.BigDecimal.ZERO else s)
       }
@@ -817,7 +820,7 @@ object Dedup {
     val pairs = cut(pairsIn.getOrElse(minhashPairsOf(docs)))
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-    var (labels, labels0Sum) = cutWithSum(docs.select(col("doc_id"))
+    var (labels, prevSum) = cutWithSum(docs.select(col("doc_id"))
       .withColumn("label", col("doc_id")))
     var iter = 0
     var converged = false
@@ -831,43 +834,15 @@ object Dedup {
     // abort the campaign); exactness is what makes equality ⟺ fixpoint.
     // sum() over zero rows is NULL — coalesce to 0 so an empty relation
     // converges on the first check instead of NPEing in compareTo
-    //
-    // ROUNDS PER CUT (r22, measurement seam graft.cc.roundsPerCut): the
-    // loop's wall time is dominated by per-job constants (each round is
-    // a small shuffle at metadata scale once the corpus collapses to
-    // labels), so k propagation rounds are chained into ONE
-    // checkpoint/convergence-check block — k joins+aggs of lineage per
-    // cut instead of 1, halving the job count at k=2. EXACTNESS: labels
-    // are non-increasing and the per-node min is idempotent at the
-    // fixpoint, so Σ label is equal across a k-round block iff NO round
-    // inside it changed anything — block-granular sum equality detects
-    // exactly the same unique fixpoint, at most k−1 no-op rounds late.
-    val roundsPerCut = {
-      val v = docs.sparkSession.conf.get("graft.cc.roundsPerCut", "1")
-      val k = try v.toInt catch {
-        case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"graft.cc.roundsPerCut must be a positive int, got '$v'")
-      }
-      require(k >= 1, s"graft.cc.roundsPerCut must be >= 1, got $k")
-      k
-    }
-    var prevSum = labels0Sum
     while (!converged && iter < MaxCcIters) {
-      var cur = labels
-      var r = 0
-      while (r < roundsPerCut && iter + r < MaxCcIters) {
-        val msgs = edges.join(cur.withColumnRenamed("doc_id", "src"), "src")
-          .select(col("dst").as("doc_id"), col("label"))
-        cur = cur.unionByName(msgs)
-          .groupBy("doc_id").agg(min(col("label")).as("label"))
-        r += 1
-      }
-      val (next, nextSum) = cutWithSum(cur)
+      val msgs = edges.join(labels.withColumnRenamed("doc_id", "src"), "src")
+        .select(col("dst").as("doc_id"), col("label"))
+      val (next, nextSum) = cutWithSum(labels.unionByName(msgs)
+        .groupBy("doc_id").agg(min(col("label")).as("label")))
       labels = next
       converged = nextSum.compareTo(prevSum) == 0
       prevSum = nextSum
-      iter += r
+      iter += 1
     }
     require(converged, s"label propagation did not converge in $MaxCcIters iterations")
     labels.select(col("doc_id"), col("label").as("cluster_id"))
@@ -1193,16 +1168,15 @@ object Dedup {
     // dropping the sh ckpt 2.3->3.0 s, min-of-N). A real 100 TB
     // campaign persists this relation as its shingle table first
     // (reliable storage, same role).
-    val sh = shingleSetArrays(docs)
+    val sh = cut(shingleSetArrays(docs)
       .select(col("doc_id"), explode(col("ps")).as("p"))
-      .select(col("doc_id"), col("p.h1").as("sh"), col("p.h2").as("sh2"))
-      .localCheckpoint()
+      .select(col("doc_id"), col("p.h1").as("sh"), col("p.h2").as("sh2")))
     val dfBySh = sh.groupBy("sh", "sh2").agg(count(lit(1)).as("df"))
     // over-cap keys form a TINY list (only boilerplate shingles); the
     // planner broadcasts the anti-join from stats — df never rides
     // along every shingle row
     val blocked = dfBySh.filter(col("df") > DfCap).select("sh", "sh2")
-    val kept = sh.join(blocked, Seq("sh", "sh2"), "left_anti").localCheckpoint()
+    val kept = cut(sh.join(blocked, Seq("sh", "sh2"), "left_anti"))
     // one row per doc — broadcast-joined back onto the shingle rows
     val sizes = kept.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     // (doc_id, n_sh) packed into one non-negative BIGINT: the per-shingle
@@ -1664,7 +1638,7 @@ object Dedup {
     // profile showed a 36 s-CPU stage recomputing it. Cutting pairs
     // once makes every round read materialized blocks: interleaved
     // min-of-5 at sf0.1, 3.96 → 2.17 s (median 4.12 → 2.38).
-    val pairs = minhashPairs(spark, dir).localCheckpoint()
+    val pairs = cut(minhashPairs(spark, dir))
     val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionByName(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .persist()
@@ -1978,7 +1952,7 @@ object Dedup {
     // edge, the degree relation) and the before-plan embedded the
     // minhash chain 14× — the dupGraphPagerank pathology at higher
     // multiplicity; see the measurement note there.
-    val e = minhashPairs(spark, dir).localCheckpoint()
+    val e = cut(minhashPairs(spark, dir))
     val wedges = e.select(col("doc_a").as("a"), col("doc_b").as("b"))
       .join(e.select(col("doc_a").as("a"), col("doc_b").as("c")), "a")
       .filter(col("b") < col("c"))
@@ -2239,7 +2213,7 @@ object Dedup {
     // scan+winhash subtrees (the r21 "share the scan/signature layers"
     // item); the checkpointed base is what a campaign's shingle stage
     // table holds.
-    val base = shingleSetArrays(withNearDupes(spark, dir)).localCheckpoint()
+    val base = cut(shingleSetArrays(withNearDupes(spark, dir)))
     val sig = base
       .withColumn("sg", expr(s"graft_minhash(transform(ps, x -> x.h1), $NumHashes)"))
       .select(col("doc_id") +: (0 until NumHashes).map(s =>

@@ -150,11 +150,10 @@ object Layout {
     // contributed nothing to this composition — output-identical
     // (assignedOf's windows are deterministic in (z, doc_id) regardless
     // of input order), two jobs and one exchange fewer.
-    manifestOf(Pipeline.corpusPipelineCore(spark, dir)
+    manifestOf(Dedup.cut(Pipeline.corpusPipelineCore(spark, dir)
       .select(col("doc_id"),
         least(expr("n_tokens div 4"), lit((1 << ZBits) - 1)).as("len_b"),
-        expr(s"pmod(${Dedup.h60Sql("lang")}, ${1 << ZBits})").as("lang_b"))
-      .localCheckpoint())
+        expr(s"pmod(${Dedup.h60Sql("lang")}, ${1 << ZBits})").as("lang_b"))))
   // NOTE: the pipeline SQL is concatenated OUTSIDE any stripMargin —
   // it contains continuation lines that start with '||' (string
   // concat), which an enclosing stripMargin would truncate to '|'.

@@ -892,6 +892,20 @@ object TrainingMix {
   // X68 mix_pipeline — the composed mix-side campaign with funnel audit
   // ---------------------------------------------------------------------
 
+  /** The domain-gate stage over a (doc_id, source, lang, text, n_chars,
+    * n_tok) relation: per-source corpus stats as unbounded windows,
+    * then the row-local verdict `g1`. A NULL source is its own window
+    * partition, so its rows are kept and gated together like any other
+    * source's. */
+  private[operators] def gateStage(d: DataFrame): DataFrame = {
+    val srcW = Window.partitionBy("source")
+    d.withColumn("src_docs", count(lit(1)).over(srcW))
+      .withColumn("src_short", sum(
+        when(col("n_chars") < Curation.ShortChars, 1L).otherwise(0L)).over(srcW))
+      .withColumn("g1",
+        col("src_short") * Curation.GateDen <= col("src_docs") * Curation.GateNum)
+  }
+
   /** The composed MIX-SIDE campaign — the three curation/mix stages a
     * data-mix team runs in sequence, composed end-to-end with the
     * funnel report every stage review meeting actually looks at:
@@ -939,52 +953,7 @@ object TrainingMix {
     * exactly the gram relation being scored, so every probed bucket
     * exists by construction); [[dsirScore]] keeps the left join for
     * callers scoring foreign docs against a frozen model. */
-  /** Strict boolean conf (default true): `true`/`false` case-insensitive
-    * only — anything else fails with a message naming the key and the
-    * accepted values instead of `_.toBoolean`'s bare
-    * IllegalArgumentException mid-plan-construction (r20 ADVICE). */
-  private def boolConf(spark: SparkSession, key: String): Boolean =
-    spark.conf.getOption(key) match {
-      case None => true
-      case Some(v) if v.equalsIgnoreCase("true") => true
-      case Some(v) if v.equalsIgnoreCase("false") => false
-      case Some(v) => throw new IllegalArgumentException(
-        s"conf $key must be 'true' or 'false', got '$v'")
-    }
-
-  /** The domain-gate stage over a (doc_id, source, lang, text, n_chars,
-    * n_tok) relation — factored out so the seam-parity spec can feed
-    * constructed corpora (incl. a NULL source). Both spellings keep
-    * null-source rows: Window.partitionBy groups nulls into their own
-    * partition, and the join spelling matches it with a NULL-SAFE
-    * equi-join (`<=>`) — a plain inner join would silently drop
-    * null-key rows and fork the two "pure spelling" variants
-    * (r20 ADVICE). */
-  private[operators] def gateStage(d: DataFrame, winStats: Boolean): DataFrame =
-    if (winStats) d
-      .withColumn("src_docs", count(lit(1)).over(Window.partitionBy("source")))
-      .withColumn("src_short", sum(
-        when(col("n_chars") < Curation.ShortChars, 1L).otherwise(0L))
-        .over(Window.partitionBy("source")))
-      .withColumn("g1",
-        col("src_short") * Curation.GateDen <= col("src_docs") * Curation.GateNum)
-    else {
-      val stats = d.groupBy("source").agg(
-        count(lit(1)).as("src_docs"),
-        sum(when(col("n_chars") < Curation.ShortChars, 1L).otherwise(0L)).as("src_short"))
-        .withColumnRenamed("source", "gate_source")
-      d.join(stats, d("source") <=> stats("gate_source"))
-        .drop("gate_source")
-        .withColumn("g1",
-          col("src_short") * Curation.GateDen <= col("src_docs") * Curation.GateNum)
-    }
-
   val mixPipeline: Q = (spark, dir) => {
-    // measurement seam for the two stage materializations (ABench axis
-    // graft.mix.persist=true/false — the r16 decision re-measured r20
-    // after the funnel respelling; default ON, the adopted spelling)
-    val usePersist = boolConf(spark, "graft.mix.persist")
-    def staged(df: DataFrame): DataFrame = if (usePersist) df.persist() else df
     val d = Tables.documents(spark, dir)
       .withColumn("n_tok", size(split(col("text"), " ")).cast("long"))
     // gate stats AS WINDOWS on the same source-partitioned exchange the
@@ -997,22 +966,17 @@ object TrainingMix {
     // row-locally, then the budget/spend windows stack on the SAME
     // exchange (Spark re-sorts within partitions for the ordered
     // frame — no second shuffle).
-    val srcW = Window.partitionBy("source")
     val spendW = Window.partitionBy("source")
       .orderBy(col("n_tok").desc, col("doc_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val gatedTok = when(col("g1"), col("n_tok")).otherwise(lit(0L))
-    // seam: the r16 groupBy+broadcast-join stats spelling, kept for the
-    // interleaved comparison (graft.mix.winstats=false)
-    val winStats = boolConf(spark, "graft.mix.winstats")
-    val gated = gateStage(d, winStats)
-    val bRaw = gated
+    val b = gateStage(d)
       .withColumn("budget",
         expr(s"(sum(CASE WHEN g1 THEN n_tok ELSE 0 END) OVER (PARTITION BY source)" +
           s" * ${Curation.BudgetNum}) div ${Curation.BudgetDen}"))
       .withColumn("spent", coalesce(sum(gatedTok).over(spendW), lit(0L)))
       .withColumn("keep2", col("g1") && col("spent") < col("budget"))
-    val b = staged(bRaw)
+      .persist()
     val survivors = b.filter(col("keep2"))
     // stage 3 funnel numbers WITHOUT a doc-keyed verdict join back onto
     // the corpus: `source` and `n_tok` ride the scoring aggregate's key
@@ -1022,11 +986,11 @@ object TrainingMix {
     // domain-cardinality relations joined at domain size. The previous
     // spelling shuffled the corpus AND the verdicts by doc_id just to
     // recover columns the aggregate could have carried.
-    val gramsRaw = survivors.withColumn("words", split(col("text"), " "))
+    val grams = survivors.withColumn("words", split(col("text"), " "))
       .filter(size(col("words")) >= 2)
       .select(col("doc_id"), col("lang"), col("source"), col("n_tok"),
         explode(expr(s"transform(graft_winhash(words, 2), h -> h % $DsirBuckets)")).as("b"))
-    val grams = staged(gramsRaw)
+      .persist()
     val model = grams.groupBy("b")
       .agg(count(lit(1)).as("r"),
         sum(when(col("lang") === DsirTargetLang, 1L).otherwise(0L)).as("t"))

@@ -40,4 +40,34 @@ object TestSpark {
       (out, seen.asScala.toSeq.filterNot(_ == marker))
     } finally sc.removeSparkListener(listener)
   }
+
+  /** The messages of the WARN events the logger named `logger` emits
+    * while `body` runs, seen through a log4j2 appender on the root
+    * logger (logging is synchronous, so every event has arrived when
+    * `body` returns). */
+  def warnings[T](logger: String)(body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    spark // Spark configures logging on start-up; attach after it
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender(s"warnings ${java.util.UUID.randomUUID()}",
+        null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN && e.getLoggerName == logger)
+          seen.add(e.getMessage.getFormattedMessage)
+    }
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    app.start()
+    root.addAppender(app, Level.WARN, null)
+    ctx.updateLoggers()
+    try (body, seen.asScala.toSeq)
+    finally {
+      root.removeAppender(app.getName)
+      ctx.updateLoggers()
+      app.stop()
+    }
+  }
 }

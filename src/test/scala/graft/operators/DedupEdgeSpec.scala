@@ -45,40 +45,4 @@ class DedupEdgeSpec extends AnyFunSuite {
     val out = Dedup.clusterLabelsOf(one).collect()
     assert(out.map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((42L, 42L)))
   }
-
-  test("graft.cc.roundsPerCut=1 and 2 yield identical labels") {
-    // the unique min-label fixpoint is schedule-independent; the
-    // block-granular convergence check (r22) may only run extra no-op
-    // rounds, never change the result — pinned on a real corpus
-    val docs = Dedup.withNearDupes(spark, "/root/testdata/sf0.001")
-    def labels() = Dedup.clusterLabelsOf(docs).orderBy("doc_id")
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val key = "graft.cc.roundsPerCut"
-    try {
-      spark.conf.set(key, "1")
-      val one = labels()
-      spark.conf.set(key, "2")
-      val two = labels()
-      assert(one == two, "roundsPerCut must not change the fixpoint labels")
-      assert(one.nonEmpty)
-    } finally spark.conf.unset(key)
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    ()
-  }
-
-  test("graft.cc.roundsPerCut rejects non-int and non-positive values loudly") {
-    import spark.implicits._
-    val one = Seq((1L, "a b c d e")).toDF("doc_id", "text")
-    val key = "graft.cc.roundsPerCut"
-    try {
-      spark.conf.set(key, "soon")
-      val e = intercept[IllegalArgumentException](Dedup.clusterLabelsOf(one).collect())
-      assert(e.getMessage.contains(key))
-      spark.conf.set(key, "0")
-      val e0 = intercept[IllegalArgumentException](Dedup.clusterLabelsOf(one).collect())
-      assert(e0.getMessage.contains(key))
-    } finally spark.conf.unset(key)
-    ()
-  }
 }

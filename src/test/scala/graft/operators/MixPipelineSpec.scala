@@ -59,10 +59,10 @@ class MixPipelineSpec extends AnyFunSuite {
     }
   }
 
-  test("gate seam keeps NULL-source rows identically in both spellings (r20 ADVICE)") {
-    // the window spelling groups nulls into their own partition; the
-    // join spelling must match it with a null-safe join — a plain inner
-    // join would drop the null-key rows and silently fork the variants
+  test("window gate keeps NULL-source rows like source a") {
+    // Window.partitionBy groups nulls into their own partition, so the
+    // null source's two rows must be kept and get exactly the verdict
+    // of source "a", whose two rows are the same (r20 ADVICE)
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(
@@ -74,50 +74,10 @@ class MixPipelineSpec extends AnyFunSuite {
       Row(3L, null, "en", 10L, 3L), Row(4L, null, "en", 500L, 90L))
     val d = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 2), schema)
-    def verdicts(ws: Boolean): Map[Long, Boolean] =
-      TrainingMix.gateStage(d, ws).select("doc_id", "g1").collect()
-        .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    val win = verdicts(ws = true)
-    val join = verdicts(ws = false)
-    assert(win.keySet == Set(1L, 2L, 3L, 4L),
-      s"window spelling lost rows: ${win.keySet}")
-    assert(join == win, s"join spelling diverged on null source: $join vs $win")
-  }
-
-  test("seam confs reject non-boolean values with a pointed message (r20 ADVICE)") {
-    spark.conf.set("graft.mix.persist", "1")
-    try {
-      val e = intercept[IllegalArgumentException] {
-        SparkEntry.queries("mix_pipeline")(spark, Dir)
-      }
-      assert(e.getMessage.contains("graft.mix.persist"),
-        s"error message must name the conf key: ${e.getMessage}")
-    } finally {
-      spark.conf.unset("graft.mix.persist")
-      ()
-    }
-  }
-
-  test("measurement seams are pure spellings: all four (winstats, persist) variants agree") {
-    // graft.mix.winstats (r20 window-stats vs r16 join-stats) and
-    // graft.mix.persist (stage materialization on/off) exist ONLY for
-    // interleaved measurement — every combination must produce the
-    // byte-identical funnel, or the seam has rotted into a semantics
-    // fork
-    val adopted = funnel.sortBy(r => (r._1, r._2)).toSeq
-    try {
-      for (ws <- Seq("true", "false"); p <- Seq("true", "false")) {
-        spark.conf.set("graft.mix.winstats", ws)
-        spark.conf.set("graft.mix.persist", p)
-        spark.catalog.clearCache()
-        val got = funnel.sortBy(r => (r._1, r._2)).toSeq
-        assert(got == adopted, s"seam (winstats=$ws, persist=$p) diverged")
-      }
-    } finally {
-      spark.conf.unset("graft.mix.winstats")
-      spark.conf.unset("graft.mix.persist")
-      spark.catalog.clearCache()
-      ()
-    }
+    val g1 = TrainingMix.gateStage(d).select("doc_id", "g1").collect()
+      .map(r => r.getLong(0) -> r.getBoolean(1)).toMap
+    assert(g1.keySet == Set(1L, 2L, 3L, 4L), s"window gate lost rows: ${g1.keySet}")
+    assert(g1(3L) == g1(1L) && g1(4L) == g1(2L),
+      s"the null source was gated unlike the identical source a: $g1")
   }
 }
