@@ -22,8 +22,7 @@ object ABench {
       val t0 = System.nanoTime()
       fn(spark, dir).write.format("noop").mode("overwrite").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      Sessions.isolate(spark)
       dt
     }
     // axis: default = the adopted coalesce floor vs Spark's default;

@@ -48,12 +48,7 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           Double.PositiveInfinity
         }
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      // defensive: trained-model artifacts are campaign-only (the flag
-      // is off in this session) but an isolated run must never ride a
-      // previous run's training no matter what the conf says
-      Models.invalidate(spark)
+      Sessions.isolate(spark)
       System.gc() // don't charge the next run for this run's garbage
       dt
     }

@@ -65,9 +65,7 @@ object CampaignBench {
       catch { case scala.util.control.NonFatal(_) => () })
 
     def wipe(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      Models.invalidate(spark)
+      Sessions.isolate(spark)
       System.gc()
     }
     def runOne(name: String): Double = {

@@ -85,8 +85,8 @@ object EmitScanOracles {
     val outDir = Paths.get(args.headOption.getOrElse("src/main/resources/graft/oracles"))
     Files.createDirectories(outDir)
     val spark = Sessions.get("graft-emit-scan-oracles")
-    graft.operators.ScanQueries.queries.foreach { case (name, fn) =>
-      val sql = render(name, fn(spark, ""))
+    graft.operators.ScanQueries.queries.foreach { case (name, q) =>
+      val sql = render(name, q.run(spark, ""))
       Files.writeString(outDir.resolve(s"$name.sql"), sql)
       println(s"[emit] $name -> $name.sql")
     }

@@ -39,8 +39,7 @@ object Profile {
       val fn = SparkEntry.queries(n)
       (1 until Reps).foreach { _ =>
         fn(spark, dir).write.format("noop").mode("overwrite").save()
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+        Sessions.isolate(spark)
       }
       drain()
       stages.synchronized(stages.clear()); jobs.set(0)
@@ -51,8 +50,7 @@ object Profile {
       val snap = stages.synchronized(stages.toVector)
       println(f"===== $n%s: $dt%.3f s, ${jobs.get()}%d jobs, ${snap.size}%d stages =====")
       snap.foreach(s => println(f"  ${s.wallMs}%6d ms wall ${s.runMs}%6d ms run ${s.tasks}%4d tasks  ${s.name}%s"))
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      Sessions.isolate(spark)
     }
     spark.stop()
   }

@@ -76,6 +76,17 @@ object Sessions {
     spark
   }
 
+  /** Drops what one query run leaves in the session, so the next run
+    * pays its own full cost: cached relations, persisted RDDs (which
+    * cover the localCheckpoint blocks `clearCache` misses) and trained
+    * model artifacts — campaign-only while [[Models.Flag]] is off, but a
+    * run must never ride an earlier run's training whatever the conf. */
+  private[graft] def isolate(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    Models.invalidate(spark)
+  }
+
   /** Per-run surfacing of the engine's `observe(...)` tripwire metrics
     * (`graft_*` observation nodes — candidate-pair volumes in the
     * dedup family): every query execution that evaluates one logs it

@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import graft.expressions.GraftExtensions
-import graft.operators.{Relational, Scalars, TimeRepair, Dedup, TextAnalysis, Similarity, Multimodal, ScanQueries, Windows, Curation, TemporalJoins, Sketches, Olap, TrainingMix, Pipeline, Indexing, Semantic, Featurize, Chunking, Layout}
+import graft.operators.{Query, Relational, Scalars, TimeRepair, Dedup, TextAnalysis, Similarity, Multimodal, ScanQueries, Windows, Curation, TemporalJoins, Sketches, Olap, TrainingMix, Pipeline, Indexing, Semantic, Featurize, Chunking, Layout}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -36,23 +36,31 @@ object SparkEntry {
     Relational.argmaxPerGroup(spark, "/root/testdata/sf0.001")
   }
 
+  /** Merges module maps into one registry; a name declared in two
+    * modules is an error, not a silently dropped query. */
+  private[graft] def registry(modules: Seq[Map[String, Query]]): Map[String, Query] = {
+    val dups = modules.flatMap(_.keys).groupBy(identity).collect { case (k, ks) if ks.size > 1 => k }
+    require(dups.isEmpty,
+      s"query names declared in more than one module: ${dups.toSeq.sorted.mkString(", ")}")
+    modules.flatten.toMap
+  }
+
+  /** Every operator module, once; each declares a query as one entry,
+    * body and oracle together. */
+  private lazy val all: Map[String, Query] = registry(Seq(
+    Relational.queries, Scalars.queries, TimeRepair.queries, Dedup.queries,
+    TextAnalysis.queries, Similarity.queries, Multimodal.queries, ScanQueries.queries,
+    Windows.queries, Curation.queries, TemporalJoins.queries, Sketches.queries,
+    Olap.queries, TrainingMix.queries, Pipeline.queries, Indexing.queries,
+    Semantic.queries, Featurize.queries, Chunking.queries, Layout.queries))
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    (Relational.queries ++ Scalars.queries ++ TimeRepair.queries ++
-      Dedup.queries ++ TextAnalysis.queries ++ Similarity.queries ++
-      Multimodal.queries ++ ScanQueries.queries ++ Windows.queries ++
-      Curation.queries ++ TemporalJoins.queries ++ Sketches.queries ++ Olap.queries ++
-      TrainingMix.queries ++ Pipeline.queries ++ Indexing.queries ++ Semantic.queries ++ Featurize.queries ++ Chunking.queries ++ Layout.queries)
-      .map { case (k, f) =>
-        k -> ((s: SparkSession, d: String) => { ensure(s); f(s, d) })
-      }
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    all.map { case (k, q) =>
+      k -> ((s: SparkSession, d: String) => { ensure(s); q.run(s, d) })
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    Relational.oracles ++ Scalars.oracles ++ TimeRepair.oracles ++
-      Dedup.oracles ++ TextAnalysis.oracles ++ Similarity.oracles ++
-      Multimodal.oracles ++ ScanQueries.oracles ++ Windows.oracles ++
-      Curation.oracles ++ TemporalJoins.oracles ++ Sketches.oracles ++ Olap.oracles ++
-      TrainingMix.oracles ++ Pipeline.oracles ++ Indexing.oracles ++ Semantic.oracles ++ Featurize.oracles ++ Chunking.oracles ++ Layout.oracles
+    * the same parquet tables. */
+  lazy val oracleSql: Map[String, String] = all.map { case (k, q) => k -> q.oracle }
 }

@@ -167,7 +167,7 @@ object Tables {
     * query reads the stage instead of re-deriving the corpus pass.
     *
     * If a harness evicted the cache between queries
-    * (`spark.catalog.clearCache()` — both Bench and Verify do), the
+    * ([[Sessions.isolate]] — every harness main does), the
     * relation is RE-persisted on next access: consumers always read one
     * materialization per post-eviction epoch, and a bench run that
     * wiped storage honestly re-pays the build it wiped.

@@ -1,5 +1,6 @@
 package graft
-import java.nio.file.{Files, Paths}
+import com.fasterxml.jackson.databind.{ObjectMapper, SerializationFeature}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -32,24 +33,11 @@ object Verify {
       // Same hygiene as Bench: queries that persist intermediates
       // (corpus_pipeline's three stage caches, signature relations) must
       // not accumulate block-manager storage across an 88-query run.
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      Sessions.isolate(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // sorted keys, so two dumps of one registry are byte-identical
+    new ObjectMapper().enable(SerializationFeature.ORDER_MAP_ENTRIES_BY_KEYS)
+      .writeValue(new java.io.File(s"$outDir/oracle_sql.json"), SparkEntry.oracleSql.asJava)
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.Dedup.h60Duck
@@ -14,8 +13,6 @@ import graft.operators.Dedup.h60Duck
   * corpus incrementally.
   */
 object Chunking {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Fixed chunking: window of [[ChunkSize]] tokens every [[Stride]]
     * (overlap = ChunkSize − Stride). */
   val ChunkSize = 64
@@ -198,14 +195,9 @@ object Chunking {
        |       CAST((n - 1) * count(*) * $PrefixK AS BIGINT) AS cacheable_tokens
        |FROM grp GROUP BY 1 ORDER BY 1""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "prefix_cache_report" -> prefixCacheReport,
-    "fixed_chunks" -> fixedChunks,
-    "cdc_chunks" -> cdcChunks,
-  )
-  val oracles: Map[String, String] = Map(
-    "prefix_cache_report" -> prefixCacheReportSql,
-    "fixed_chunks" -> fixedChunksSql,
-    "cdc_chunks" -> cdcChunksSql,
+  val queries: Map[String, Query] = Map(
+    "prefix_cache_report" -> Query(prefixCacheReport, prefixCacheReportSql),
+    "fixed_chunks" -> Query(fixedChunks, fixedChunksSql),
+    "cdc_chunks" -> Query(cdcChunks, cdcChunksSql),
   )
 }

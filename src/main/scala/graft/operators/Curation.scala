@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -12,8 +12,6 @@ import graft.operators.Dedup.{h60, h60Duck, h60Sql}
   * training mix in a large-scale data pipeline.
   */
 object Curation {
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------------
   // 1. benchmark_contamination — test-set n-gram overlap detection
   // ---------------------------------------------------------------------
@@ -1454,48 +1452,26 @@ object Curation {
        |FROM corpus c LEFT JOIN mx ON mx.doc_id = c.doc_id
        |ORDER BY c.doc_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "loop_run_gate" -> loopRunGate,
-    "percentile_rank_norm" -> percentileRankNorm,
-    "k_anonymity_audit" -> kAnonymityAudit,
-    "lang_source_lift" -> langSourceLift,
-    "dataset_card_report" -> datasetCardReport,
-    "quality_calibration_bins" -> qualityCalibrationBins,
-    "filter_ablation_matrix" -> filterAblationMatrix,
-    "weighted_sample_wor" -> weightedSampleWor,
-    "source_overlap_matrix" -> sourceOverlapMatrix,
-    "char_diversity_gate" -> charDiversityGate,
-    "domain_token_gini" -> domainTokenGini,
-    "benchmark_contamination" -> benchmarkContamination,
-    "stratified_sample" -> stratifiedSample,
-    "repetition_score" -> repetitionScore,
-    "pii_redact" -> piiRedact,
-    "reservoir_sample" -> reservoirSample,
-    "length_outliers" -> lengthOutliers,
-    "source_quality_gate" -> sourceQualityGate,
-    "source_token_budget" -> sourceTokenBudget,
-    "source_unigram_drift" -> sourceUnigramDrift,
-  )
-  val oracles: Map[String, String] = Map(
-    "loop_run_gate" -> loopRunGateSql,
-    "percentile_rank_norm" -> percentileRankNormSql,
-    "k_anonymity_audit" -> kAnonymityAuditSql,
-    "lang_source_lift" -> langSourceLiftSql,
-    "dataset_card_report" -> datasetCardReportSql,
-    "quality_calibration_bins" -> qualityCalibrationBinsSql,
-    "filter_ablation_matrix" -> filterAblationMatrixSql,
-    "weighted_sample_wor" -> weightedSampleWorSql,
-    "source_overlap_matrix" -> sourceOverlapMatrixSql,
-    "char_diversity_gate" -> charDiversityGateSql,
-    "domain_token_gini" -> domainTokenGiniSql,
-    "source_token_budget" -> sourceTokenBudgetSql,
-    "source_unigram_drift" -> sourceUnigramDriftSql,
-    "benchmark_contamination" -> benchmarkContaminationSql,
-    "stratified_sample" -> stratifiedSampleSql,
-    "repetition_score" -> repetitionScoreSql,
-    "pii_redact" -> piiRedactSql,
-    "reservoir_sample" -> reservoirSampleSql,
-    "length_outliers" -> lengthOutliersSql,
-    "source_quality_gate" -> sourceQualityGateSql,
+  val queries: Map[String, Query] = Map(
+    "loop_run_gate" -> Query(loopRunGate, loopRunGateSql),
+    "percentile_rank_norm" -> Query(percentileRankNorm, percentileRankNormSql),
+    "k_anonymity_audit" -> Query(kAnonymityAudit, kAnonymityAuditSql),
+    "lang_source_lift" -> Query(langSourceLift, langSourceLiftSql),
+    "dataset_card_report" -> Query(datasetCardReport, datasetCardReportSql),
+    "quality_calibration_bins" -> Query(qualityCalibrationBins, qualityCalibrationBinsSql),
+    "filter_ablation_matrix" -> Query(filterAblationMatrix, filterAblationMatrixSql),
+    "weighted_sample_wor" -> Query(weightedSampleWor, weightedSampleWorSql),
+    "source_overlap_matrix" -> Query(sourceOverlapMatrix, sourceOverlapMatrixSql),
+    "char_diversity_gate" -> Query(charDiversityGate, charDiversityGateSql),
+    "domain_token_gini" -> Query(domainTokenGini, domainTokenGiniSql),
+    "benchmark_contamination" -> Query(benchmarkContamination, benchmarkContaminationSql),
+    "stratified_sample" -> Query(stratifiedSample, stratifiedSampleSql),
+    "repetition_score" -> Query(repetitionScore, repetitionScoreSql),
+    "pii_redact" -> Query(piiRedact, piiRedactSql),
+    "reservoir_sample" -> Query(reservoirSample, reservoirSampleSql),
+    "length_outliers" -> Query(lengthOutliers, lengthOutliersSql),
+    "source_quality_gate" -> Query(sourceQualityGate, sourceQualityGateSql),
+    "source_token_budget" -> Query(sourceTokenBudget, sourceTokenBudgetSql),
+    "source_unigram_drift" -> Query(sourceUnigramDrift, sourceUnigramDriftSql),
   )
 }

@@ -27,8 +27,6 @@ import graft.Tables
   * operator's positive path provably exercised — no vacuous green.
   */
 object Dedup {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Portable 60-bit hash: first 15 hex digits of md5, as a long.
     * DuckDB twin: CAST('0x' || substr(md5(x),1,15) AS BIGINT). */
   def h60(c: Column): Column = conv(substring(md5(c), 1, 15), 16, 10).cast("long")
@@ -2345,56 +2343,30 @@ object Dedup {
        |JOIN psz sb ON sb.doc_id = i.doc_b
        |ORDER BY doc_a, doc_b""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "containment_verify" -> containmentVerify,
-    "lsh_vs_exact_recall" -> lshVsExactRecall,
-    "jaccard_prefix_join" -> jaccardPrefixJoin,
-    "dup_triangle_audit" -> dupTriangleAudit,
-    "parallel_pair_mine" -> parallelPairMine,
-    "quality_dup_lift" -> qualityDupLift,
-    "dup_graph_pagerank" -> dupGraphPagerank,
-    "exact_dedup_documents" -> exactDedupDocuments,
-    "exact_substr_spans" -> exactSubstrSpans,
-    "exact_substr_cut" -> exactSubstrCut,
-    "minhash_lsh_candidates" -> minhashLshCandidates,
-    "near_dup_cluster" -> nearDupCluster,
-    "dedup_rate_report" -> dedupRateReport,
-    "dedup_resolve" -> dedupResolve,
-    "corpus_chunk_dedup" -> corpusChunkDedup,
-    "simhash_fingerprint" -> simhashFingerprint,
-    "simhash_near_dup" -> simhashNearDup,
-    "ngram_jaccard_pairs" -> ngramJaccardPairs,
-    "minhash_jaccard_estimate" -> minhashJaccardEstimate,
-    "dedup_threshold_sweep" -> dedupThresholdSweep,
-    "bbit_minhash_audit" -> bbitMinhashAudit,
-    "lsh_band_recall" -> lshBandRecall,
-    "fuzzy_fingerprint_join" -> fuzzyFingerprintJoin,
-    "edit_distance_verify" -> editDistanceVerify,
-  )
-  val oracles: Map[String, String] = Map(
-    "containment_verify" -> containmentVerifySql,
-    "lsh_vs_exact_recall" -> lshVsExactRecallSql,
-    "jaccard_prefix_join" -> jaccardPrefixJoinSql,
-    "edit_distance_verify" -> editDistanceVerifySql,
-    "dup_triangle_audit" -> dupTriangleAuditSql,
-    "parallel_pair_mine" -> parallelPairMineSql,
-    "quality_dup_lift" -> qualityDupLiftSql,
-    "dup_graph_pagerank" -> dupGraphPagerankSql,
-    "exact_dedup_documents" -> exactDedupDocumentsSql,
-    "exact_substr_spans" -> exactSubstrSpansSql,
-    "exact_substr_cut" -> exactSubstrCutSql,
-    "minhash_lsh_candidates" -> minhashLshCandidatesSql,
-    "near_dup_cluster" -> nearDupClusterSql,
-    "dedup_rate_report" -> dedupRateReportSql,
-    "dedup_resolve" -> dedupResolveSql,
-    "corpus_chunk_dedup" -> corpusChunkDedupSql,
-    "simhash_fingerprint" -> simhashFingerprintSql,
-    "simhash_near_dup" -> simhashNearDupSql,
-    "ngram_jaccard_pairs" -> ngramJaccardPairsSql,
-    "minhash_jaccard_estimate" -> minhashJaccardEstimateSql,
-    "dedup_threshold_sweep" -> dedupThresholdSweepSql,
-    "bbit_minhash_audit" -> bbitMinhashAuditSql,
-    "lsh_band_recall" -> lshBandRecallSql,
-    "fuzzy_fingerprint_join" -> fuzzyFingerprintJoinSql,
+  val queries: Map[String, Query] = Map(
+    "containment_verify" -> Query(containmentVerify, containmentVerifySql),
+    "lsh_vs_exact_recall" -> Query(lshVsExactRecall, lshVsExactRecallSql),
+    "jaccard_prefix_join" -> Query(jaccardPrefixJoin, jaccardPrefixJoinSql),
+    "dup_triangle_audit" -> Query(dupTriangleAudit, dupTriangleAuditSql),
+    "parallel_pair_mine" -> Query(parallelPairMine, parallelPairMineSql),
+    "quality_dup_lift" -> Query(qualityDupLift, qualityDupLiftSql),
+    "dup_graph_pagerank" -> Query(dupGraphPagerank, dupGraphPagerankSql),
+    "exact_dedup_documents" -> Query(exactDedupDocuments, exactDedupDocumentsSql),
+    "exact_substr_spans" -> Query(exactSubstrSpans, exactSubstrSpansSql),
+    "exact_substr_cut" -> Query(exactSubstrCut, exactSubstrCutSql),
+    "minhash_lsh_candidates" -> Query(minhashLshCandidates, minhashLshCandidatesSql),
+    "near_dup_cluster" -> Query(nearDupCluster, nearDupClusterSql),
+    "dedup_rate_report" -> Query(dedupRateReport, dedupRateReportSql),
+    "dedup_resolve" -> Query(dedupResolve, dedupResolveSql),
+    "corpus_chunk_dedup" -> Query(corpusChunkDedup, corpusChunkDedupSql),
+    "simhash_fingerprint" -> Query(simhashFingerprint, simhashFingerprintSql),
+    "simhash_near_dup" -> Query(simhashNearDup, simhashNearDupSql),
+    "ngram_jaccard_pairs" -> Query(ngramJaccardPairs, ngramJaccardPairsSql),
+    "minhash_jaccard_estimate" -> Query(minhashJaccardEstimate, minhashJaccardEstimateSql),
+    "dedup_threshold_sweep" -> Query(dedupThresholdSweep, dedupThresholdSweepSql),
+    "bbit_minhash_audit" -> Query(bbitMinhashAudit, bbitMinhashAuditSql),
+    "lsh_band_recall" -> Query(lshBandRecall, lshBandRecallSql),
+    "fuzzy_fingerprint_join" -> Query(fuzzyFingerprintJoin, fuzzyFingerprintJoinSql),
+    "edit_distance_verify" -> Query(editDistanceVerify, editDistanceVerifySql),
   )
 }

@@ -21,8 +21,6 @@ import graft.operators.Dedup.{h60Duck, h60Sql}
   * rows per doc (hash_embed) or one partial sum per doc (scoring).
   */
 object Featurize {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Hashed-feature dimensionality. Tiny here; production uses 2^18+ —
     * the plan shape (pure projection) is D-independent. */
   val Dim = 16
@@ -189,14 +187,9 @@ object Featurize {
        |ORDER BY source, lang""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "hash_embed" -> hashEmbed,
-    "linear_quality_score" -> linearQualityScore,
-    "pref_pair_mine" -> prefPairMine,
-  )
-  val oracles: Map[String, String] = Map(
-    "hash_embed" -> hashEmbedSql,
-    "linear_quality_score" -> linearQualityScoreSql,
-    "pref_pair_mine" -> prefPairMineSql,
+  val queries: Map[String, Query] = Map(
+    "hash_embed" -> Query(hashEmbed, hashEmbedSql),
+    "linear_quality_score" -> Query(linearQualityScore, linearQualityScoreSql),
+    "pref_pair_mine" -> Query(prefPairMine, prefPairMineSql),
   )
 }

@@ -21,8 +21,6 @@ import graft.Tables
   * identical to the log version a user would deploy.
   */
 object Indexing {
-  type Q = (SparkSession, String) => DataFrame
-
   /** IDF fixed-point scale. With it, score = tf · ((N·10⁶) div df) stays
     * exact in a LONG up to N ≈ 10¹⁰ docs × doc-length tf — headroom far
     * past the 100 TB design point. */
@@ -753,30 +751,17 @@ object Indexing {
        |ORDER BY left_rows DESC, term
        |LIMIT 20""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "join_skew_diagnose" -> joinSkewDiagnose,
-    "salted_skew_join" -> saltedSkewJoin,
-    "tfidf_topk" -> tfidfTopk,
-    "inverted_index" -> invertedIndex,
-    "vocab_build" -> vocabBuild,
-    "bm25_topk" -> bm25Topk,
-    "bpe_train_merges" -> bpeTrainMerges,
-    "bpe_encode" -> bpeEncode,
-    "bpe_fertility" -> bpeFertility,
-    "vocab_coverage" -> vocabCoverage,
-    "vocab_pareto_curve" -> vocabParetoCurve,
-  )
-  val oracles: Map[String, String] = Map(
-    "join_skew_diagnose" -> joinSkewDiagnoseSql,
-    "salted_skew_join" -> saltedSkewJoinSql,
-    "tfidf_topk" -> tfidfTopkSql,
-    "inverted_index" -> invertedIndexSql,
-    "vocab_build" -> vocabBuildSql,
-    "bm25_topk" -> bm25TopkSql,
-    "bpe_train_merges" -> bpeTrainMergesSql,
-    "bpe_encode" -> bpeEncodeSql,
-    "bpe_fertility" -> bpeFertilitySql,
-    "vocab_coverage" -> vocabCoverageSql,
-    "vocab_pareto_curve" -> vocabParetoCurveSql,
+  val queries: Map[String, Query] = Map(
+    "join_skew_diagnose" -> Query(joinSkewDiagnose, joinSkewDiagnoseSql),
+    "salted_skew_join" -> Query(saltedSkewJoin, saltedSkewJoinSql),
+    "tfidf_topk" -> Query(tfidfTopk, tfidfTopkSql),
+    "inverted_index" -> Query(invertedIndex, invertedIndexSql),
+    "vocab_build" -> Query(vocabBuild, vocabBuildSql),
+    "bm25_topk" -> Query(bm25Topk, bm25TopkSql),
+    "bpe_train_merges" -> Query(bpeTrainMerges, bpeTrainMergesSql),
+    "bpe_encode" -> Query(bpeEncode, bpeEncodeSql),
+    "bpe_fertility" -> Query(bpeFertility, bpeFertilitySql),
+    "vocab_coverage" -> Query(vocabCoverage, vocabCoverageSql),
+    "vocab_pareto_curve" -> Query(vocabParetoCurve, vocabParetoCurveSql),
   )
 }

@@ -16,8 +16,6 @@ import graft.operators.Dedup.h60Duck
   * is selective on its leading key only.
   */
 object Layout {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Bits per clustered dimension (4 → 16 buckets per dim, 256 cells). */
   private val ZBits = 4
   /** Target rows per output file. The testdata instantiation (64) keeps
@@ -281,16 +279,10 @@ object Layout {
        |GROUP BY 1, 2
        |ORDER BY dimension, v""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "zorder_layout" -> zorderLayout,
-    "pipeline_layout" -> pipelineLayout,
-    "compaction_plan" -> compactionPlan,
-    "zone_map_prune_audit" -> zoneMapPruneAudit,
-  )
-  val oracles: Map[String, String] = Map(
-    "zorder_layout" -> zorderLayoutSql,
-    "pipeline_layout" -> pipelineLayoutSql,
-    "compaction_plan" -> compactionPlanSql,
-    "zone_map_prune_audit" -> zoneMapPruneAuditSql,
+  val queries: Map[String, Query] = Map(
+    "zorder_layout" -> Query(zorderLayout, zorderLayoutSql),
+    "pipeline_layout" -> Query(pipelineLayout, pipelineLayoutSql),
+    "compaction_plan" -> Query(compactionPlan, compactionPlanSql),
+    "zone_map_prune_audit" -> Query(zoneMapPruneAudit, zoneMapPruneAuditSql),
   )
 }

@@ -28,8 +28,6 @@ import graft.Tables
   * queries prune the payload column at the parquet scan (columnar win).
   */
 object Multimodal {
-  type Q = (SparkSession, String) => DataFrame
-
   /** media row: opaque payload + typed metadata (kind-dependent). */
   final case class Media(
       media_id: Long, kind: String, payload: Array[Byte],
@@ -291,6 +289,5 @@ object Multimodal {
       |    FROM documents))
       |ORDER BY media_id""".stripMargin
 
-  val queries: Map[String, Q] = Map("multimodal_meta" -> multimodalMeta)
-  val oracles: Map[String, String] = Map("multimodal_meta" -> multimodalMetaSql)
+  val queries: Map[String, Query] = Map("multimodal_meta" -> Query(multimodalMeta, multimodalMetaSql))
 }

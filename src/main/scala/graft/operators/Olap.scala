@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.Dedup.{h60, h60Duck}
@@ -12,8 +12,6 @@ import graft.operators.Dedup.{h60, h60Duck}
   * interpolations, keeping the cross-engine parity rules intact.
   */
 object Olap {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Known dimension values (TPC-H enumerations) — pivot columns must be
     * explicit so the plan is static and both engines agree on schema. */
   private val Priorities =
@@ -397,26 +395,15 @@ object Olap {
        |ORDER BY event_type, day, q_permille""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "daily_quantile_trend" -> dailyQuantileTrend,
-    "histogram_quantiles" -> histogramQuantiles,
-    "grouping_sets_report" -> groupingSetsReport,
-    "rollup_agg" -> rollupAgg,
-    "cube_agg" -> cubeAgg,
-    "pivot_wide" -> pivotWide,
-    "quantile_stats" -> quantileStats,
-    "quantile_sampled" -> quantileSampled,
-    "profile_table" -> profileTable,
-  )
-  val oracles: Map[String, String] = Map(
-    "daily_quantile_trend" -> dailyQuantileTrendSql,
-    "histogram_quantiles" -> histogramQuantilesSql,
-    "grouping_sets_report" -> groupingSetsReportSql,
-    "rollup_agg" -> rollupAggSql,
-    "cube_agg" -> cubeAggSql,
-    "pivot_wide" -> pivotWideSql,
-    "quantile_stats" -> quantileStatsSql,
-    "quantile_sampled" -> quantileSampledSql,
-    "profile_table" -> profileTableSql,
+  val queries: Map[String, Query] = Map(
+    "daily_quantile_trend" -> Query(dailyQuantileTrend, dailyQuantileTrendSql),
+    "histogram_quantiles" -> Query(histogramQuantiles, histogramQuantilesSql),
+    "grouping_sets_report" -> Query(groupingSetsReport, groupingSetsReportSql),
+    "rollup_agg" -> Query(rollupAgg, rollupAggSql),
+    "cube_agg" -> Query(cubeAgg, cubeAggSql),
+    "pivot_wide" -> Query(pivotWide, pivotWideSql),
+    "quantile_stats" -> Query(quantileStats, quantileStatsSql),
+    "quantile_sampled" -> Query(quantileSampled, quantileSampledSql),
+    "profile_table" -> Query(profileTable, profileTableSql),
   )
 }

@@ -45,8 +45,6 @@ import graft.operators.Dedup.{h60, h60Duck}
   * only broadcast-cross. PipelineSpec asserts the fused plan.
   */
 object Pipeline {
-  type Q = (SparkSession, String) => DataFrame
-
   /** documents ∪ exact re-crawl of every 3rd ∪ near-dup re-crawl of
     * every 5th — both dedup stages get a provably exercised positive
     * path (same practice as the standalone dedup operators). */
@@ -445,12 +443,8 @@ object Pipeline {
        |FROM diff WHERE status = 'removed'
        |ORDER BY doc_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "corpus_pipeline" -> corpusPipeline,
-    "incremental_pipeline" -> incrementalPipeline,
-  )
-  val oracles: Map[String, String] = Map(
-    "corpus_pipeline" -> corpusPipelineSql,
-    "incremental_pipeline" -> incrementalPipelineSql,
+  val queries: Map[String, Query] = Map(
+    "corpus_pipeline" -> Query(corpusPipeline, corpusPipelineSql),
+    "incremental_pipeline" -> Query(incrementalPipeline, incrementalPipelineSql),
   )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -20,8 +20,6 @@ import graft.Tables
   *     mirrored by `CAST(ts AS TIMESTAMP)` in the oracle SQL.
   */
 object Relational {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Sum a double column exactly (order-independent): via decimal. */
   private def sumd(c: Column): Column = sum(c.cast("decimal(38,10)")).cast("double")
 
@@ -743,71 +741,37 @@ object Relational {
   // registry
   // ===========================================================================
 
-  val queries: Map[String, Q] = Map(
-    "fk_orphan_audit" -> fkOrphanAudit,
-    "fact_join_agg" -> factJoinAgg,
-    "part_enrich_agg" -> partEnrichAgg,
-    "argmax_per_group" -> argmaxPerGroup,
-    "dedup_by_unique_key" -> dedupByUniqueKey,
-    "cdc_diff_consecutive" -> cdcDiffConsecutive,
-    "snapshot_diff" -> snapshotDiff,
-    "stateful_last_value_diff" -> statefulLastValueDiff,
-    "bounded_state_dedup" -> boundedStateDedup,
-    "update_rowcount_agg" -> updateRowcountAgg,
-    "fk_equi_join" -> fkEquiJoin,
-    "join_filter_through_fk" -> joinFilterThroughFk,
-    "composite_key_correlation_join" -> compositeKeyCorrelationJoin,
-    "upsert_get_or_create" -> upsertGetOrCreate,
-    "scrape_fanout" -> scrapeFanout,
-    "anti_join_seen_set" -> antiJoinSeenSet,
-    "filter_eq_conjunctive" -> filterEqConjunctive,
-    "filter_boolean" -> filterBoolean,
-    "project_drop_columns" -> projectDropColumns,
-    "derive_basename" -> deriveBasename,
-    "parse_qs_extract" -> parseQsExtract,
-    "cast_str_int" -> castStrInt,
-    "synthetic_hash_id" -> syntheticHashId,
-    "jdbc_insert_sink" -> jdbcInsertSink,
-    "jdbc_update_sink" -> jdbcUpdateSink,
-    "doc_merge_upsert_sink" -> docMergeUpsertSink,
-    "startup_snapshot_scan" -> startupSnapshotScan,
-    "union_sources" -> unionSources,
-    "distinct_membership" -> distinctMembership,
-    "order_desc_first" -> orderDescFirst,
-    "reverse_document_order" -> reverseDocumentOrder,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "fk_orphan_audit" -> fkOrphanAuditSql,
-    "fact_join_agg" -> factJoinAggSql,
-    "part_enrich_agg" -> partEnrichAggSql,
-    "argmax_per_group" -> argmaxPerGroupSql,
-    "dedup_by_unique_key" -> dedupByUniqueKeySql,
-    "cdc_diff_consecutive" -> cdcDiffConsecutiveSql,
-    "snapshot_diff" -> snapshotDiffSql,
-    "stateful_last_value_diff" -> statefulLastValueDiffSql,
-    "bounded_state_dedup" -> boundedStateDedupSql,
-    "update_rowcount_agg" -> updateRowcountAggSql,
-    "fk_equi_join" -> fkEquiJoinSql,
-    "join_filter_through_fk" -> joinFilterThroughFkSql,
-    "composite_key_correlation_join" -> compositeKeyCorrelationJoinSql,
-    "upsert_get_or_create" -> upsertGetOrCreateSql,
-    "scrape_fanout" -> scrapeFanoutSql,
-    "anti_join_seen_set" -> antiJoinSeenSetSql,
-    "filter_eq_conjunctive" -> filterEqConjunctiveSql,
-    "filter_boolean" -> filterBooleanSql,
-    "project_drop_columns" -> projectDropColumnsSql,
-    "derive_basename" -> deriveBasenameSql,
-    "parse_qs_extract" -> parseQsExtractSql,
-    "cast_str_int" -> castStrIntSql,
-    "synthetic_hash_id" -> syntheticHashIdSql,
-    "jdbc_insert_sink" -> jdbcInsertSinkSql,
-    "jdbc_update_sink" -> jdbcUpdateSinkSql,
-    "doc_merge_upsert_sink" -> docMergeUpsertSinkSql,
-    "startup_snapshot_scan" -> startupSnapshotScanSql,
-    "union_sources" -> unionSourcesSql,
-    "distinct_membership" -> distinctMembershipSql,
-    "order_desc_first" -> orderDescFirstSql,
-    "reverse_document_order" -> reverseDocumentOrderSql,
+  val queries: Map[String, Query] = Map(
+    "fk_orphan_audit" -> Query(fkOrphanAudit, fkOrphanAuditSql),
+    "fact_join_agg" -> Query(factJoinAgg, factJoinAggSql),
+    "part_enrich_agg" -> Query(partEnrichAgg, partEnrichAggSql),
+    "argmax_per_group" -> Query(argmaxPerGroup, argmaxPerGroupSql),
+    "dedup_by_unique_key" -> Query(dedupByUniqueKey, dedupByUniqueKeySql),
+    "cdc_diff_consecutive" -> Query(cdcDiffConsecutive, cdcDiffConsecutiveSql),
+    "snapshot_diff" -> Query(snapshotDiff, snapshotDiffSql),
+    "stateful_last_value_diff" -> Query(statefulLastValueDiff, statefulLastValueDiffSql),
+    "bounded_state_dedup" -> Query(boundedStateDedup, boundedStateDedupSql),
+    "update_rowcount_agg" -> Query(updateRowcountAgg, updateRowcountAggSql),
+    "fk_equi_join" -> Query(fkEquiJoin, fkEquiJoinSql),
+    "join_filter_through_fk" -> Query(joinFilterThroughFk, joinFilterThroughFkSql),
+    "composite_key_correlation_join" -> Query(compositeKeyCorrelationJoin, compositeKeyCorrelationJoinSql),
+    "upsert_get_or_create" -> Query(upsertGetOrCreate, upsertGetOrCreateSql),
+    "scrape_fanout" -> Query(scrapeFanout, scrapeFanoutSql),
+    "anti_join_seen_set" -> Query(antiJoinSeenSet, antiJoinSeenSetSql),
+    "filter_eq_conjunctive" -> Query(filterEqConjunctive, filterEqConjunctiveSql),
+    "filter_boolean" -> Query(filterBoolean, filterBooleanSql),
+    "project_drop_columns" -> Query(projectDropColumns, projectDropColumnsSql),
+    "derive_basename" -> Query(deriveBasename, deriveBasenameSql),
+    "parse_qs_extract" -> Query(parseQsExtract, parseQsExtractSql),
+    "cast_str_int" -> Query(castStrInt, castStrIntSql),
+    "synthetic_hash_id" -> Query(syntheticHashId, syntheticHashIdSql),
+    "jdbc_insert_sink" -> Query(jdbcInsertSink, jdbcInsertSinkSql),
+    "jdbc_update_sink" -> Query(jdbcUpdateSink, jdbcUpdateSinkSql),
+    "doc_merge_upsert_sink" -> Query(docMergeUpsertSink, docMergeUpsertSinkSql),
+    "startup_snapshot_scan" -> Query(startupSnapshotScan, startupSnapshotScanSql),
+    "union_sources" -> Query(unionSources, unionSourcesSql),
+    "distinct_membership" -> Query(distinctMembership, distinctMembershipSql),
+    "order_desc_first" -> Query(orderDescFirst, orderDescFirstSql),
+    "reverse_document_order" -> Query(reverseDocumentOrder, reverseDocumentOrderSql),
   )
 }

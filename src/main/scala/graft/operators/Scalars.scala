@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.Fns
@@ -11,8 +11,6 @@ import graft.functions.Fns
   * DuckDB SQL computing the same values.
   */
 object Scalars {
-  type Q = (SparkSession, String) => DataFrame
-
   private val EV =
     "(SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value, props FROM events)"
 
@@ -294,28 +292,16 @@ object Scalars {
        |WHERE k IS NOT NULL
        |GROUP BY 1 ORDER BY k_bucket""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "json_props_histogram" -> jsonPropsHistogram,
-    "regexp_extract_id" -> regexpExtractId,
-    "regexp_replace_normalize" -> regexpReplaceNormalize,
-    "regexp_extract_all_mentions" -> regexpExtractAllMentions,
-    "to_timestamp_ampm" -> toTimestampAmPm,
-    "datetime_funcs" -> datetimeFuncs,
-    "string_funcs" -> stringFuncs,
-    "to_json_claims" -> toJsonClaims,
-    "regexp_match_link" -> regexpMatchLink,
-    "command_parse" -> commandParse,
-  )
-  val oracles: Map[String, String] = Map(
-    "regexp_extract_id" -> regexpExtractIdSql,
-    "regexp_replace_normalize" -> regexpReplaceNormalizeSql,
-    "regexp_extract_all_mentions" -> regexpExtractAllMentionsSql,
-    "to_timestamp_ampm" -> toTimestampAmPmSql,
-    "datetime_funcs" -> datetimeFuncsSql,
-    "string_funcs" -> stringFuncsSql,
-    "to_json_claims" -> toJsonClaimsSql,
-    "regexp_match_link" -> regexpMatchLinkSql,
-    "command_parse" -> commandParseSql,
-    "json_props_histogram" -> jsonPropsHistogramSql,
+  val queries: Map[String, Query] = Map(
+    "json_props_histogram" -> Query(jsonPropsHistogram, jsonPropsHistogramSql),
+    "regexp_extract_id" -> Query(regexpExtractId, regexpExtractIdSql),
+    "regexp_replace_normalize" -> Query(regexpReplaceNormalize, regexpReplaceNormalizeSql),
+    "regexp_extract_all_mentions" -> Query(regexpExtractAllMentions, regexpExtractAllMentionsSql),
+    "to_timestamp_ampm" -> Query(toTimestampAmPm, toTimestampAmPmSql),
+    "datetime_funcs" -> Query(datetimeFuncs, datetimeFuncsSql),
+    "string_funcs" -> Query(stringFuncs, stringFuncsSql),
+    "to_json_claims" -> Query(toJsonClaims, toJsonClaimsSql),
+    "regexp_match_link" -> Query(regexpMatchLink, regexpMatchLinkSql),
+    "command_parse" -> Query(commandParse, commandParseSql),
   )
 }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.time.Instant
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import graft.sources.{RawPage, Scans}
 
 /** S2–S6 HTML scans registered as driver-checkable queries.
@@ -21,10 +21,19 @@ import graft.sources.{RawPage, Scans}
   * `Dataset[RawPage] → flatMap(parse)` operator, page-parallel.
   */
 object ScanQueries {
-  type Q = (SparkSession, String) => DataFrame
-
-  private val FixtureDir = "/root/reference/test/scrapers/fixtures"
+  private[graft] val FixtureDir = "/root/reference/test/scrapers/fixtures"
   private val Now = Instant.parse("2022-04-17T23:59:59Z")
+
+  /** The captured page `<name>.html` under [[FixtureDir]]. Where the
+    * tree is absent, fails with the one precondition error that names
+    * it, not with a `NoSuchFileException` from deep inside a scan. */
+  private[graft] def fixturePage(name: String): java.nio.file.Path = {
+    val dir = java.nio.file.Paths.get(FixtureDir)
+    if (!java.nio.file.Files.isDirectory(dir)) throw new IllegalStateException(
+      s"captured fixture pages are missing: $FixtureDir does not exist " +
+      "(FIXTURES.md §A lists the pages it must hold)")
+    dir.resolve(s"$name.html")
+  }
 
   /** One fixture page as a DISTRIBUTED `Dataset[RawPage]`: the file is
     * staged once into an archive-layout temp dir (`<key>__<name>.html`,
@@ -42,7 +51,7 @@ object ScanQueries {
     // ever sees a complete file. Copy+REPLACE_EXISTING truncated the
     // destination in place and could expose a partial write.
     val tmp = java.nio.file.Files.createTempFile(stagedFixtures, ".stage-", ".tmp")
-    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$FixtureDir/$fixture.html"), tmp,
+    java.nio.file.Files.copy(fixturePage(fixture), tmp,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     java.nio.file.Files.move(tmp, f,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -97,9 +106,7 @@ object ScanQueries {
     val dir = java.nio.file.Files.createTempDirectory("graft-archive")
     Seq("help__1" -> "chat_help", "global__1" -> "chat_complex", "global__2" -> "chat_long")
       .foreach { case (name, fixture) =>
-        java.nio.file.Files.copy(
-          java.nio.file.Paths.get(s"$FixtureDir/$fixture.html"),
-          dir.resolve(s"$name.html"))
+        java.nio.file.Files.copy(fixturePage(fixture), dir.resolve(s"$name.html"))
       }
     dir.toString
   }
@@ -107,7 +114,10 @@ object ScanQueries {
     Scans.chatScan(Scans.readArchive(spark, archiveDir), Now)
       .drop("deletedTs").toDF().orderBy("room", "id")
 
-  val queries: Map[String, Q] = Map(
+  /** Each scan with its pinned VALUES-literal golden, one resource file
+    * per scan — see object Scaladoc for why these are literals, not
+    * computed SQL. */
+  val queries: Map[String, Query] = Seq(
     "html_scan_chat" -> htmlScanChat,
     "html_scan_flags" -> htmlScanFlags,
     "html_scan_profile" -> htmlScanProfile,
@@ -115,13 +125,10 @@ object ScanQueries {
     "html_scan_mailbox" -> htmlScanMailbox,
     "html_scan_message" -> htmlScanMessage,
     "html_scan_archive" -> htmlScanArchive,
-  )
-  /** Pinned VALUES-literal goldens, one resource file per scan — see
-    * object Scaladoc for why these are literals, not computed SQL. */
-  lazy val oracles: Map[String, String] = queries.keys.map { name =>
+  ).map { case (name, run) =>
     val in = getClass.getResourceAsStream(s"/graft/oracles/$name.sql")
     require(in != null, s"missing oracle golden for $name")
-    try name -> new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
+    try name -> Query(run, new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
     finally in.close()
   }.toMap
 }

@@ -31,8 +31,6 @@ import graft.operators.Dedup.h60Duck
   * arises: both engines run the identical finite computation.
   */
 object Semantic {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Cluster count. At 100 TB this scales with N (SemDeDup used ~50k
     * clusters for LAION): the point of K is to bound per-cluster
     * pairwise work at N²/K, so K grows linearly with the corpus. */
@@ -1019,24 +1017,14 @@ object Semantic {
        |FROM train t LEFT JOIN m ON m.vec_id = t.vec_id
        |ORDER BY t.vec_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "knn_label_eval" -> knnLabelEval,
-    "embedding_decontam" -> embeddingDecontam,
-    "kmeans_assign" -> kmeansAssign,
-    "semdedup_prune" -> semdedupPrune,
-    "pq_adc_topk" -> pqAdcTopk,
-    "pq_recall_report" -> pqRecallReport,
-    "hard_negative_mine" -> hardNegativeMine,
-    "cluster_balanced_sample" -> clusterBalancedSample,
-  )
-  val oracles: Map[String, String] = Map(
-    "knn_label_eval" -> knnLabelEvalSql,
-    "embedding_decontam" -> embeddingDecontamSql,
-    "kmeans_assign" -> kmeansAssignSql,
-    "semdedup_prune" -> semdedupPruneSql,
-    "pq_adc_topk" -> pqAdcTopkSql,
-    "pq_recall_report" -> pqRecallReportSql,
-    "hard_negative_mine" -> hardNegativeMineSql,
-    "cluster_balanced_sample" -> clusterBalancedSampleSql,
+  val queries: Map[String, Query] = Map(
+    "knn_label_eval" -> Query(knnLabelEval, knnLabelEvalSql),
+    "embedding_decontam" -> Query(embeddingDecontam, embeddingDecontamSql),
+    "kmeans_assign" -> Query(kmeansAssign, kmeansAssignSql),
+    "semdedup_prune" -> Query(semdedupPrune, semdedupPruneSql),
+    "pq_adc_topk" -> Query(pqAdcTopk, pqAdcTopkSql),
+    "pq_recall_report" -> Query(pqRecallReport, pqRecallReportSql),
+    "hard_negative_mine" -> Query(hardNegativeMine, hardNegativeMineSql),
+    "cluster_balanced_sample" -> Query(clusterBalancedSample, clusterBalancedSampleSql),
   )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -46,8 +46,6 @@ import graft.Tables
   * generator is the same md5 arithmetic).
   */
 object Similarity {
-  type Q = (SparkSession, String) => DataFrame
-
   private val Dim = 64
   private val SigBits = 16   // bits per LSH table ≈ log₂N + margin (see Scaladoc)
   private val NumTables = 2  // OR-ed signature tables (recall knob)
@@ -1162,34 +1160,19 @@ object Similarity {
        |FROM all$MmrK ORDER BY q_id, rank""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "rrf_fusion" -> rrfFusion,
-    "mmr_rerank" -> mmrRerank,
-    "embedding_moments" -> embeddingMoments,
-    "cosine_topk_bruteforce" -> cosineTopkBruteforce,
-    "embedding_cosine_near_dup" -> embeddingCosineNearDup,
-    "ann_lsh_bucket_top1" -> annLshBucketTop1,
-    "ann_ivf_topk" -> annIvfTopk,
-    "ivf_nprobe_recall" -> ivfNprobeRecall,
-    "matryoshka_recall" -> matryoshkaRecall,
-    "label_centroid_audit" -> labelCentroidAudit,
-    "random_projection" -> randomProjection,
-    "scalar_quantize_embeddings" -> scalarQuantizeEmbeddings,
-    "embedding_audit" -> embeddingAudit,
-  )
-  val oracles: Map[String, String] = Map(
-    "rrf_fusion" -> rrfFusionSql,
-    "mmr_rerank" -> mmrRerankSql,
-    "embedding_moments" -> embeddingMomentsSql,
-    "cosine_topk_bruteforce" -> cosineTopkBruteforceSql,
-    "embedding_cosine_near_dup" -> embeddingCosineNearDupSql,
-    "ann_lsh_bucket_top1" -> annLshBucketTop1Sql,
-    "ann_ivf_topk" -> annIvfTopkSql,
-    "ivf_nprobe_recall" -> ivfNprobeRecallSql,
-    "matryoshka_recall" -> matryoshkaRecallSql,
-    "label_centroid_audit" -> labelCentroidAuditSql,
-    "random_projection" -> randomProjectionSql,
-    "scalar_quantize_embeddings" -> scalarQuantizeEmbeddingsSql,
-    "embedding_audit" -> embeddingAuditSql,
+  val queries: Map[String, Query] = Map(
+    "rrf_fusion" -> Query(rrfFusion, rrfFusionSql),
+    "mmr_rerank" -> Query(mmrRerank, mmrRerankSql),
+    "embedding_moments" -> Query(embeddingMoments, embeddingMomentsSql),
+    "cosine_topk_bruteforce" -> Query(cosineTopkBruteforce, cosineTopkBruteforceSql),
+    "embedding_cosine_near_dup" -> Query(embeddingCosineNearDup, embeddingCosineNearDupSql),
+    "ann_lsh_bucket_top1" -> Query(annLshBucketTop1, annLshBucketTop1Sql),
+    "ann_ivf_topk" -> Query(annIvfTopk, annIvfTopkSql),
+    "ivf_nprobe_recall" -> Query(ivfNprobeRecall, ivfNprobeRecallSql),
+    "matryoshka_recall" -> Query(matryoshkaRecall, matryoshkaRecallSql),
+    "label_centroid_audit" -> Query(labelCentroidAudit, labelCentroidAuditSql),
+    "random_projection" -> Query(randomProjection, randomProjectionSql),
+    "scalar_quantize_embeddings" -> Query(scalarQuantizeEmbeddings, scalarQuantizeEmbeddingsSql),
+    "embedding_audit" -> Query(embeddingAudit, embeddingAuditSql),
   )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.operators.Dedup.{h60Sql, h60Duck}
@@ -23,8 +23,6 @@ import graft.operators.Dedup.{h60Sql, h60Duck}
   * family, not noise).
   */
 object Sketches {
-  type Q = (SparkSession, String) => DataFrame
-
   private val LaneBits = 32
 
   /** Bloom sizing law: m = n·ln(1/p)/ln²2 bits for n expected keys at
@@ -427,16 +425,10 @@ object Sketches {
        |ORDER BY ex.event_type, ex.month""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "bloom_prefilter" -> bloomPrefilter,
-    "hll_distinct" -> hllDistinct,
-    "cms_heavy_hitters" -> cmsHeavyHitters,
-    "hll_weekly_rollup" -> hllWeeklyRollup,
-  )
-  val oracles: Map[String, String] = Map(
-    "bloom_prefilter" -> bloomPrefilterSql,
-    "hll_distinct" -> hllDistinctSql,
-    "cms_heavy_hitters" -> cmsHeavyHittersSql,
-    "hll_weekly_rollup" -> hllWeeklyRollupSql,
+  val queries: Map[String, Query] = Map(
+    "bloom_prefilter" -> Query(bloomPrefilter, bloomPrefilterSql),
+    "hll_distinct" -> Query(hllDistinct, hllDistinctSql),
+    "cms_heavy_hitters" -> Query(cmsHeavyHitters, cmsHeavyHittersSql),
+    "hll_weekly_rollup" -> Query(hllWeeklyRollup, hllWeeklyRollupSql),
   )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables
@@ -15,8 +15,6 @@ import graft.Tables
   * stronger oracle than most queries get.
   */
 object TemporalJoins {
-  type Q = (SparkSession, String) => DataFrame
-
   private val EV =
     "(SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type FROM events)"
 
@@ -286,16 +284,10 @@ object TemporalJoins {
        |FROM p LEFT JOIN lt USING (event_id)
        |GROUP BY 1 ORDER BY touch_type""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "asof_join" -> asofJoin,
-    "range_join_count" -> rangeJoinCount,
-    "asof_nearest_tolerance" -> asofNearestTolerance,
-    "attribution_report" -> attributionReport,
-  )
-  val oracles: Map[String, String] = Map(
-    "asof_join" -> asofJoinSql,
-    "range_join_count" -> rangeJoinCountSql,
-    "asof_nearest_tolerance" -> asofNearestToleranceSql,
-    "attribution_report" -> attributionReportSql,
+  val queries: Map[String, Query] = Map(
+    "asof_join" -> Query(asofJoin, asofJoinSql),
+    "range_join_count" -> Query(rangeJoinCount, rangeJoinCountSql),
+    "asof_nearest_tolerance" -> Query(asofNearestTolerance, asofNearestToleranceSql),
+    "attribution_report" -> Query(attributionReport, attributionReportSql),
   )
 }

@@ -19,8 +19,6 @@ import graft.operators.Dedup.{h60Duck, h60Sql}
   * char-n-gram marker lists).
   */
 object TextAnalysis {
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------------
   // 1. lang_id_ngram — marker-token scoring + argmax
   // ---------------------------------------------------------------------
@@ -1070,42 +1068,23 @@ object TextAnalysis {
        |  AND min_share_permille >= $StopDfPermille
        |ORDER BY min_share_permille DESC, term""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "stopword_discovery" -> stopwordDiscovery,
-    "source_ngram_specificity" -> sourceNgramSpecificity,
-    "vocab_growth_curve" -> vocabGrowthCurve,
-    "top_terms_per_lang" -> topTermsPerLang,
-    "top_terms_agg" -> topTermsAgg,
-    "lang_id_ngram" -> langIdNgram,
-    "lang_id_confusion" -> langIdConfusion,
-    "text_quality_score" -> textQualityScore,
-    "token_count" -> tokenCount,
-    "doc_fingerprint" -> docFingerprint,
-    "text_stats" -> textStats,
-    "bigram_lm_score" -> bigramLmScore,
-    "fluency_buckets" -> fluencyBuckets,
-    "winnow_fingerprints" -> winnowFingerprints,
-    "ngram_novelty" -> ngramNovelty,
-    "collocation_lift" -> collocationLift,
-    "topic_lexicon_assign" -> topicLexiconAssign,
-  )
-  val oracles: Map[String, String] = Map(
-    "stopword_discovery" -> stopwordDiscoverySql,
-    "source_ngram_specificity" -> sourceNgramSpecificitySql,
-    "vocab_growth_curve" -> vocabGrowthCurveSql,
-    "top_terms_per_lang" -> topTermsPerLangSql,
-    "top_terms_agg" -> topTermsAggSql,
-    "lang_id_ngram" -> langIdNgramSql,
-    "lang_id_confusion" -> langIdConfusionSql,
-    "text_quality_score" -> textQualityScoreSql,
-    "token_count" -> tokenCountSql,
-    "doc_fingerprint" -> docFingerprintSql,
-    "text_stats" -> textStatsSql,
-    "bigram_lm_score" -> bigramLmScoreSql,
-    "winnow_fingerprints" -> winnowFingerprintsSql,
-    "ngram_novelty" -> ngramNoveltySql,
-    "fluency_buckets" -> fluencyBucketsSql,
-    "collocation_lift" -> collocationLiftSql,
-    "topic_lexicon_assign" -> topicLexiconAssignSql,
+  val queries: Map[String, Query] = Map(
+    "stopword_discovery" -> Query(stopwordDiscovery, stopwordDiscoverySql),
+    "source_ngram_specificity" -> Query(sourceNgramSpecificity, sourceNgramSpecificitySql),
+    "vocab_growth_curve" -> Query(vocabGrowthCurve, vocabGrowthCurveSql),
+    "top_terms_per_lang" -> Query(topTermsPerLang, topTermsPerLangSql),
+    "top_terms_agg" -> Query(topTermsAgg, topTermsAggSql),
+    "lang_id_ngram" -> Query(langIdNgram, langIdNgramSql),
+    "lang_id_confusion" -> Query(langIdConfusion, langIdConfusionSql),
+    "text_quality_score" -> Query(textQualityScore, textQualityScoreSql),
+    "token_count" -> Query(tokenCount, tokenCountSql),
+    "doc_fingerprint" -> Query(docFingerprint, docFingerprintSql),
+    "text_stats" -> Query(textStats, textStatsSql),
+    "bigram_lm_score" -> Query(bigramLmScore, bigramLmScoreSql),
+    "fluency_buckets" -> Query(fluencyBuckets, fluencyBucketsSql),
+    "winnow_fingerprints" -> Query(winnowFingerprints, winnowFingerprintsSql),
+    "ngram_novelty" -> Query(ngramNovelty, ngramNoveltySql),
+    "collocation_lift" -> Query(collocationLift, collocationLiftSql),
+    "topic_lexicon_assign" -> Query(topicLexiconAssign, topicLexiconAssignSql),
   )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -19,8 +19,6 @@ import graft.Tables
   * pointwise expression; a single `lag` cannot repair a multi-day cascade.
   */
 object TimeRepair {
-  type Q = (SparkSession, String) => DataFrame
-
   private val EV =
     "(SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value, props FROM events)"
 
@@ -109,12 +107,8 @@ object TimeRepair {
        |            THEN ts - INTERVAL 1 YEAR ELSE ts END AS repaired_ts
        |FROM $EV ORDER BY event_id""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "monotonic_ts_repair" -> monotonicTsRepair,
-    "year_rollover_repair" -> yearRolloverRepair,
-  )
-  val oracles: Map[String, String] = Map(
-    "monotonic_ts_repair" -> monotonicTsRepairSql,
-    "year_rollover_repair" -> yearRolloverRepairSql,
+  val queries: Map[String, Query] = Map(
+    "monotonic_ts_repair" -> Query(monotonicTsRepair, monotonicTsRepairSql),
+    "year_rollover_repair" -> Query(yearRolloverRepair, yearRolloverRepairSql),
   )
 }

@@ -13,8 +13,6 @@ import graft.operators.Dedup.{h60, h60Duck, h60Sql}
   * the same mix and the same packing on any engine or partitioning.
   */
 object TrainingMix {
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------------
   // 1. temperature_resample — multilingual temperature-balanced sampling
   // ---------------------------------------------------------------------
@@ -1279,38 +1277,21 @@ object TrainingMix {
        |         AS coverage_permille
        |FROM types WHERE in_test GROUP BY n ORDER BY n""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "span_corruption" -> spanCorruption,
-    "temperature_resample" -> temperatureResample,
-    "sequence_pack" -> sequencePack,
-    "dataset_split" -> datasetSplit,
-    "split_contamination" -> splitContamination,
-    "ngram_coverage_curve" -> ngramCoverageCurve,
-    "epoch_upsample" -> epochUpsample,
-    "global_row_index" -> globalRowIndex,
-    "global_shuffle_order" -> globalShuffleOrder,
-    "dsir_select" -> dsirSelect,
-    "doremi_weights" -> doremiWeights,
-    "length_bucket_batches" -> lengthBucketBatches,
-    "pack_efficiency_report" -> packEfficiencyReport,
-    "batch_mixing_report" -> batchMixingReport,
-    "mix_pipeline" -> mixPipeline,
-  )
-  val oracles: Map[String, String] = Map(
-    "span_corruption" -> spanCorruptionSql,
-    "dsir_select" -> dsirSelectSql,
-    "doremi_weights" -> doremiWeightsSql,
-    "length_bucket_batches" -> lengthBucketBatchesSql,
-    "pack_efficiency_report" -> packEfficiencyReportSql,
-    "batch_mixing_report" -> batchMixingReportSql,
-    "mix_pipeline" -> mixPipelineSql,
-    "temperature_resample" -> temperatureResampleSql,
-    "sequence_pack" -> sequencePackSql,
-    "dataset_split" -> datasetSplitSql,
-    "split_contamination" -> splitContaminationSql,
-    "ngram_coverage_curve" -> ngramCoverageCurveSql,
-    "epoch_upsample" -> epochUpsampleSql,
-    "global_row_index" -> globalRowIndexSql,
-    "global_shuffle_order" -> globalShuffleOrderSql,
+  val queries: Map[String, Query] = Map(
+    "span_corruption" -> Query(spanCorruption, spanCorruptionSql),
+    "temperature_resample" -> Query(temperatureResample, temperatureResampleSql),
+    "sequence_pack" -> Query(sequencePack, sequencePackSql),
+    "dataset_split" -> Query(datasetSplit, datasetSplitSql),
+    "split_contamination" -> Query(splitContamination, splitContaminationSql),
+    "ngram_coverage_curve" -> Query(ngramCoverageCurve, ngramCoverageCurveSql),
+    "epoch_upsample" -> Query(epochUpsample, epochUpsampleSql),
+    "global_row_index" -> Query(globalRowIndex, globalRowIndexSql),
+    "global_shuffle_order" -> Query(globalShuffleOrder, globalShuffleOrderSql),
+    "dsir_select" -> Query(dsirSelect, dsirSelectSql),
+    "doremi_weights" -> Query(doremiWeights, doremiWeightsSql),
+    "length_bucket_batches" -> Query(lengthBucketBatches, lengthBucketBatchesSql),
+    "pack_efficiency_report" -> Query(packEfficiencyReport, packEfficiencyReportSql),
+    "batch_mixing_report" -> Query(batchMixingReport, batchMixingReportSql),
+    "mix_pipeline" -> Query(mixPipeline, mixPipelineSql),
   )
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.Tables
 
@@ -16,8 +16,6 @@ import graft.Tables
   * explosion.
   */
 object Windows {
-  type Q = (SparkSession, String) => DataFrame
-
   private val EV =
     "(SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value, props FROM events)"
 
@@ -840,38 +838,21 @@ object Windows {
        |FROM g ORDER BY step""".stripMargin
   }
 
-  val queries: Map[String, Q] = Map(
-    "window_funnel" -> windowFunnel,
-    "sequence_match_report" -> sequenceMatchReport,
-    "tumbling_window_agg" -> tumblingWindowAgg,
-    "sliding_window_agg" -> slidingWindowAgg,
-    "session_window_agg" -> sessionWindowAgg,
-    "funnel_report" -> funnelReport,
-    "retention_cohorts" -> retentionCohorts,
-    "stickiness_report" -> stickinessReport,
-    "rfm_segments" -> rfmSegments,
-    "user_path_ngrams" -> userPathNgrams,
-    "anomaly_mad" -> anomalyMad,
-    "scd2_history" -> scd2History,
-    "markov_transitions" -> markovTransitions,
-    "hourly_seasonality" -> hourlySeasonality,
-    "scd2_point_in_time" -> scd2PointInTime,
-  )
-  val oracles: Map[String, String] = Map(
-    "tumbling_window_agg" -> tumblingWindowAggSql,
-    "sliding_window_agg" -> slidingWindowAggSql,
-    "session_window_agg" -> sessionWindowAggSql,
-    "funnel_report" -> funnelReportSql,
-    "retention_cohorts" -> retentionCohortsSql,
-    "stickiness_report" -> stickinessReportSql,
-    "rfm_segments" -> rfmSegmentsSql,
-    "user_path_ngrams" -> userPathNgramsSql,
-    "window_funnel" -> windowFunnelSql,
-    "sequence_match_report" -> sequenceMatchReportSql,
-    "anomaly_mad" -> anomalyMadSql,
-    "scd2_history" -> scd2HistorySql,
-    "markov_transitions" -> markovTransitionsSql,
-    "hourly_seasonality" -> hourlySeasonalitySql,
-    "scd2_point_in_time" -> scd2PointInTimeSql,
+  val queries: Map[String, Query] = Map(
+    "window_funnel" -> Query(windowFunnel, windowFunnelSql),
+    "sequence_match_report" -> Query(sequenceMatchReport, sequenceMatchReportSql),
+    "tumbling_window_agg" -> Query(tumblingWindowAgg, tumblingWindowAggSql),
+    "sliding_window_agg" -> Query(slidingWindowAgg, slidingWindowAggSql),
+    "session_window_agg" -> Query(sessionWindowAgg, sessionWindowAggSql),
+    "funnel_report" -> Query(funnelReport, funnelReportSql),
+    "retention_cohorts" -> Query(retentionCohorts, retentionCohortsSql),
+    "stickiness_report" -> Query(stickinessReport, stickinessReportSql),
+    "rfm_segments" -> Query(rfmSegments, rfmSegmentsSql),
+    "user_path_ngrams" -> Query(userPathNgrams, userPathNgramsSql),
+    "anomaly_mad" -> Query(anomalyMad, anomalyMadSql),
+    "scd2_history" -> Query(scd2History, scd2HistorySql),
+    "markov_transitions" -> Query(markovTransitions, markovTransitionsSql),
+    "hourly_seasonality" -> Query(hourlySeasonality, hourlySeasonalitySql),
+    "scd2_point_in_time" -> Query(scd2PointInTime, scd2PointInTimeSql),
   )
 }

@@ -93,25 +93,9 @@ class ConstructionJobSweepSpec extends AnyFunSuite {
     // a once-per-session catalog cost, not a per-query eagerness bug.
     Tables.names.foreach(n => Tables.table(spark, Dir, n))
     drain()
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+    val offenders = TestSpark.sweepRegistry { (name, fn) =>
       drain()
       jobs.set(0)
-      // Cleanup is the BLANKET clearCache + unpersist-all, deliberately:
-      // suites run SEQUENTIALLY in the forked test JVM (Test/fork with
-      // sbt's default testForkedParallel=false) and tests run
-      // sequentially within a suite, so nothing concurrent can lose its
-      // cache mid-use — completed suites don't re-read theirs, and
-      // later suites haven't built theirs yet (Tables.stage re-persists
-      // on next access by design). The once-considered scoped
-      // alternative — unpersist only the RDD ids this construction
-      // added — is WORSE: force-unpersisting a cached RDD leaves its
-      // CacheManager entry registered, so any later identical plan is
-      // served an entry that recomputes on every read and never
-      // re-caches (Dataset.storageLevel reports the entry's requested
-      // level, defeating the `== NONE` re-persist guard), and persists
-      // registered but not yet materialized are invisible to the id
-      // diff entirely. clearCache() drops the ENTRIES, which is the
-      // state that must not leak.
       spark.sparkContext.addSparkListener(listener)
       try {
         fn(spark, Dir) // construct ONLY — no action
@@ -120,11 +104,7 @@ class ConstructionJobSweepSpec extends AnyFunSuite {
         if (n > 0 && !EagerByDesign.contains(name))
           Seq(s"$name: $n job(s) at construction")
         else Nil
-      } finally {
-        spark.sparkContext.removeSparkListener(listener)
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      }
+      } finally spark.sparkContext.removeSparkListener(listener)
     }
     assert(offenders.isEmpty,
       "\nQueries running Spark jobs at CONSTRUCTION time (eager action in the" +

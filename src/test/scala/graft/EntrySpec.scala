@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import graft.expressions.GraftExtensions
+import graft.operators.Query
 
 /** The driver's smoke check, run locally: the flagship entry must
   * return rows on the smallest testdata, on a CALLER-owned session
@@ -21,17 +22,19 @@ class EntrySpec extends AnyFunSuite {
     // require the kernel table ensure() registers to name each of them
     val spark = TestSpark.spark
     val known = GraftExtensions.kernels.map(_.name).toSet
-    val used = SparkEntry.queries.values.flatMap { fn =>
-      fn(spark, Dir).queryExecution.analyzed
+    var used = Set.empty[String]
+    val offenders = TestSpark.sweepRegistry { (name, fn) =>
+      val resolved = fn(spark, Dir).queryExecution.analyzed
         .flatMap(_.expressions) // every plan node's expression trees
         .flatMap(_.collect {
           case e if e.getClass.getPackage != null &&
             e.getClass.getPackage.getName == "graft.expressions" => e.prettyName
-        })
-    }.toSet
+        }).toSet
+      used ++= resolved
+      (resolved -- known).toSeq.sorted.map(k => s"$name: $k is used but not registered by ensure")
+    }
     assert(used.nonEmpty, "expected native kernels in the registry's plans")
-    assert(used.subsetOf(known),
-      s"native functions used but not registered by ensure: ${used -- known}")
+    assert(offenders.isEmpty, offenders.mkString("\n  ", "\n  ", ""))
   }
 
   test("the extension registry and ensure() register the SAME kernel set") {
@@ -73,6 +76,14 @@ class EntrySpec extends AnyFunSuite {
         SparkEntry.queries("argmax_per_group")(TestSpark.spark, Dir)
     }
     assert(warns.isEmpty, s"${warns.size} function registry WARNs, first: ${warns.headOption}")
+  }
+
+  test("a query name declared in two modules fails the registry build, naming it") {
+    val q = Query((s, _) => s.emptyDataFrame, "SELECT 1")
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.registry(Seq(Map("only_a" -> q, "shared" -> q), Map("shared" -> q, "only_b" -> q)))
+    }
+    assert(e.getMessage.contains("shared") && !e.getMessage.contains("only_"), e.getMessage)
   }
 
   test("every registered query has either an oracle or a scan prefix") {

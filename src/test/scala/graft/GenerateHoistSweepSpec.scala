@@ -86,17 +86,9 @@ class GenerateHoistSweepSpec extends AnyFunSuite {
   }
 
   test("no heavy string kernel above a Generate on replicated columns") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      try {
-        sweep(fn(spark, Dir).queryExecution.sparkPlan, Nil)
-          .distinct.map(h => s"$name: $h")
-      } finally {
-        // blanket clear is safe and correct here — suites run
-        // sequentially in the forked test JVM; see the cleanup
-        // rationale in ConstructionJobSweepSpec
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-      }
+    val offenders = TestSpark.sweepRegistry { (name, fn) =>
+      sweep(fn(spark, Dir).queryExecution.sparkPlan, Nil)
+        .distinct.map(h => s"$name: $h")
     }
     assert(offenders.isEmpty,
       "\nHeavy string work evaluated per GENERATED row over replicated doc-level" +

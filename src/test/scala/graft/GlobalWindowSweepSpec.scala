@@ -87,7 +87,7 @@ class GlobalWindowSweepSpec extends AnyFunSuite {
     "zone_map_prune_audit" -> 1)
 
   test("no registered query plans an unpartitioned window over an unbounded relation") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+    val offenders = TestSpark.sweepRegistry { (name, fn) =>
       val plan = fn(spark, Dir).queryExecution.sparkPlan
       val global = plan.collect {
         case w: WindowExec if w.partitionSpec.isEmpty => w

@@ -52,7 +52,7 @@ class LambdaInvariantSpec extends AnyFunSuite {
     }
 
   test("no registered query evaluates a loop-invariant expensive expression inside a lambda") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+    val offenders = TestSpark.sweepRegistry { (name, fn) =>
       val plan = fn(spark, Dir).queryExecution.optimizedPlan
       plan.flatMap(_.expressions).flatMap(_.collect {
         case lf: LambdaFunction => loopInvariantOffenders(lf)

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.time.Instant
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.sources.HtmlParsers
+import graft.sources.{Fixtures, HtmlParsers}
 
 /** Physical layout must actually prune: partition filters on room reach
   * the scan (directory pruning), and a room+time query reads a pruned
@@ -16,8 +16,7 @@ class LayoutSpec extends AnyFunSuite {
   test("partitioned layout: room filter becomes a PartitionFilter, not a data filter") {
     import spark.implicits._
     val now = Instant.parse("2022-04-17T23:59:59Z")
-    val fixture = new String(Files.readAllBytes(java.nio.file.Paths.get(
-      "/root/reference/test/scrapers/fixtures/chat_help.html")), "UTF-8")
+    val fixture = Fixtures.load("chat_help")
     val helpMsgs = HtmlParsers.parseChat("help", fixture, now)
     val cutoff = java.sql.Timestamp.from(Instant.parse("2022-04-17T01:00:00Z"))
     val expected = helpMsgs.count(m => !m.ts.before(cutoff))

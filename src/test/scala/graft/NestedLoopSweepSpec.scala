@@ -137,7 +137,7 @@ class NestedLoopSweepSpec extends AnyFunSuite {
     "scd2_point_in_time" -> 1)
 
   test("no registered query plans an unbounded nested-loop or cartesian join") {
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+    val offenders = TestSpark.sweepRegistry { (name, fn) =>
       val plan = fn(spark, Dir).queryExecution.sparkPlan
       val bnlj = plan.collect {
         case j: BroadcastNestedLoopJoinExec

@@ -279,12 +279,13 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("no UDFs anywhere: every registered query plan is built-in/codegen expressions") {
-    SparkEntry.queries.keys.toSeq.sorted.foreach { q =>
+    val offenders = TestSpark.sweepRegistry { (q, _) =>
       val p = plan(q)
       // mapPartitions-based scans legitimately show (De)SerializeFromObject;
       // scalar UDFs (ScalaUDF / BatchEvalPython) must never appear.
-      assert(!p.contains("ScalaUDF") && !p.contains("BatchEvalPython"),
-        s"$q contains a UDF:\n$p")
+      if (p.contains("ScalaUDF") || p.contains("BatchEvalPython")) Seq(s"$q contains a UDF:\n$p")
+      else Nil
     }
+    assert(offenders.isEmpty, offenders.mkString("\n  ", "\n  ", ""))
   }
 }

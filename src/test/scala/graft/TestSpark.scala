@@ -17,6 +17,29 @@ object TestSpark {
     s
   }
 
+  /** Runs a registry sweep's `check` on every registered query, in name
+    * order, and returns the offender lines. A query that throws becomes
+    * the offender `name: <exception class>: <message>`, so one query that
+    * cannot run does not hide the checks on the rest.
+    *
+    * After each query the session is isolated ([[Sessions.isolate]]):
+    * the BLANKET clearCache + unpersist-all, deliberately. Suites and the
+    * tests within them run sequentially in the forked test JVM, so
+    * nothing concurrent can lose its cache mid-use (Tables.stage
+    * re-persists on next access by design). Unpersisting only the RDD
+    * ids a query added is WORSE: a force-unpersisted RDD leaves its
+    * CacheManager entry registered, so a later identical plan is served
+    * an entry that recomputes on every read and never re-caches, and
+    * persists registered but not yet materialized are invisible to an
+    * id diff. clearCache() drops the ENTRIES, the state that must not
+    * leak. */
+  def sweepRegistry(check: (String, graft.operators.Q) => Seq[String]): Seq[String] =
+    SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
+      try check(name, fn)
+      catch { case scala.util.control.NonFatal(e) => Seq(s"$name: ${e.getClass.getName}: ${e.getMessage}") }
+      finally Sessions.isolate(spark)
+    }
+
   /** The descriptions of the Spark jobs that start while `body` runs,
     * in start order. A marker job run after `body` flushes the listener
     * bus, which delivers events in the order they were posted. */

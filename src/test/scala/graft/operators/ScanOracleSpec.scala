@@ -15,11 +15,10 @@ import graft.{EmitScanOracles, TestSpark}
 class ScanOracleSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
-  ScanQueries.queries.foreach { case (name, fn) =>
+  ScanQueries.queries.foreach { case (name, q) =>
     test(s"$name committed oracle matches live parse") {
-      val live = EmitScanOracles.render(name, fn(spark, ""))
-      val committed = ScanQueries.oracles(name)
-      assert(live == committed,
+      val live = EmitScanOracles.render(name, q.run(spark, ""))
+      assert(live == q.oracle,
         s"$name drifted from its committed golden — if the parser change " +
         "is intended, rerun `sbt \"runMain graft.EmitScanOracles\"` and review the diff")
     }

@@ -6,7 +6,7 @@ import java.util.Locale
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.sources.HtmlParsers
+import graft.sources.{Fixtures, HtmlParsers}
 
 /** W3: the windowed `monotonicRepair` must reproduce the reference's
   * sequential cascade semantics EXACTLY — proven by replaying the
@@ -20,9 +20,7 @@ class TimeRepairSpec extends AnyFunSuite {
     import spark.implicits._
     // time-of-day strings exactly as the rollover fixture shows them,
     // in document order (newest first)
-    val fixture = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(
-        "/root/reference/test/scrapers/fixtures/chat_day_rollover.html")), "UTF-8")
+    val fixture = Fixtures.load("chat_day_rollover")
     val todsShown = """<span style="color:gray">([^<]+)</span>""".r
       .findAllMatchIn(fixture).map(_.group(1).trim).toSeq
     assert(todsShown.length == 9)

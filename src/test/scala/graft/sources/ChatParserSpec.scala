@@ -1,21 +1,8 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 import java.time.Instant
 import org.scalatest.funsuite.AnyFunSuite
-
-/** Golden HTML pages captured by the reference
-  * (/root/reference/test/scrapers/fixtures). Expected values below are
-  * ported from the reference's own golden tests
-  * (test/scrapers/test_chat.py, test_user.py, test_mailbox.py). */
-object Fixtures {
-  private val Dir = "/root/reference/test/scrapers/fixtures"
-  def load(name: String): String =
-    new String(Files.readAllBytes(Paths.get(s"$Dir/$name.html")), UTF_8)
-  def utc(s: String): Timestamp = Timestamp.from(Instant.parse(s))
-}
 import Fixtures._
 
 /** S2/S3 golden tests — ported from test/scrapers/test_chat.py. */

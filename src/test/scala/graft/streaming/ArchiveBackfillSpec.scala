@@ -5,7 +5,7 @@ import java.time.Instant
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.sources.Scans
+import graft.sources.{Fixtures, Scans}
 
 /** Archive backfill through the LIVE pipeline: a directory of captured
   * pages streams in bounded micro-batches (`maxFilesPerTrigger`) under
@@ -17,15 +17,11 @@ class ArchiveBackfillSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val Now = Instant.parse("2022-04-17T23:59:59Z")
 
-  private def fixture(name: String): String =
-    new String(Files.readAllBytes(java.nio.file.Paths.get(
-      s"/root/reference/test/scrapers/fixtures/$name.html")), "UTF-8")
-
   test("AvailableNow backfill: bounded batches, terminates, store == batch parse") {
     val archive = Files.createTempDirectory("backfill")
-    Files.writeString(archive.resolve("help__1.html"), fixture("chat_help"))
-    Files.writeString(archive.resolve("global__1.html"), fixture("chat_complex"))
-    Files.writeString(archive.resolve("global__2.html"), fixture("chat_long"))
+    Files.writeString(archive.resolve("help__1.html"), Fixtures.load("chat_help"))
+    Files.writeString(archive.resolve("global__1.html"), Fixtures.load("chat_complex"))
+    Files.writeString(archive.resolve("global__2.html"), Fixtures.load("chat_long"))
     val out = Files.createTempDirectory("backfillout").toString
     val msgStore = s"$out/messages"
     val docStore = s"$out/docs"

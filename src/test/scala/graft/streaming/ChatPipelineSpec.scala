@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.sources.RawPage
+import graft.sources.{Fixtures, RawPage}
 
 /** End-to-end golden run of the composed chat pipeline over the
   * reference's own fixture pages: scrape → re-scrape-with-deletion →
@@ -15,10 +15,6 @@ import graft.sources.RawPage
 class ChatPipelineSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val Now = Instant.parse("2022-04-17T23:59:59Z")
-
-  private def fixture(name: String): String =
-    new String(Files.readAllBytes(java.nio.file.Paths.get(
-      s"/root/reference/test/scrapers/fixtures/$name.html")), "UTF-8")
 
   test("pages -> parse -> diff -> dual merge sinks, deletion stamped on re-scrape") {
     import spark.implicits._
@@ -29,7 +25,7 @@ class ChatPipelineSpec extends AnyFunSuite {
 
     // the complex page, and a re-scrape of the same page with message
     // 5363775 marked deleted (redstripes + undelChat, as the site shows)
-    val page1 = fixture("chat_complex")
+    val page1 = Fixtures.load("chat_complex")
     val page2 = page1
       .replace("""<div class="chat-txt  " ><span style="color:gray">08:28:15 PM</span>""",
         """<div class="chat-txt  redstripes" ><span style="color:gray">08:28:15 PM</span>""")

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
-import graft.sources.{Mail, RawPage, UserSnapshot}
+import graft.sources.{Fixtures, Mail, RawPage, UserSnapshot}
 
 /** End-to-end soak of the composed pipelines across MANY micro-batches
   * with duplicate and out-of-order (stale re-delivered) inputs — the
@@ -22,10 +22,6 @@ class StreamingSoakSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val Now = Instant.parse("2022-04-17T23:59:59Z")
 
-  private def fixture(name: String): String =
-    new String(Files.readAllBytes(java.nio.file.Paths.get(
-      s"/root/reference/test/scrapers/fixtures/$name.html")), "UTF-8")
-
   /** Store snapshot as comparable rows, column-sorted. */
   private def snapshot(path: String): Seq[String] =
     spark.read.parquet(path).collect()
@@ -38,7 +34,7 @@ class StreamingSoakSpec extends AnyFunSuite {
     val msgStore = s"$dir/messages"
     val docStore = s"$dir/docs"
 
-    val page1 = fixture("chat_complex") // messages 5363757 + 5363775
+    val page1 = Fixtures.load("chat_complex") // messages 5363757 + 5363775
     val page2 = page1 // re-scrape with 5363775 deleted
       .replace("""<div class="chat-txt  " ><span style="color:gray">08:28:15 PM</span>""",
         """<div class="chat-txt  redstripes" ><span style="color:gray">08:28:15 PM</span>""")
