@@ -1,7 +1,11 @@
 package graft.streaming
 
 import java.time.Instant
+import java.util.concurrent.{ExecutorService, Executors}
+import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import graft.functions.Fns
 import graft.sources.{ChatMessage, RawPage, Scans}
@@ -16,9 +20,13 @@ import graft.sources.{ChatMessage, RawPage, Scans}
   *             └─ doc store: drop flags, derive mentions (F5, P3),
   *                merge-upsert (S9)
   *
-  * One linear plan per micro-batch; the reference's per-listener task
-  * fan-out becomes two merges of one deduplicated, cached batch (it
-  * guarantees no cross-sink ordering anyway, events.py:23).
+  * One linear plan per micro-batch. The diff emits each key's net change
+  * per trigger, at most one row per key, so the batch needs no
+  * deduplication. The reference's per-listener task fan-out becomes two
+  * concurrent merges of one cached batch (it guarantees no cross-sink
+  * ordering anyway, events.py:23): the batch's key collect materializes
+  * the cache, then the doc store merges on a second thread while the
+  * stream thread merges the message store.
   */
 object ChatPipeline {
 
@@ -61,13 +69,17 @@ object ChatPipeline {
     val changed = changedMessages(pages, now)
     val keys = Seq("room", "id")
     val sink: (Dataset[ChatMessage], Long) => Unit = (batch, _) => {
-      // deduplicated and cached once for both stores; an empty batch
-      // (e.g. the no-data batch that only advances the watermark) writes
-      // nothing to either
-      val rows = batch.toDF().dropDuplicates(keys).persist()
+      // cached once for both stores; an empty batch (e.g. the no-data
+      // batch that only advances the watermark) writes nothing to either
+      val rows = batch.toDF().persist()
       try {
-        MergeSink.mergeDistinct(rows, keys, msgStorePath, MergeSink.Upsert)
-        MergeSink.mergeDistinct(toDocRows(rows), keys, docStorePath, MergeSink.Upsert)
+        // materializes the cache before either merge reads it: two merges
+        // reading an unmaterialized cache would each compute the diff
+        val batchKeys = MergeSink.batchKeys(rows, keys)
+        alongside(rows.sparkSession.asInstanceOf[classic.SparkSession])(
+          MergeSink.mergeDistinct(rows, keys, msgStorePath, MergeSink.Upsert, batchKeys),
+          MergeSink.mergeDistinct(toDocRows(rows), keys, docStorePath, MergeSink.Upsert,
+            batchKeys))
       } finally rows.unpersist()
     }
     val w = changed.writeStream
@@ -91,5 +103,34 @@ object ChatPipeline {
           "durable checkpointLocation — a failed batch cannot be replayed " +
           "after restart; pass checkpoint=Some(dir) outside tests")
     checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
+  }
+
+  /** The second thread of every chat sink, shared by all queries. */
+  private lazy val mergePool: ExecutorService = Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "chat-pipeline-merge")
+    t.setDaemon(true)
+    t
+  }
+
+  /** Runs `here` on the calling thread and `there` on [[mergePool]] at
+    * once, and returns only when both have returned, so the caller may
+    * release what they read. Jobs `there` starts carry the caller's
+    * local properties: the stream's job group, which `stop()` cancels,
+    * and its query and batch ids. If either throws, the first failure is
+    * rethrown with the other attached as suppressed. */
+  private def alongside(spark: classic.SparkSession)(here: => Unit,
+      there: => Unit): Unit = {
+    val first = new AtomicReference[Throwable]
+    def attempt(body: => Unit): Option[Throwable] =
+      try { body; None }
+      catch { case e: Throwable => first.compareAndSet(null, e); Some(e) }
+    val other = SQLExecution.withThreadLocalCaptured(spark, mergePool)(attempt(there))
+    // join() waits through an interrupt: a stopping query must still not
+    // release the batch while `there` reads it
+    val failures = (attempt(here) ++ other.join()).toSeq
+    Option(first.get).foreach { e =>
+      failures.filterNot(_ eq e).foreach(e.addSuppressed)
+      throw e
+    }
   }
 }

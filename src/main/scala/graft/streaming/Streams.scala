@@ -24,13 +24,17 @@ object Streams {
 
   /** A4 `stateful_last_value_diff`, streaming form (scrapers/chat.py:158-171).
     *
-    * Key = (room, id). State = last seen message. Per batch, messages for
-    * a key are applied in event order; a message is emitted only when it
-    * differs from the stored last value. The deleted false→true
-    * transition stamps `deletedTs` with the triggering row's event time
-    * (the reference stamps wall-clock `now()` — an event-time stamp is
-    * the deterministic, replayable equivalent), and an existing
-    * `deletedTs` is carried forward onto updates.
+    * Key = (room, id). State = last seen message. Per trigger, messages
+    * for a key are applied in event order, and the key emits its net
+    * change: at most one row, its final value, and only when that differs
+    * from the state at the start of the trigger (the Update output mode's
+    * contract). A trigger that sees a message both live and deleted so
+    * emits the deleted, stamped version, and a sink needs no per-batch
+    * deduplication. The deleted false→true transition stamps `deletedTs`
+    * with the triggering row's event time (the reference stamps
+    * wall-clock `now()` — an event-time stamp is the deterministic,
+    * replayable equivalent), and an existing `deletedTs` is carried
+    * forward onto updates.
     *
     * State is bounded by event-time timeout against the watermark — the
     * scalable analog of the reference's "last 100 messages per room"
@@ -53,8 +57,8 @@ object Streams {
             state.remove()
             Iterator.empty
           } else {
-            val out = Seq.newBuilder[ChatMessage]
-            var last = state.getOption
+            val initial = state.getOption
+            var last = initial
             incoming.toSeq.sortBy(m => (m.ts.getTime, m.id)).foreach { raw =>
               // carry forward a known deletion stamp (chat.py:162-163)
               var msg = last match {
@@ -65,7 +69,6 @@ object Streams {
                 // stamp the false->true deletion transition (chat.py:164-169)
                 if (last.exists(l => !l.deleted) && msg.deleted && msg.deletedTs.isEmpty)
                   msg = msg.copy(deletedTs = Some(msg.ts))
-                out += msg
                 last = Some(msg)
               }
             }
@@ -76,7 +79,7 @@ object Streams {
             val lastTsMs = last.map(_.ts.getTime).getOrElse(0L)
             state.setTimeoutTimestamp(
               math.max(state.getCurrentWatermarkMs() + stateTtlMs, lastTsMs + stateTtlMs))
-            out.result().iterator
+            (if (last == initial) None else last).iterator
           }
       }
   }
@@ -254,14 +257,21 @@ object MergeSink {
     */
   def merge(batch: DataFrame, keys: Seq[String], path: String, mode: Mode): Unit = {
     val rows = batch.dropDuplicates(keys).persist() // replay/page-overlap safety
-    try mergeDistinct(rows, keys, path, mode) finally rows.unpersist()
+    try mergeDistinct(rows, keys, path, mode, batchKeys(rows, keys))
+    finally rows.unpersist()
   }
 
-  /** [[merge]] of a batch that holds at most one row per key. The batch
-    * is read several times, so the caller should have it cached. */
+  /** The key columns of `rows`, collected to the driver. On a cached
+    * batch this job also materializes the cache. */
+  private[streaming] def batchKeys(rows: DataFrame, keys: Seq[String]): Array[Row] =
+    rows.select(keys.map(col): _*).collect()
+
+  /** [[merge]] of a batch that holds at most one row per key, whose keys
+    * are `keyRows` ([[batchKeys]]). The batch is read several times, so
+    * the caller should have it cached. */
   private[streaming] def mergeDistinct(rows: DataFrame, keys: Seq[String], path: String,
-      mode: Mode): Unit =
-    rewrite(rows, keys, path, inserts = mode != UpdateOnly) { (state, batchKeys) =>
+      mode: Mode, keyRows: Array[Row]): Unit =
+    rewrite(rows, keys, keyRows, path, inserts = mode != UpdateOnly) { (state, batchKeys) =>
       mode match {
         case InsertIgnore => // state wins on match
           state.join(batchKeys, keys, "left_semi")
@@ -273,18 +283,17 @@ object MergeSink {
     }
 
   /** Touched-file copy-on-write shared by every merge (see the object
-    * doc). `matched(state, batchKeys)` gives the rows the batch's keys
+    * doc), of `rows` whose key columns are `batchKeys`.
+    * `matched(state, batchKeys)` gives the rows the batch's keys
     * hold after the merge, from the rows of the touched files and the
     * broadcast batch keys; every other stored row survives as it is.
     * `inserts` says whether a batch key absent from the store adds a
     * row: a batch that can only update writes nothing when it touches
     * no file. */
-  private def rewrite(rows: DataFrame, keys: Seq[String], path: String, inserts: Boolean)(
-      matched: (DataFrame, DataFrame) => DataFrame): Unit = {
+  private def rewrite(rows: DataFrame, keys: Seq[String], batchKeys: Array[Row], path: String,
+      inserts: Boolean)(matched: (DataFrame, DataFrame) => DataFrame): Unit = {
     val spark = rows.sparkSession
     recover(path)
-    val keyRows = rows.select(keys.map(col): _*)
-    val batchKeys = keyRows.collect()
     if (batchKeys.isEmpty) return
     if (!Files.exists(Paths.get(path))) {
       if (inserts) writeSnapshot(rows.coalesce(1), path)
@@ -303,7 +312,8 @@ object MergeSink {
     def read(files: Seq[Path]): DataFrame =
       if (files.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
       else spark.read.schema(schema).parquet(files.map(_.toString): _*)
-    val batchKeyRel = broadcast(spark.createDataFrame(batchKeys.toSeq.asJava, keyRows.schema))
+    val batchKeyRel = broadcast(spark.createDataFrame(batchKeys.toSeq.asJava,
+      StructType(keys.map(rows.schema(_)))))
     def survivors(files: Seq[Path]): DataFrame = read(files).join(batchKeyRel, keys, "left_anti")
     val hit = read(files)
       .select(keys.map(col) :+ col("_metadata.file_path"): _*)
@@ -372,7 +382,7 @@ object MergeSink {
     */
   def mergeStruct(batch: DataFrame, keys: Seq[String], path: String, structCol: String): Unit = {
     val deduped = batch.dropDuplicates(keys).persist()
-    try rewrite(deduped, keys, path, inserts = true) { (state, _) =>
+    try rewrite(deduped, keys, batchKeys(deduped, keys), path, inserts = true) { (state, _) =>
       val others = state.columns.filterNot(c => keys.contains(c) || c == structCol).toSeq
       val fields = state.schema(structCol).dataType.asInstanceOf[StructType].fieldNames.toSeq
       val st = state.select(keys.map(col) ++ others.map(c => col(c).as(s"_s_$c")) :+

@@ -21,7 +21,8 @@ object ChatPages {
       s"""class="emb"></div> <a href="javascript:${if (deleted) "undelChat" else "delChat"}""" +
       s"""($id)">x</a><br><span style="color:#222">message $id</span></div>"""
 
-  /** A page of (id, posted at) messages, newest first as the site shows them. */
-  def page(msgs: Seq[(Long, Instant)]): String =
-    msgs.sortBy(-_._1).map { case (id, at) => block(id, at) }.mkString("\n")
+  /** A page of (id, posted at) messages, newest first as the site shows
+    * them; the ids in `deleted` show as deleted. */
+  def page(msgs: Seq[(Long, Instant)], deleted: Set[Long] = Set.empty): String =
+    msgs.sortBy(-_._1).map { case (id, at) => block(id, at, deleted(id)) }.mkString("\n")
 }
