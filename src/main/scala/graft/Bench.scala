@@ -1,5 +1,26 @@
 package graft
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import scala.jdk.CollectionConverters._
+
+/** Times every registered query (or the ones named as arguments): each
+  * query runs 2–6 times back to back, isolated from the others, and its
+  * fastest run is its time. The record also carries, per query, the
+  * generated classes its first and its fastest run compiled.
+  *
+  * Back-to-back min-of-N hides cross-query eviction from Spark's
+  * generated-class cache: a query's second run always finds its own
+  * classes cached, even when a mixed stream of queries would have
+  * evicted them between two calls. The `first` codegen counts show what
+  * a query compiles with a cold cache; `perfbench`'s `registry_floor`,
+  * which interleaves queries, is where eviction shows.
+  */
 object Bench {
+  /** One isolated run: wall time (+inf when it failed), the generated
+    * classes it compiled and their compile time. */
+  final case class Run(wallS: Double, codegenClasses: Long, codegenCompileS: Double)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.get("graft-bench")
@@ -33,7 +54,9 @@ object Bench {
     // clearCache misses: localCheckpoint blocks live in the block
     // manager, not the catalog.
     def run(name: String, fn: (org.apache.spark.sql.SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): Double = {
+        org.apache.spark.sql.DataFrame): Run = {
+      val cc0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val cg0 = CodeGenerator.compileTime
       val t0 = System.nanoTime()
       // a failed run returns +inf so the min-of-N below can never let a
       // fast FAILURE displace a valid measurement (a transient error's
@@ -48,9 +71,11 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           Double.PositiveInfinity
         }
+      val out = Run(dt, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - cc0,
+        (CodeGenerator.compileTime - cg0) / 1e9)
       Sessions.isolate(spark)
       System.gc() // don't charge the next run for this run's garbage
-      dt
+      out
     }
     // Host-contention de-noising: the recorded number is the MIN of two
     // fully-isolated runs (three when still >0.5 s — r15 measured ±50%
@@ -63,8 +88,8 @@ object Bench {
     // compute (state is wiped between runs — only JVM/JIT warm-up
     // carries, which is exactly the noise-floor a steady-state
     // measurement should exclude).
-    val sampled = picked.toSeq.sortBy(_._1).map { case (name, fn) =>
-      var samples = List(run(name, fn), run(name, fn))
+    val runs = picked.toSeq.sortBy(_._1).map { case (name, fn) =>
+      var samples = Vector(run(name, fn), run(name, fn))
       // adaptive sampling for the noisy tail: queries past the 0.5 s
       // scheduling floor get up to TWO extra isolated runs (r18: the
       // host's ±40% per-run swing is widest exactly on the 0.8–1.5 s
@@ -78,12 +103,15 @@ object Bench {
       // steady-state measurement should exclude, per the paragraph
       // above; min-of-6 closes most of that gap without re-timing the
       // whole registry)
-      while (samples.min > 0.5 && samples.size < 4)
-        samples ::= run(name, fn)
-      while (samples.min > 0.8 && samples.size < 6)
-        samples ::= run(name, fn)
-      name -> samples.filterNot(_.isInfinite).sorted
+      def best = samples.map(_.wallS).min
+      while (best > 0.5 && samples.size < 4)
+        samples :+= run(name, fn)
+      while (best > 0.8 && samples.size < 6)
+        samples :+= run(name, fn)
+      name -> samples
     }
+    val sampled = runs.map { case (name, rs) =>
+      name -> rs.map(_.wallS).filterNot(_.isInfinite).sorted.toList }
     val results = sampled.map { case (name, ss) =>
       // every run failed → record the parseable -1.0 sentinel ("Infinity"
       // would break the driver's json.load for the whole record)
@@ -113,8 +141,25 @@ object Bench {
     val failedArr = results.collect { case (k, v) if v < 0 => s"\"$k\"" }
       .mkString("[", ",", "]")
     val total = results.map(_._2).filter(_ >= 0).sum
+    // per query, its FIRST run (what a query pays when its classes are
+    // not cached) and its FASTEST run (the one its time is taken from)
+    def firstFastest(field: Run => String) = runs.map { case (k, rs) =>
+      s""""$k":{"first":${field(rs.head)},"fastest":${field(rs.minBy(_.wallS))}}"""
+    }.mkString("{", ",", "}")
+    val classesJson = firstFastest(_.codegenClasses.toString)
+    val compileJson = firstFastest(r => f"${r.codegenCompileS}%.3f")
+    // the JVM's footprint after the sweep: metaspace holds every cached
+    // generated class, so it grows with the codegen cache's working set
+    val metaspaceMb = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
+      .asScala.filter(_.getName == "Metaspace").map(_.getUsage.getUsed).sum / 1048576.0
+    val rssMb = scala.util.Try {
+      val src = scala.io.Source.fromFile("/proc/self/status")
+      try src.getLines().collectFirst { case l if l.startsWith("VmRSS:") =>
+        l.split("\\s+")(1).toDouble / 1024 }.get
+      finally src.close()
+    }.getOrElse(-1.0)
     val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","total_min":$total%.3f,"total_median":$totalMedian%.3f,"samples":$samplesJson,"queries":$qs,"failed":$failedArr,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","total_min":$total%.3f,"total_median":$totalMedian%.3f,"samples":$samplesJson,"queries":$qs,"failed":$failedArr,"codegen_classes":$classesJson,"codegen_compile_s":$compileJson,"metaspace_mb":$metaspaceMb%.1f,"rss_mb":$rssMb%.1f,"sf":"$sfDir"}"""
     println(line)
     // The full record above is ~4 KB at the 111-query registry; a log
     // tail capture (the driver keeps the last ~2 KB of stdout) chops its

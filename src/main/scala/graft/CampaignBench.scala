@@ -76,7 +76,10 @@ object CampaignBench {
     }
 
     val allQueries = Families.flatMap(_._2)
-    // warm-up pass (uncounted): JIT + codegen cache
+    // warm-up pass (uncounted): JIT, and every family's generated classes
+    // into the codegen cache. The cache keeps them only because
+    // Sessions.builder sizes it for the registry; at Spark's default of
+    // 100 entries the families evict each other's classes every round.
     allQueries.foreach { q => runOne(q); wipe() }
 
     val iso = scala.collection.mutable.Map.empty[String, List[Double]]

@@ -3,6 +3,16 @@ import org.apache.spark.sql.SparkSession
 
 /** One place for engine session construction so Verify, Bench, and the
   * test suites all run with identical semantics-relevant configuration.
+  *
+  * One setting of [[builder]] is not per session: the size of Spark's
+  * generated-class cache (`spark.sql.codegen.cache.maxEntries`). The
+  * cache is a static field of `CodeGenerator`, sized from `SQLConf.get`
+  * when a JVM first touches that object, and never resized. So it takes
+  * the size set here only if the JVM's first code generation runs after
+  * a session from [[builder]] exists. A JVM whose sessions are built
+  * some other way, or that generates code before the first such session
+  * (an encoder or a projection built without a session), keeps Spark's
+  * default of 100 entries for its whole life.
   */
 object Sessions {
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -80,6 +90,19 @@ object Sessions {
       .config("spark.sql.streaming.checkpointFileManagerClass",
         "org.apache.spark.sql.execution.streaming.checkpointing." +
           "FileSystemBasedCheckpointFileManager")
+      // Spark keeps generated classes in one JVM-wide LRU cache, 100
+      // entries by default. A mixed stream of queries evicts each query's
+      // classes before it runs again, so each call recompiles them. One
+      // pass over the sf0.01 registry compiles 2,297 distinct classes
+      // (graft.Bench, the first runs' codegen_classes summed); 4,000 holds
+      // them with room for growth and for a stage compiled under a second
+      // codegen stage id, at +21 MB of metaspace after the pass. In
+      // perfbench's registry_floor (traced, seed 902, 4 vCPUs) a timed
+      // pass compiled 119 classes in 1.76 s before and 0.67 in 0.01 s
+      // after; batch_s median 3.42 -> 2.33 s over 20 interleaved pairs
+      // (docs/SCALE.md, "The generated-class cache"). Read once per JVM:
+      // see the scaladoc above.
+      .config("spark.sql.codegen.cache.maxEntries", "4000")
       // engine extensions: native expressions (graft_dot, …)
       .config("spark.sql.extensions", "graft.expressions.GraftExtensions")
       .config("spark.ui.enabled", "false")

@@ -78,6 +78,17 @@ class EntrySpec extends AnyFunSuite {
     assert(warns.isEmpty, s"${warns.size} function registry WARNs, first: ${warns.headOption}")
   }
 
+  test("README's graft.expressions row counts and names every kernel of the table") {
+    val src = scala.io.Source.fromFile("README.md", "UTF-8")
+    val row = try src.getLines().find(_.startsWith("| `graft.expressions` |")) finally src.close()
+    assert(row.isDefined, "README.md has no `graft.expressions` row")
+    val named = "`(graft_[a-z_]+)`".r.findAllMatchIn(row.get).map(_.group(1)).toSet
+    val missing = GraftExtensions.kernels.map(_.name).filterNot(named)
+    assert(missing.isEmpty, s"kernels absent from README's graft.expressions row: $missing")
+    assert(row.get.contains(s"| ${GraftExtensions.kernels.size} native Catalyst kernels"),
+      s"README's row does not state ${GraftExtensions.kernels.size} kernels")
+  }
+
   test("a query name declared in two modules fails the registry build, naming it") {
     val q = Query((s, _) => s.emptyDataFrame, "SELECT 1")
     val e = intercept[IllegalArgumentException] {

@@ -5,7 +5,13 @@ import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
 /** One shared local session for all Spark-backed specs (saves ~6 s of
-  * startup per suite; sbt forks one JVM for the whole test run). */
+  * startup per suite; sbt forks one JVM for the whole test run).
+  *
+  * Every suite takes its session from here, and no suite generates code
+  * before it, so the JVM's codegen cache takes `Sessions.builder`'s size
+  * (see [[Sessions]]). Code that generated code before this session
+  * existed would leave the cache at Spark's default for the whole run,
+  * and `CodegenCacheSpec` would fail. */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = Sessions.builder("graft-test")
