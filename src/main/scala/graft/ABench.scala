@@ -18,13 +18,7 @@ object ABench {
     val Array(dir, name) = args.take(2)
     val reps = if (args.length > 2) args(2).toInt else 5
     val fn = SparkEntry.queries(name)
-    def run(): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      Sessions.isolate(spark)
-      dt
-    }
+    def run(): Double = Measure.query(spark, fn, dir).wallS
     // axis: default = the adopted coalesce floor vs Spark's default;
     // override with <key> <valueA> <valueB> as args 4-6
     val (key, va, vb) =
@@ -41,13 +35,7 @@ object ABench {
       confA(); a += run()
       confB(); b += run()
     }
-    // even sizes average the two middle samples — the Bench.scala
-    // median rule; upper-of-two would bias every A/B read here
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted
-      if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2.0
-    }
-    def stats(xs: Seq[Double]) = f"min ${xs.min}%.3f med ${median(xs)}%.3f  [${xs.map(x => f"$x%.2f").mkString(" ")}]"
+    def stats(xs: Seq[Double]) = f"min ${xs.min}%.3f med ${Bench.median(xs)}%.3f  [${xs.map(x => f"$x%.2f").mkString(" ")}]"
     println(s"[abench] $name A($key=$va): ${stats(a.toSeq)}")
     println(s"[abench] $name B($key=$vb): ${stats(b.toSeq)}")
     spark.stop()

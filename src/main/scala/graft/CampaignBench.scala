@@ -60,27 +60,14 @@ object CampaignBench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val rounds = args.headOption.map(_.toInt).getOrElse(3)
     val spark = Sessions.get("graft-campaign-bench")
-    Tables.names.foreach(n =>
-      try Tables.table(spark, sfDir, n).count()
-      catch { case scala.util.control.NonFatal(_) => () })
-
-    def wipe(): Unit = {
-      Sessions.isolate(spark)
-      System.gc()
-    }
-    def runOne(name: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    Bench.warmUp(spark, sfDir)
 
     val allQueries = Families.flatMap(_._2)
     // warm-up pass (uncounted): JIT, and every family's generated classes
     // into the codegen cache. The cache keeps them only because
     // Sessions.builder sizes it for the registry; at Spark's default of
     // 100 entries the families evict each other's classes every round.
-    allQueries.foreach { q => runOne(q); wipe() }
+    allQueries.foreach(q => Measure.query(spark, SparkEntry.queries(q), sfDir))
 
     val iso = scala.collection.mutable.Map.empty[String, List[Double]]
     val camp = scala.collection.mutable.Map.empty[String, List[Double]]
@@ -88,17 +75,16 @@ object CampaignBench {
       // ISOLATED: flag off, wipe between queries (per-query bench
       // semantics — the staged relations/artifacts re-price per query)
       spark.conf.unset(Models.Flag)
-      allQueries.foreach { q =>
-        iso(q) = runOne(q) :: iso.getOrElse(q, Nil); wipe()
-      }
+      allQueries.foreach(q =>
+        iso(q) = Measure.query(spark, SparkEntry.queries(q), sfDir).wallS :: iso.getOrElse(q, Nil))
       // CAMPAIGN: one session epoch per family, flag on, no wipes —
       // the first consumer builds the stage/artifact, the rest ride
-      // it; wipe only at each family-epoch end so families don't
+      // it; the family's last query wipes, so families don't
       // subsidize each other
       spark.conf.set(Models.Flag, "true")
       Families.foreach { case (_, qs) =>
-        qs.foreach { q => camp(q) = runOne(q) :: camp.getOrElse(q, Nil) }
-        wipe()
+        qs.foreach(q => camp(q) = Measure.query(spark, SparkEntry.queries(q), sfDir,
+          isolate = q == qs.last).wallS :: camp.getOrElse(q, Nil))
       }
       spark.conf.unset(Models.Flag)
     }
@@ -118,13 +104,7 @@ object CampaignBench {
       f"""{"metric":"campaign_vs_isolated","isolated_sec":$isoTotal%.3f,"campaign_sec":$campTotal%.3f,"saving_pct":${100 * (isoTotal - campTotal) / isoTotal}%.1f,"rounds":$rounds,"families":${familyBlocks.map(_._3).mkString("{", ",", "}")},"sf":"$sfDir"}"""
     println(line)
     System.err.println(line)
-    val canonical =
-      try java.nio.file.Paths.get(sfDir).toRealPath() ==
-        java.nio.file.Paths.get("/root/testdata/sf0.1").toRealPath()
-      catch { case scala.util.control.NonFatal(_) => sfDir == "/root/testdata/sf0.1" }
-    if (canonical && java.nio.file.Files.exists(java.nio.file.Paths.get("build.sbt")))
-      java.nio.file.Files.write(java.nio.file.Paths.get("CAMPAIGN_BENCH.json"),
-        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    Bench.recordCanonical("CAMPAIGN_BENCH.json", sfDir, line)
     spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
@@ -21,11 +20,7 @@ class CodegenCacheSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private val Dir = "/root/testdata/sf0.01"
 
   /** The generated classes `body` compiles. */
-  private def compiled(body: => Unit): Long = {
-    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    body
-    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
-  }
+  private def compiled(body: => Unit): Long = Measure(spark)(body)._2.codegenClasses
 
   /** 120 tiny queries whose code no other test generates: each inlines
     * its own long literal from a random `salt`, so on its first run each

@@ -1,7 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Registry-wide scale guard #3: building a query's DataFrame must be
@@ -83,28 +81,15 @@ class ConstructionJobSweepSpec extends AnyFunSuite {
     "lsh_vs_exact_recall")
 
   test("query construction is lazy (no jobs before the first action)") {
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    }
-    def drain(): Unit = org.apache.spark.GraftBusDrain.drain(spark.sparkContext)
     // Warm the per-session reader memo first: the FIRST access to each
     // table runs its one FileIndex/schema job (Tables.table scaladoc) —
     // a once-per-session catalog cost, not a per-query eagerness bug.
     Tables.names.foreach(n => Tables.table(spark, Dir, n))
-    drain()
     val offenders = TestSpark.sweepRegistry { (name, fn) =>
-      drain()
-      jobs.set(0)
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        fn(spark, Dir) // construct ONLY — no action
-        drain()
-        val n = jobs.get()
-        if (n > 0 && !EagerByDesign.contains(name))
-          Seq(s"$name: $n job(s) at construction")
-        else Nil
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val n = Measure(spark)(fn(spark, Dir))._2.jobs.size // construct ONLY — no action
+      if (n > 0 && !EagerByDesign.contains(name))
+        Seq(s"$name: $n job(s) at construction")
+      else Nil
     }
     assert(offenders.isEmpty,
       "\nQueries running Spark jobs at CONSTRUCTION time (eager action in the" +

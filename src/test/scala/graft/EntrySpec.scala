@@ -89,6 +89,17 @@ class EntrySpec extends AnyFunSuite {
       s"README's row does not state ${GraftExtensions.kernels.size} kernels")
   }
 
+  test("every runMain graft.<X> the README and the verify skill notes name is a main") {
+    val named = Seq("README.md", ".claude/skills/verify/SKILL.md").flatMap { doc =>
+      val text = java.nio.file.Files.readString(java.nio.file.Paths.get(doc))
+      """runMain graft\.(\w+(?:\.\w+)*)""".r.findAllMatchIn(text).map(m => doc -> m.group(1))
+    }.distinct
+    assert(named.exists(_._2 == "Bench"), s"no runMain graft.Bench found: $named")
+    val broken = named.filterNot { case (_, main) => scala.util.Try(
+      Class.forName(s"graft.$main$$").getMethod("main", classOf[Array[String]])).isSuccess }
+    assert(broken.isEmpty, s"documented mains that do not resolve: $broken")
+  }
+
   test("a query name declared in two modules fails the registry build, naming it") {
     val q = Query((s, _) => s.emptyDataFrame, "SELECT 1")
     val e = intercept[IllegalArgumentException] {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Empirical scaling evidence for the dedup family — the round-6 ask
@@ -12,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * data is sf0.01 → sf0.1). For each query the spec tallies SHUFFLE
   * RECORDS WRITTEN across every stage of the query's jobs (including
   * checkpoint/persist materializations, which per-plan metrics would
-  * miss) via a SparkListener, then asserts growth ≤ g^1.7 where
+  * miss) through `Measure`, then asserts growth ≤ g^1.7 where
   * g = corpus growth — comfortably above honest super-linear effects
   * (near-dup pair structure grows slightly faster than docs; fixed
   * per-job partition floors bias the ratio DOWN, not up) and far below
@@ -252,39 +251,8 @@ class ScalingSpec extends AnyFunSuite {
       "user_path_ngrams")
   private val MaxExponent = 1.7
 
-  private case class Probe(secs: Double, shuffleRows: Long)
-
-  private def measure(name: String, dir: String): Probe =
-    measureFn(SparkEntry.queries(name), dir)
-
-  private def measureFn(
-      fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-      dir: String): Probe = {
-    val tally = new java.util.concurrent.atomic.AtomicLong
-    val listener = new SparkListener {
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-        val m = s.stageInfo.taskMetrics
-        if (m != null) tally.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-      }
-    }
-    // flush stage events still in flight from earlier suites BEFORE
-    // attaching the tally — a prior query's late onStageCompleted would
-    // otherwise inflate this query's row count (observed: +27% on
-    // corpus_pipeline when run mid-suite vs isolated)
-    org.apache.spark.GraftBusDrain.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val t0 = System.nanoTime()
-      fn(spark, dir).write.format("noop").mode("overwrite").save()
-      val secs = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.GraftBusDrain.drain(spark.sparkContext)
-      Probe(secs, tally.get())
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    }
-  }
+  private def measure(name: String, dir: String): Measure.Run =
+    Measure.query(spark, SparkEntry.queries(name), dir)
 
   test("dedup-family shuffle volume grows sub-quadratically from sf0.01 to sf0.1") {
     val growth = Tables.documents(spark, SfBig).count().toDouble /
@@ -294,10 +262,10 @@ class ScalingSpec extends AnyFunSuite {
     val rows = Queries.map { q =>
       val small = measure(q, SfSmall)
       val big = measure(q, SfBig)
-      val ratio = big.shuffleRows.toDouble / math.max(1L, small.shuffleRows)
+      val ratio = big.shuffleWriteRecords.toDouble / math.max(1L, small.shuffleWriteRecords)
       System.err.println(
-        f"[scaling] $q%-24s sf0.01: ${small.shuffleRows}%9d rows ${small.secs}%6.2f s | " +
-          f"sf0.1: ${big.shuffleRows}%9d rows ${big.secs}%6.2f s | growth $ratio%6.1fx (bound $bound%5.1fx)")
+        f"[scaling] $q%-24s sf0.01: ${small.shuffleWriteRecords}%9d rows ${small.wallS}%6.2f s | " +
+          f"sf0.1: ${big.shuffleWriteRecords}%9d rows ${big.wallS}%6.2f s | growth $ratio%6.1fx (bound $bound%5.1fx)")
       assert(ratio <= bound,
         s"$q shuffle rows grew ${ratio}x for ${growth}x data — super-quadratic-risk " +
           s"(bound ${bound}x); an all-pairs regression would show ~${growth * growth}x")
@@ -308,7 +276,7 @@ class ScalingSpec extends AnyFunSuite {
       System.err.println("|---|---|---|---|---|---|")
       rows.foreach { case (q, s, b, r) =>
         System.err.println(
-          f"| `$q` | ${s.shuffleRows}%,d | ${s.secs}%.2f | ${b.shuffleRows}%,d | ${b.secs}%.2f | ${r}%.1fx |")
+          f"| `$q` | ${s.shuffleWriteRecords}%,d | ${s.wallS}%.2f | ${b.shuffleWriteRecords}%,d | ${b.wallS}%.2f | ${r}%.1fx |")
       }
     }
   }
@@ -348,12 +316,12 @@ class ScalingSpec extends AnyFunSuite {
       // candidate growth, linear; docs/SCALE.md states the rule)
       val big =
         if (q == "ann_lsh_bucket_top1")
-          measureFn(graft.operators.Similarity.annLshTop1WithBits(20), sfx1)
+          Measure.query(spark, graft.operators.Similarity.annLshTop1WithBits(20), sfx1)
         else measure(q, sfx1)
-      val ratio = big.shuffleRows.toDouble / math.max(1L, small.shuffleRows)
+      val ratio = big.shuffleWriteRecords.toDouble / math.max(1L, small.shuffleWriteRecords)
       System.err.println(
-        f"[scaling-sf1] $q%-24s sf0.1: ${small.shuffleRows}%9d rows ${small.secs}%6.2f s | " +
-          f"sfx1: ${big.shuffleRows}%9d rows ${big.secs}%6.2f s | growth $ratio%6.1fx (bound $bound%5.1fx)")
+        f"[scaling-sf1] $q%-24s sf0.1: ${small.shuffleWriteRecords}%9d rows ${small.wallS}%6.2f s | " +
+          f"sfx1: ${big.shuffleWriteRecords}%9d rows ${big.wallS}%6.2f s | growth $ratio%6.1fx (bound $bound%5.1fx)")
       assert(ratio <= bound,
         s"$q shuffle rows grew ${ratio}x for ${growth}x data — super-quadratic-risk " +
           s"(bound ${bound}x)")
@@ -363,7 +331,7 @@ class ScalingSpec extends AnyFunSuite {
     System.err.println("|---|---|---|---|---|---|")
     rows.foreach { case (q, s, b, r) =>
       System.err.println(
-        f"| `$q` | ${s.shuffleRows}%,d | ${s.secs}%.2f | ${b.shuffleRows}%,d | ${b.secs}%.2f | ${r}%.1fx |")
+        f"| `$q` | ${s.shuffleWriteRecords}%,d | ${s.wallS}%.2f | ${b.shuffleWriteRecords}%,d | ${b.wallS}%.2f | ${r}%.1fx |")
     }
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
 
@@ -11,7 +10,8 @@ import scala.jdk.CollectionConverters._
   * before it, so the JVM's codegen cache takes `Sessions.builder`'s size
   * (see [[Sessions]]). Code that generated code before this session
   * existed would leave the cache at Spark's default for the whole run,
-  * and `CodegenCacheSpec` would fail. */
+  * and `CodegenCacheSpec` would fail. Specs count the jobs, stages and
+  * generated classes a body runs through [[Measure]], as the benches do. */
 object TestSpark {
   lazy val spark: SparkSession = {
     val s = Sessions.builder("graft-test")
@@ -45,30 +45,6 @@ object TestSpark {
       catch { case scala.util.control.NonFatal(e) => Seq(s"$name: ${e.getClass.getName}: ${e.getMessage}") }
       finally Sessions.isolate(spark)
     }
-
-  /** The descriptions of the Spark jobs that start while `body` runs,
-    * in start order. A marker job run after `body` flushes the listener
-    * bus, which delivers events in the order they were posted. */
-  def jobDescriptions[T](body: => T): (T, Seq[String]) = {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        seen.add(Option(js.properties).flatMap(p =>
-          Option(p.getProperty("spark.job.description"))).getOrElse(""))
-    }
-    val marker = s"jobDescriptions marker ${java.util.UUID.randomUUID()}"
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      sc.setJobDescription(marker)
-      try spark.range(1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 60L * 1000000000L
-      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(marker), "the listener bus did not deliver the marker job")
-      (out, seen.asScala.toSeq.filterNot(_ == marker))
-    } finally sc.removeSparkListener(listener)
-  }
 
   /** The messages of the WARN events the logger named `logger` emits
     * while `body` runs, seen through a log4j2 appender on the root

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.time.Instant
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
-import graft.TestSpark
+import graft.{Measure, TestSpark}
 import graft.sources.{Fixtures, Scans}
 
 /** Archive backfill through the LIVE pipeline: a directory of captured
@@ -59,7 +59,7 @@ class ArchiveBackfillSpec extends AnyFunSuite {
       f.toFile.setLastModified(posted.toEpochMilli + s * 1000L + r)
     }
     val out = Files.createTempDirectory("backfill-wide-out").toString
-    val (q, jobs) = TestSpark.jobDescriptions {
+    val (q, run) = Measure(spark) {
       val q = ChatPipeline.start(
         Scans.streamArchive(spark, archive.toString, maxFilesPerTrigger = 40), Now,
         s"$out/messages", s"$out/docs", trigger = Some(Trigger.AvailableNow()))
@@ -68,7 +68,7 @@ class ArchiveBackfillSpec extends AnyFunSuite {
       q
     }
     assert(q.recentProgress.count(_.numInputRows > 0) == 2, "one trigger per 40 files")
-    val listing = jobs.filter(_.startsWith("Listing leaf files"))
+    val listing = run.jobs.filter(_.startsWith("Listing leaf files"))
     assert(listing.isEmpty, s"listing jobs ran: $listing")
     assert(spark.read.parquet(s"$out/messages").count() == 80)
   }

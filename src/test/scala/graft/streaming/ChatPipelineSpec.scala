@@ -3,14 +3,12 @@ package graft.streaming
 import java.nio.file.{Files, Path}
 import java.sql.Timestamp
 import java.time.Instant
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.hadoop.fs.FileSystem
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException}
 import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.{NioLocalFileSystem, TestSpark}
+import graft.{Measure, NioLocalFileSystem, TestSpark}
 import graft.sources.{Fixtures, RawPage}
 
 /** End-to-end golden run of the composed chat pipeline over the
@@ -149,23 +147,18 @@ class ChatPipelineSpec extends AnyFunSuite {
     try {
       in.addData(fetch(5))
       q.processAllAvailable()
+      val (_, run) = Measure(spark) {
+        in.addData(fetch(7, deleted = Set(2L)))
+        q.processAllAvailable()
+      }
       // a stage that reads shuffled rows into the state store computes
       // the diff; a stage that reads the cached batch reads no shuffle
-      val diffRuns = new AtomicInteger
-      val listener = new SparkListener {
-        override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-          if (e.stageInfo.rddInfos.exists(_.name == "StateStoreRDD") &&
-            e.stageInfo.taskMetrics.shuffleReadMetrics.recordsRead > 0) diffRuns.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val (_, jobs) =
-        try TestSpark.jobDescriptions {
-          in.addData(fetch(7, deleted = Set(2L)))
-          q.processAllAvailable()
-        } finally spark.sparkContext.removeSparkListener(listener)
+      val diffRuns = run.stages.count(s =>
+        s.rddNames.contains("StateStoreRDD") && s.shuffleReadRecords > 0)
+      val jobs = run.jobs
       val batch = q.recentProgress.filter(_.numInputRows > 0).last.batchId
       val batchJobs = jobs.filter(_.endsWith(s"batch = $batch"))
-      assert(diffRuns.get == 1, s"the diff ran ${diffRuns.get} times")
+      assert(diffRuns == 1, s"the diff ran $diffRuns times")
       assert(batchJobs.size <= 9, s"${batchJobs.size} jobs in batch $batch")
       // jobs of the second merge thread carry the stream's description too
       assert(jobs.forall(_.contains(s"runId = ${q.runId}")), s"jobs outside the stream: $jobs")
