@@ -117,12 +117,13 @@ object Sessions {
 
   /** Drops what one query run leaves in the session, so the next run
     * pays its own full cost: cached relations, persisted RDDs (which
-    * cover the localCheckpoint blocks `clearCache` misses) and trained
+    * cover the localCheckpoint blocks `clearCache` misses, dropped
+    * without Spark's per-RDD truncated-lineage WARN) and trained
     * model artifacts — campaign-only while [[Models.Flag]] is off, but a
     * run must never ride an earlier run's training whatever the conf. */
   private[graft] def isolate(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    spark.sparkContext.getPersistentRDDs.values.foreach(org.apache.spark.rdd.GraftUnpersist(_))
     Models.invalidate(spark)
   }
 

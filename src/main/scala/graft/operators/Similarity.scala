@@ -63,15 +63,11 @@ object Similarity {
        |      list_transform(range(1, $Dim + 1), i -> $a[i] * $b[i])),
        |    (acc, x) -> acc + x)""".stripMargin
 
-  private def h60(s: String): Long =
-    java.lang.Long.parseLong(
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(15), 16)
   /** Plane q, component i — values like 0.123 are exact in both engines:
     * Scala's k/1000.0 and the SQL decimal literal both resolve to the
     * correctly-rounded double. */
   private def planes(q: Int): IndexedSeq[Double] =
-    (1 to Dim).map(i => (h60(s"$q,$i") % 2001 - 1000) / 1000.0)
+    (1 to Dim).map(i => (Dedup.h60(s"$q,$i") % 2001 - 1000) / 1000.0)
   private def planeLit(q: Int): String =
     planes(q).mkString("array(", "D, ", "D)")
   private def planeDuck(q: Int): String =

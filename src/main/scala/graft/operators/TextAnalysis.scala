@@ -537,23 +537,22 @@ object TextAnalysis {
           .otherwise(3L)))
   }
 
-  /** Conf knob for the spelling heuristic: documents-scan size (bytes)
-    * at which fluency_buckets switches to the two-phase rank. Default
-    * 8 GiB — at harness row widths that is ~10⁷ docs, the regime where
-    * a dominant language's single ntile partition stops fitting one
-    * task comfortably; the harness SFs stay far below it, so the
-    * registered query keeps the (faster at small scale) window plan. */
-  private[operators] val FluencyTwoPhaseConf = "graft.fluency.twophase.minBytes"
+  /** Documents-scan size (bytes) at which fluency_buckets switches to
+    * the two-phase rank: 8 GiB — at harness row widths that is ~10⁷
+    * docs, the regime where a dominant language's single ntile
+    * partition stops fitting one task comfortably; the harness SFs stay
+    * far below it, so the registered query keeps the (faster at small
+    * scale) window plan. */
+  private[operators] val FluencyTwoPhaseMinBytes = 8L << 30
 
-  val fluencyBuckets: Q = (spark, dir) => {
-    val fl = bigramFluency(spark, dir)
-    val threshold = spark.conf.getOption(FluencyTwoPhaseConf)
-      .map(_.toLong).getOrElse(8L << 30)
-    val scanBytes = Tables.documents(spark, dir)
-      .queryExecution.optimizedPlan.stats.sizeInBytes
-    if (scanBytes >= threshold) fluencyTerciledTwoPhase(fl)
+  /** The tercile spelling for a documents scan of `scanBytes`. */
+  private[operators] def fluencyTerciled(fl: DataFrame, scanBytes: BigInt): DataFrame =
+    if (scanBytes >= FluencyTwoPhaseMinBytes) fluencyTerciledTwoPhase(fl)
     else fluencyTerciledWindow(fl)
-  }
+
+  val fluencyBuckets: Q = (spark, dir) =>
+    fluencyTerciled(bigramFluency(spark, dir),
+      Tables.documents(spark, dir).queryExecution.optimizedPlan.stats.sizeInBytes)
   val fluencyBucketsSql: String =
     s"""WITH bi AS (
        |  SELECT doc_id, lang, p.w1 AS w1, p.w2 AS w2 FROM (

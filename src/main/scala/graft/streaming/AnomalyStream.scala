@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** An event entering the volume tracker. */
 final case class VolObs(eventType: String, ts: Timestamp)
@@ -31,18 +30,15 @@ final case class DailyDelta(eventType: String, day: Timestamp, dn: Long)
   * Delivery: [[daily]] is the exactly-once-source spelling;
   * at-least-once REDELIVERY would double-count it. For an
   * at-least-once keyed CDC source, [[trackedDeltas]] is the
-  * replay-gated spelling under [[Scd2Stream]]'s ordered-delivery
-  * contract: per event_type the tracker advances a (ts, event_id)
-  * watermark, skips anything at or before it as an idempotent replay,
-  * and emits per-batch daily-count DELTAS — a monoid, so the
-  * downstream rollup reconstructs the exact daily histogram under
-  * arbitrary prefix redelivery ([[AnomalyStreamSpec]] proves
-  * replay ≡ batch).
+  * replay-gated spelling ([[Streams.replayGated]], keyed by event_type):
+  * it emits per-batch daily-count DELTAS — a monoid, so the downstream
+  * rollup reconstructs the exact daily histogram under arbitrary prefix
+  * redelivery ([[AnomalyStreamSpec]] proves replay ≡ batch).
   *
   * Scale shape: complete-mode state rows ≤ types × days
   * (calendar-bounded — the batch op's own histogram bound);
-  * tracked-gate state is ONE watermark tuple per event_type; map-side
-  * combinable per batch.
+  * tracked-gate state is ONE (watermark, count) tuple per event_type;
+  * map-side combinable per batch.
   */
 object AnomalyStream {
 
@@ -56,9 +52,6 @@ object AnomalyStream {
   def flags(daily: DataFrame): DataFrame =
     graft.operators.Windows.madOfDaily(daily)
 
-  private def micros(ts: Timestamp): Long =
-    ts.toInstant.getEpochSecond * 1000000L + ts.toInstant.getNano / 1000L
-
   /** UTC day start of `ts` — the JVM spelling of the batch
     * `date_trunc('DAY', ts)` under the session time zone Sessions.scala
     * pins to UTC. Pinned to UTC explicitly (the RetentionStream
@@ -70,32 +63,16 @@ object AnomalyStream {
       .ofInstant(ts.toInstant, java.time.ZoneOffset.UTC)
       .atStartOfDay(java.time.ZoneOffset.UTC).toInstant)
 
-  /** (lastTsMicros, lastId) per event_type — the replay watermark. */
-  private type St = (Long, Long)
-
-  /** Replay-gated daily-count deltas for an at-least-once ORDERED
-    * keyed CDC source — see the delivery contract above. */
+  /** Replay-gated daily-count deltas for an at-least-once ordered
+    * keyed CDC source: one delta per (event_type, day) per batch. The
+    * per-type state beside the watermark is the number of events
+    * counted so far, which that type's deltas sum to. */
   def trackedDeltas(events: Dataset[VolEvent]): Dataset[DailyDelta] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.groupByKey(_.eventType)
-      .flatMapGroupsWithState[St, DailyDelta](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (etype, incoming, state: GroupState[St]) =>
-          var (lastTs, lastId) =
-            state.getOption.getOrElse((Long.MinValue, Long.MinValue))
-          val delta = scala.collection.mutable.Map.empty[Timestamp, Long]
-          incoming.toSeq.sortBy(e => (micros(e.ts), e.eventId)).foreach { e =>
-            val t = micros(e.ts)
-            // replay gate: at-or-before the watermark = already counted
-            if (t > lastTs || (t == lastTs && e.eventId > lastId)) {
-              val d = dayStartUtc(e.ts)
-              delta(d) = delta.getOrElse(d, 0L) + 1L
-              lastTs = t; lastId = e.eventId
-            }
-          }
-          state.update((lastTs, lastId))
-          delta.iterator.map { case (d, dn) => DailyDelta(etype, d, dn) }
-      }
+    Streams.replayGated(events)(_.eventType, _.ts, _.eventId, zero = 0L) { (etype, n, admitted) =>
+      val delta = admitted.groupMapReduce { case (e, _) => dayStartUtc(e.ts) }(_ => 1L)(_ + _)
+      (n + admitted.size, delta.map { case (d, dn) => DailyDelta(etype, d, dn) })
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.TrainingMix
 
 /** Streaming twin of [[TrainingMix.spanCorruption]] — denoising
@@ -16,23 +16,13 @@ import graft.operators.TrainingMix
   * (the property a rand() mask would force a stateful dedup to fake).
   *
   * Stateless: no join, no watermark, no aggregation — a batch's cost
-  * is one row-parallel projection, the same failure mode rationale as
-  * [[PqStream]] (fail the batch, let Structured Streaming replay). */
+  * is one row-parallel projection through [[Streams.handOff]] (fail the
+  * batch, let Structured Streaming replay). */
 object CorruptStream {
 
   /** Corrupt the stream; per-batch instance-geometry rows go to
     * `onInstances` with the batch id. */
   def start(docs: Dataset[IncomingDoc], name: String)(
       onInstances: (DataFrame, Long) => Unit): StreamingQuery =
-    docs.toDF().writeStream
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val out = TrainingMix.spanCorrupt(batch).persist()
-        try {
-          out.count() // materialize before the sink reads
-          onInstances(out, batchId)
-        } finally { out.unpersist(); () }
-      }
-      .start()
+    Streams.handOff(docs, name)(TrainingMix.spanCorrupt)(onInstances)
 }

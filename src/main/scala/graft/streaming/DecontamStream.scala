@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Semantic
 
 /** Streaming twin of [[Semantic.embeddingDecontam]] — the
@@ -28,26 +28,14 @@ object DecontamStream {
     * batch id. */
   def start(vecs: Dataset[IncomingVec], refDir: String, name: String)(
       onGated: (DataFrame, Long) => Unit): StreamingQuery = {
-    val spark = vecs.sparkSession
-    val ev = Semantic.decontamEvalRel(spark, refDir).persist()
+    val ev = Semantic.decontamEvalRel(vecs.sparkSession, refDir).persist()
     require(ev.count() > 0, s"empty eval suite from $refDir — nothing to gate against")
-    val query = vecs.toDF().writeStream
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val q = Semantic.quantSigned(batch)
-        val gated = q.select("vec_id")
-          .join(Semantic.decontamMatches(q, ev), Seq("vec_id"), "left_outer")
-          .select(col("vec_id"), coalesce(col("n_matched"), lit(0L)).as("n_matched"))
-          .withColumn("keep", col("n_matched") === 0L)
-          .persist()
-        try {
-          gated.count() // materialize before the sink reads
-          onGated(gated, batchId)
-        } finally { gated.unpersist(); () }
-      }
-      .start()
-    Streams.unpersistOnTermination(spark, query, Seq(ev))
-    query
+    Streams.handOff(vecs, name, pinned = Seq(ev)) { batch =>
+      val q = Semantic.quantSigned(batch)
+      q.select("vec_id")
+        .join(Semantic.decontamMatches(q, ev), Seq("vec_id"), "left_outer")
+        .select(col("vec_id"), coalesce(col("n_matched"), lit(0L)).as("n_matched"))
+        .withColumn("keep", col("n_matched") === 0L)
+    }(onGated)
   }
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.Tables
 import graft.operators.Curation
 
@@ -43,36 +43,21 @@ object DriftStream {
     * drift-score the stream; per-source TV rows for each micro-batch
     * go to `onReport` with the batch id. Model relations are persisted
     * and materialized HERE — a cold first batch must not silently
-    * retrain on a cache eviction. */
+    * retrain on a cache eviction — and released when the query
+    * terminates (pt is vocabulary-sized, the costliest of the frozen
+    * artifacts to leak). */
   def start(docs: Dataset[SourcedDoc], refDir: String, name: String)(
       onReport: (DataFrame, Long) => Unit): StreamingQuery = {
-    val spark = docs.sparkSession
     // the reference distribution derives from the SAME token-count
     // pass the batch report runs (Curation.driftCounts) — the
     // parity-by-shared-code contract covers training, not just scoring
-    val ct = Curation.driftCounts(Tables.documents(spark, refDir))
+    val ct = Curation.driftCounts(Tables.documents(docs.sparkSession, refDir))
       .groupBy("term").agg(sum(col("n_st")).as("n_t"))
     val (pt0, pTotal0) = Curation.driftModel(ct)
     val pt = pt0.persist()
     val pTotal = pTotal0.persist()
     pt.count(); pTotal.count()
-    val query = docs.toDF().writeStream
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // fail-the-batch on error (replay is idempotent); swallowing a
-        // throw would silently drop a batch from the monitoring record
-        val report = Curation.driftAgainst(batch, pt, pTotal).persist()
-        try {
-          report.count() // materialize before the sink reads
-          onReport(report, batchId)
-        } finally { report.unpersist(); () }
-      }
-      .start()
-    // release this model generation when the query terminates (the
-    // DsirStream blue/green hygiene — pt is vocabulary-sized, the
-    // costliest of the frozen artifacts to leak)
-    Streams.unpersistOnTermination(spark, query, Seq(pt, pTotal))
-    query
+    Streams.handOff(docs, name, pinned = Seq(pt, pTotal))(
+      Curation.driftAgainst(_, pt, pTotal))(onReport)
   }
 }

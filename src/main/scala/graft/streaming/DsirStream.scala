@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.TrainingMix
 
 /** One incoming crawl document to score. */
@@ -33,34 +33,15 @@ object DsirStream {
     * relations are persisted and materialized HERE — a cold first
     * batch would otherwise re-run the training aggregate, and a
     * query's model must not silently retrain on a cache eviction
-    * (count() pins the blocks before the first batch runs). */
+    * (count() pins the blocks before the first batch runs). Each
+    * generation is released when its query terminates. */
   def start(docs: Dataset[IncomingDoc], refDir: String, name: String)(
       onScored: (DataFrame, Long) => Unit): StreamingQuery = {
-    val spark = docs.sparkSession
-    val (model0, mean0) = TrainingMix.dsirModel(spark, refDir)
+    val (model0, mean0) = TrainingMix.dsirModel(docs.sparkSession, refDir)
     val model = model0.persist()
     val mean = mean0.persist()
     model.count(); mean.count()
-    val query = docs.toDF().writeStream
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // NOT Streams.isolated: scoring is stateless and idempotent, so
-        // the right failure mode is fail-the-batch and let Structured
-        // Streaming replay it — swallowing a throw would silently drop
-        // the batch's docs from the selection (at-most-once)
-        val scored = TrainingMix.dsirScore(batch, model, mean).persist()
-        try {
-          scored.count() // materialize before the sink reads
-          onScored(scored, batchId)
-        } finally { scored.unpersist(); () }
-      }
-      .start()
-    // blue/green lifecycle hygiene: each start() pins a model
-    // generation in the block manager; release it when THIS query
-    // terminates, or N retrains in a long-lived session would leak N
-    // frozen models (the listener removes itself — one per generation)
-    Streams.unpersistOnTermination(spark, query, Seq(model, mean))
-    query
+    Streams.handOff(docs, name, pinned = Seq(model, mean))(
+      TrainingMix.dsirScore(_, model, mean))(onScored)
   }
 }

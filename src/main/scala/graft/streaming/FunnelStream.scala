@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** An event entering the funnel tracker. */
 final case class FunnelEvent(userId: Long, ts: Timestamp, eventId: Long,
@@ -27,13 +26,11 @@ final case class StepCompletion(userId: Long, step: Long, t: Timestamp)
   * ([[graft.operators.Windows.funnelReportOfCounts]], parity by
   * shared code) — equal batch bit-for-bit ([[FunnelStreamSpec]]).
   *
-  * Delivery contract: [[Scd2Stream]]'s ordered keyed CDC — step
-  * completion is order-sensitive (an out-of-order earlier event could
-  * retroactively qualify a step), so the tracker requires PER-KEY
-  * ordered delivery and skips anything at or before its (ts, event_id)
-  * watermark as an idempotent replay; at-least-once prefix redelivery
-  * converges bit-identically and re-emits nothing (the spec proves
-  * both).
+  * Delivery: step completion is order-sensitive (an out-of-order
+  * earlier event could retroactively qualify a step), so the tracker
+  * folds under [[Streams.replayGated]] keyed by user; at-least-once
+  * prefix redelivery converges bit-identically and re-emits nothing
+  * (the spec proves both).
   *
   * Scale shape: O(users) state, one small fixed-width vector each
   * (steps are a compile-time list); lifetime emission ≤ users × steps.
@@ -42,46 +39,29 @@ object FunnelStream {
 
   private val Steps = graft.operators.Windows.funnelStepNames
 
-  private def micros(ts: Timestamp): Long =
-    ts.toInstant.getEpochSecond * 1000000L + ts.toInstant.getNano / 1000L
-  private def fromMicros(us: Long): Timestamp =
-    Timestamp.from(java.time.Instant.ofEpochSecond(
-      Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L))
-
-  /** (lastTsMicros, lastId, completion micros per step — Long.MinValue
-    * while a step is open). */
-  private type St = (Long, Long, Array[Long])
-
+  /** Per-user state beside the watermark: the completion micros per
+    * step, Long.MinValue while a step is open. */
   def completions(events: Dataset[FunnelEvent]): Dataset[StepCompletion] = {
     val spark = events.sparkSession
     import spark.implicits._
     val stepOf: Map[String, Int] = Steps.zipWithIndex.toMap
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[St, StepCompletion](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (user, incoming, state: GroupState[St]) =>
-          var (lastTs, lastId, tms) = state.getOption.getOrElse(
-            (Long.MinValue, Long.MinValue, Array.fill(Steps.length)(Long.MinValue)))
-          val out = scala.collection.mutable.ArrayBuffer.empty[StepCompletion]
-          incoming.toSeq.sortBy(e => (micros(e.ts), e.eventId)).foreach { e =>
-            val t = micros(e.ts)
-            // replay gate: at-or-before the watermark = already folded
-            if (t > lastTs || (t == lastTs && e.eventId > lastId)) {
-              stepOf.get(e.eventType).foreach { k =>
-                val gateOpen = tms(k) == Long.MinValue &&
-                  (k == 0 || (tms(k - 1) != Long.MinValue && t > tms(k - 1)))
-                if (gateOpen) {
-                  tms = tms.clone() // state tuples must not alias emitted history
-                  tms(k) = t
-                  out += StepCompletion(user, k + 1L, fromMicros(t))
-                }
-              }
-              lastTs = t; lastId = e.eventId
-            }
+    Streams.replayGated(events)(_.userId, _.ts, _.eventId,
+        zero = Array.fill(Steps.length)(Long.MinValue)) { (user, done, admitted) =>
+      var tms = done
+      val out = scala.collection.mutable.ArrayBuffer.empty[StepCompletion]
+      admitted.foreach { case (e, t) =>
+        stepOf.get(e.eventType).foreach { k =>
+          val gateOpen = tms(k) == Long.MinValue &&
+            (k == 0 || (tms(k - 1) != Long.MinValue && t > tms(k - 1)))
+          if (gateOpen) {
+            tms = tms.clone() // neither the shared zero nor emitted history is mutated
+            tms(k) = t
+            out += StepCompletion(user, k + 1L, Streams.fromMicros(t))
           }
-          state.update((lastTs, lastId, tms))
-          out.iterator
+        }
       }
+      (tms, out)
+    }
   }
 
   /** The funnel report from a materialized completion relation — per-

@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.sql.Timestamp
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** An event entering the transition tracker. */
 final case class MkvEvent(userId: Long, ts: Timestamp, eventId: Long,
@@ -19,10 +18,8 @@ final case class Transition(prevType: String, nextType: String)
   * downstream consumer (a second streaming agg, a batch rollup) gets
   * the batch matrix exactly.
   *
-  * Delivery contract: [[Scd2Stream]]'s — consecutive-pair extraction
-  * is order-sensitive, so the tracker requires PER-KEY ordered
-  * delivery (the keyed-CDC-log guarantee) and skips anything at or
-  * before its (ts, event_id) watermark as an idempotent replay;
+  * Delivery: consecutive-pair extraction is order-sensitive, so the
+  * tracker folds under [[Streams.replayGated]] keyed by user;
   * at-least-once prefix redelivery converges bit-identically
   * ([[MarkovStreamSpec]]).
   *
@@ -30,31 +27,20 @@ final case class Transition(prevType: String, nextType: String)
   * emission = transitions (events − users). */
 object MarkovStream {
 
-  private def micros(ts: Timestamp): Long =
-    ts.toInstant.getEpochSecond * 1000000L + ts.toInstant.getNano / 1000L
-
-  /** (lastTsMicros, lastId, lastType). */
-  private type St = (Long, Long, String)
-
+  /** Per-user state beside the watermark: the last event's type (null
+    * before the first). */
   def transitions(events: Dataset[MkvEvent]): Dataset[Transition] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[St, Transition](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (_, incoming, state: GroupState[St]) =>
-          var (lastTs, lastId, lastType) =
-            state.getOption.getOrElse((Long.MinValue, Long.MinValue, null: String))
-          val out = scala.collection.mutable.ArrayBuffer.empty[Transition]
-          incoming.toSeq.sortBy(e => (micros(e.ts), e.eventId)).foreach { e =>
-            val t = micros(e.ts)
-            if (t > lastTs || (t == lastTs && e.eventId > lastId)) {
-              if (lastType != null) out += Transition(lastType, e.eventType)
-              lastTs = t; lastId = e.eventId; lastType = e.eventType
-            }
-          }
-          state.update((lastTs, lastId, lastType))
-          out.iterator
-      }
+    Streams.replayGated(events)(_.userId, _.ts, _.eventId, zero = null: String) {
+      (_, lastType, admitted) =>
+        var last = lastType
+        val out = admitted.flatMap { case (e, _) =>
+          val edge = Option(last).map(Transition(_, e.eventType))
+          last = e.eventType
+          edge
+        }
+        (last, out)
+    }
   }
 }

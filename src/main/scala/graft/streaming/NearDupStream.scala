@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Dedup
 
 /** A document entering the incremental near-dup gate. */
@@ -39,34 +38,18 @@ object NearDupStream {
 
   /** Freeze `refDir`'s LSH index and probe the stream; per-batch
     * candidate rows (doc_id, cand_id) go to `onCandidates` with the
-    * batch id. `eagerCount = false` skips the construction-time index
-    * materialization (and its empty-index warning) when the caller
-    * already knows the index is warm and non-empty. */
-  def start(docs: Dataset[NearDupDoc], refDir: String, name: String,
-      eagerCount: Boolean = true)(
+    * batch id. */
+  def start(docs: Dataset[NearDupDoc], refDir: String, name: String)(
       onCandidates: (DataFrame, Long) => Unit): StreamingQuery = {
-    val spark = docs.sparkSession
-    val index = Dedup.frozenBandRel(spark, refDir).persist()
+    val index = Dedup.frozenBandRel(docs.sparkSession, refDir).persist()
     // A legitimately empty (or not-yet-staged) reference corpus is a
     // valid gate that emits no candidates — log it instead of refusing
     // to construct the stream (r18 ADVICE). The count doubles as the
-    // index materialization the first batch would otherwise pay; callers
-    // that know the index is warm can skip it via eagerCount = false.
-    if (eagerCount && index.count() == 0)
+    // index materialization the first batch would otherwise pay.
+    if (index.count() == 0)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"graft NearDupStream: empty LSH index from $refDir — the stream will emit no candidates")
-    val query = docs.toDF().writeStream
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cands = Dedup.streamCandidates(batch, index).persist()
-        try {
-          cands.count() // materialize before the sink reads
-          onCandidates(cands, batchId)
-        } finally { cands.unpersist(); () }
-      }
-      .start()
-    Streams.unpersistOnTermination(spark, query, Seq(index))
-    query
+    Streams.handOff(docs, name, pinned = Seq(index))(
+      Dedup.streamCandidates(_, index))(onCandidates)
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.Semantic
 
 /** One incoming vector to encode (an embedded document/image at the
@@ -31,23 +31,9 @@ object PqStream {
     * `onEncoded` with the batch id. */
   def start(vecs: Dataset[IncomingVec], refDir: String, name: String)(
       onEncoded: (DataFrame, Long) => Unit): StreamingQuery = {
-    val spark = vecs.sparkSession
-    val cents = Semantic.pqTrainOn(spark, refDir)
+    val cents = Semantic.pqTrainOn(vecs.sparkSession, refDir)
     require(cents.head.nonEmpty,
       s"empty reference corpus at $refDir — no codebook to freeze")
-    vecs.toDF().writeStream
-      .queryName(name)
-      .outputMode(OutputMode.Append())
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // NOT Streams.isolated: encoding is stateless and idempotent,
-        // so the right failure mode is fail-the-batch and let
-        // Structured Streaming replay it (the DsirStream rationale)
-        val encoded = Semantic.pqEncode(batch, cents).persist()
-        try {
-          encoded.count() // materialize before the sink reads
-          onEncoded(encoded, batchId)
-        } finally { encoded.unpersist(); () }
-      }
-      .start()
+    Streams.handOff(vecs, name)(Semantic.pqEncode(_, cents))(onEncoded)
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.operators.Featurize
+import graft.operators.{Dedup, Featurize}
 
 /** A document entering the preference miner. */
 final case class PrefDoc(docId: Long, source: String, lang: String, text: String)
@@ -41,14 +41,8 @@ object PrefPairStream {
 
   /** The batch op's per-doc score: Σ_tokens weight(h60(token) mod Dim)
     * — same md5-prefix hash, same [[Featurize.weight]] table. */
-  def score(text: String): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    text.split(" ", -1).map { tk =>
-      val hex = md.digest(tk.getBytes("UTF-8")).map("%02x".format(_))
-        .mkString.take(15)
-      Featurize.weight((java.lang.Long.parseLong(hex, 16) % Featurize.Dim).toInt)
-    }.sum
-  }
+  def score(text: String): Long =
+    text.split(" ", -1).map(tk => Featurize.weight((Dedup.h60(tk) % Featurize.Dim).toInt)).sum
 
   /** (bestScore, bestId, worstScore, worstId) per stratum. */
   private type St = (Long, Long, Long, Long)

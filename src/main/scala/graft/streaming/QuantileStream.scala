@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** A value observation entering the quantile tracker. */
 final case class QObs(eventType: String, value: Double)
@@ -36,17 +35,15 @@ final case class HistDelta(eventType: String, cents: Long, dc: Long)
   * Structured Streaming default with replayable sources + idempotent
   * sinks); at-least-once REDELIVERY would double-count it. For an
   * at-least-once keyed CDC source, [[trackedDeltas]] is the
-  * replay-gated spelling under [[Scd2Stream]]'s ordered-delivery
-  * contract: per event_type the tracker advances a (ts, event_id)
-  * watermark, skips anything at or before it as an idempotent replay,
-  * and emits per-batch histogram DELTAS — a monoid, so the downstream
+  * replay-gated spelling ([[Streams.replayGated]], keyed by event_type):
+  * it emits per-batch histogram DELTAS — a monoid, so the downstream
   * rollup (a second streaming agg or a batch sum) reconstructs the
   * exact histogram under arbitrary prefix redelivery
   * ([[QuantileStreamSpec]] proves replay ≡ batch).
   *
   * Scale shape: complete-mode state rows ≤ types × cents-domain;
-  * tracked-gate state is ONE watermark tuple per event_type; updates
-  * map-side combinable within every micro-batch.
+  * tracked-gate state is ONE (watermark, count) tuple per event_type;
+  * updates map-side combinable within every micro-batch.
   */
 object QuantileStream {
 
@@ -61,40 +58,21 @@ object QuantileStream {
   def quantiles(hist: DataFrame): DataFrame =
     graft.operators.Olap.quantilesOfHist(hist)
 
-  private def micros(ts: Timestamp): Long =
-    ts.toInstant.getEpochSecond * 1000000L + ts.toInstant.getNano / 1000L
-
   /** Exact cents bucket of `value` — the JVM spelling of the batch
     * `CAST(floor(value * 100) AS BIGINT)` (both are IEEE double
     * multiply + floor, bit-identical). */
   private def centsOf(value: Double): Long = math.floor(value * 100).toLong
 
-  /** (lastTsMicros, lastId) per event_type — the replay watermark. */
-  private type St = (Long, Long)
-
-  /** Replay-gated histogram deltas for an at-least-once ORDERED keyed
-    * CDC source — see the delivery contract in the object Scaladoc. */
+  /** Replay-gated histogram deltas for an at-least-once ordered keyed
+    * CDC source: one delta per (event_type, cents) per batch. The
+    * per-type state beside the watermark is the number of values
+    * counted so far, which that type's deltas sum to. */
   def trackedDeltas(events: Dataset[QEvent]): Dataset[HistDelta] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.groupByKey(_.eventType)
-      .flatMapGroupsWithState[St, HistDelta](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (etype, incoming, state: GroupState[St]) =>
-          var (lastTs, lastId) =
-            state.getOption.getOrElse((Long.MinValue, Long.MinValue))
-          val delta = scala.collection.mutable.Map.empty[Long, Long]
-          incoming.toSeq.sortBy(e => (micros(e.ts), e.eventId)).foreach { e =>
-            val t = micros(e.ts)
-            // replay gate: at-or-before the watermark = already counted
-            if (t > lastTs || (t == lastTs && e.eventId > lastId)) {
-              val c = centsOf(e.value)
-              delta(c) = delta.getOrElse(c, 0L) + 1L
-              lastTs = t; lastId = e.eventId
-            }
-          }
-          state.update((lastTs, lastId))
-          delta.iterator.map { case (c, dc) => HistDelta(etype, c, dc) }
-      }
+    Streams.replayGated(events)(_.eventType, _.ts, _.eventId, zero = 0L) { (etype, n, admitted) =>
+      val delta = admitted.groupMapReduce { case (e, _) => centsOf(e.value) }(_ => 1L)(_ + _)
+      (n + admitted.size, delta.map { case (c, dc) => HistDelta(etype, c, dc) })
+    }
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.sql.Timestamp
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** An event entering the SCD2 builder. */
 final case class ScdEvent(userId: Long, ts: Timestamp, eventId: Long,
@@ -19,24 +18,18 @@ final case class ScdVersion(userId: Long, eventType: String,
 /** Streaming twin of the batch `scd2_history` (X121) — the type-2
   * dimension maintained continuously at ingest, the way a CDC consumer
   * actually builds `dim_*_history`. Per-user state is one open version
-  * (type, valid_from, version counter) plus the last-folded (ts,
-  * event_id) watermark; on a type change the tracker emits the CLOSED
-  * previous version and the new OPEN one, so the append sink always
-  * contains every closed interval plus a supersedable open row per
-  * user ([[ScdVersion]] contract).
+  * (type, valid_from, version counter) beside the replay watermark; on
+  * a type change the tracker emits the CLOSED previous version and the
+  * new OPEN one, so the append sink always contains every closed
+  * interval plus a supersedable open row per user ([[ScdVersion]]
+  * contract).
   *
-  * Delivery contract — deliberately DIFFERENT from the CRDT trackers
+  * Delivery — deliberately DIFFERENT from the CRDT trackers
   * ([[RetentionStream]]): SCD2 interval closing is not commutative, so
-  * the builder requires PER-KEY ORDERED delivery (the guarantee a
-  * keyed CDC log actually provides — one Kafka partition per key).
-  * Within a micro-batch the group sorts by (ts, event_id); ACROSS
-  * batches an event at or before the state watermark is a REPLAY and
-  * is skipped idempotently — at-least-once redelivery of any prefix
+  * the builder folds under [[Streams.replayGated]]'s per-key ordered
+  * contract, keyed by user; at-least-once redelivery of any prefix
   * converges bit-identically ([[Scd2StreamSpec]] proves replay ≡
-  * batch). A genuinely late cross-batch regression is indistinguishable
-  * from a replay under this contract; feeding unkeyed-shuffled input is
-  * out of contract by design and documented here rather than silently
-  * mis-built.
+  * batch).
   *
   * Scale shape: O(users) state at one small tuple each; lifetime
   * emission ≤ 2 × version count. Reference analog: the chat scrapers'
@@ -45,49 +38,31 @@ final case class ScdVersion(userId: Long, eventType: String,
   */
 object Scd2Stream {
 
-  /** Epoch MICROS, not millis: the harness timestamps carry microsecond
-    * precision, and `Timestamp.getTime` would silently truncate every
-    * interval bound to the millisecond — breaking the spec-pinned
-    * streaming ≡ batch bit equality. */
-  private def micros(ts: Timestamp): Long =
-    ts.toInstant.getEpochSecond * 1000000L + ts.toInstant.getNano / 1000L
-  private def fromMicros(us: Long): Timestamp =
-    Timestamp.from(java.time.Instant.ofEpochSecond(
-      Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L))
+  import Streams.fromMicros
 
-  /** (lastTsMicros, lastId, curType, curFromMicros, version). */
-  private type St = (Long, Long, String, Long, Long)
-
+  /** Per-user state beside the watermark: (curType, curFromMicros,
+    * version); curType is null before the first event. */
   def versions(events: Dataset[ScdEvent]): Dataset[ScdVersion] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[St, ScdVersion](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (user, incoming, state: GroupState[St]) =>
-          var (lastTs, lastId, curType, curFrom, version) =
-            state.getOption.getOrElse((Long.MinValue, Long.MinValue, null: String, 0L, 0L))
-          val out = scala.collection.mutable.ArrayBuffer.empty[ScdVersion]
-          incoming.toSeq.sortBy(e => (micros(e.ts), e.eventId)).foreach { e =>
-            val t = micros(e.ts)
-            // replay gate: at-or-before the watermark = already folded
-            if (t > lastTs || (t == lastTs && e.eventId > lastId)) {
-              if (curType == null) {
-                version = 1L
-                curType = e.eventType; curFrom = t
-                out += ScdVersion(user, curType, fromMicros(t), None, version, isCurrent = true)
-              } else if (e.eventType != curType) {
-                out += ScdVersion(user, curType, fromMicros(curFrom),
-                  Some(fromMicros(t)), version, isCurrent = false)
-                version += 1L
-                curType = e.eventType; curFrom = t
-                out += ScdVersion(user, curType, fromMicros(t), None, version, isCurrent = true)
-              }
-              lastTs = t; lastId = e.eventId
-            }
+    Streams.replayGated(events)(_.userId, _.ts, _.eventId, zero = (null: String, 0L, 0L)) {
+      (user, open, admitted) =>
+        var (curType, curFrom, version) = open
+        val out = scala.collection.mutable.ArrayBuffer.empty[ScdVersion]
+        admitted.foreach { case (e, t) =>
+          if (curType == null) {
+            version = 1L
+            curType = e.eventType; curFrom = t
+            out += ScdVersion(user, curType, fromMicros(t), None, version, isCurrent = true)
+          } else if (e.eventType != curType) {
+            out += ScdVersion(user, curType, fromMicros(curFrom),
+              Some(fromMicros(t)), version, isCurrent = false)
+            version += 1L
+            curType = e.eventType; curFrom = t
+            out += ScdVersion(user, curType, fromMicros(t), None, version, isCurrent = true)
           }
-          state.update((lastTs, lastId, curType, curFrom, version))
-          out.iterator
-      }
+        }
+        ((curType, curFrom, version), out)
+    }
   }
 }

@@ -1,8 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import java.sql.Timestamp
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery,
+  StreamingQueryListener, Trigger}
 import graft.sources.ChatMessage
 
 /** Streaming semantics layer (SURVEY §2.8). The reference is a
@@ -14,6 +16,8 @@ import graft.sources.ChatMessage
   *   - S1 fixed-interval polling       → `Trigger.ProcessingTime` + per-batch
   *                                       error isolation (tasks.py:23-37)
   *   - S7–S9 idempotent/merge sinks    → `foreachBatch` keyed merge
+  *   - keyed-CDC replay gate           → [[replayGated]] (the event twins)
+  *   - frozen-artifact scoring         → [[handOff]] (the stateless twins)
   *
   * None of these are oracle-checkable (the harness oracle is batch
   * DuckDB), so they are covered by MemoryStream golden tests
@@ -84,6 +88,61 @@ object Streams {
       }
   }
 
+  /** Epoch MICROS, not millis: the harness timestamps carry microsecond
+    * precision, and `Timestamp.getTime` would truncate every interval
+    * bound to the millisecond, breaking the streaming ≡ batch bit
+    * equality the twins' specs pin. Pre-epoch timestamps give negative
+    * micros; [[fromMicros]] inverts them exactly. */
+  def micros(ts: Timestamp): Long =
+    ts.toInstant.getEpochSecond * 1000000L + ts.toInstant.getNano / 1000L
+  def fromMicros(us: Long): Timestamp =
+    Timestamp.from(java.time.Instant.ofEpochSecond(
+      Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L))
+
+  /** Replay-gated per-key fold: the delivery contract of every event
+    * twin whose fold is order-sensitive (SCD2 interval closing,
+    * transition pairs, funnel steps) or must not double-count under
+    * redelivery (histogram deltas).
+    *
+    * The contract is PER-KEY ORDERED, at-least-once delivery: the
+    * guarantee a keyed CDC log actually provides (one Kafka partition
+    * per key). Within a micro-batch each key's events are sorted by
+    * (micros, event id); across batches an event at or before the key's
+    * stored (lastTs, lastId) watermark is a REPLAY and is dropped, so
+    * redelivery of any prefix converges bit-identically and re-emits
+    * nothing. A genuinely late cross-batch regression is
+    * indistinguishable from a replay under this contract; unkeyed,
+    * shuffled input is out of contract by design, stated here rather
+    * than silently mis-folded.
+    *
+    * `fold(key, s, admitted)` gets the key's state (`zero` for a new
+    * key) and its admitted events in order, each with its micros; it
+    * returns the key's next state and its output rows. State per key is
+    * `(lastTs, lastId, s)`. */
+  def replayGated[E, K: Encoder, S: Encoder, O: Encoder](events: Dataset[E])(
+      key: E => K, ts: E => Timestamp, id: E => Long, zero: S)(
+      fold: (K, S, Seq[(E, Long)]) => (S, IterableOnce[O])): Dataset[O] = {
+    implicit val stateEnc: Encoder[(Long, Long, S)] =
+      Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, implicitly[Encoder[S]])
+    events.groupByKey(key)
+      .flatMapGroupsWithState[(Long, Long, S), O](
+        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
+        (k: K, incoming: Iterator[E], state: GroupState[(Long, Long, S)]) =>
+          val (ts0, id0, s) = state.getOption.getOrElse((Long.MinValue, Long.MinValue, zero))
+          var (lastTs, lastId) = (ts0, id0)
+          val admitted = incoming.map(e => (e, micros(ts(e)))).toSeq
+            .sortBy { case (e, t) => (t, id(e)) }
+            .filter { case (e, t) =>
+              val fresh = t > lastTs || (t == lastTs && id(e) > lastId)
+              if (fresh) { lastTs = t; lastId = id(e) }
+              fresh
+            }
+          val (next, out) = fold(k, s, admitted)
+          state.update((lastTs, lastId, next))
+          out.iterator
+      }
+  }
+
   /** A5 `bounded_state_dedup`, streaming form (utils/cache.py:7-17,
     * scrapers/mailbox.py:101): keep the first occurrence of each key,
     * with state bounded by the event-time watermark instead of a FIFO
@@ -143,23 +202,47 @@ object Streams {
       .foreachBatch(isolated(onBatch))
       .start()
 
+  /** Per-batch hand-off of the stateless and frozen-artifact twins:
+    * starts the Append `foreachBatch` query `name` over `src`. Each
+    * micro-batch's output `derive(batch)` is persisted and counted, so it
+    * is materialized before the sink reads it, handed to `sink` with the
+    * batch id, and unpersisted afterwards. The `pinned` frozen relations
+    * are released when the query terminates ([[unpersistOnTermination]]).
+    *
+    * NOT [[isolated]]: a derived batch is a pure function of the batch
+    * and the frozen artifact, so the right failure mode is to fail the
+    * batch and let Structured Streaming replay it. Swallowing a throw
+    * would silently drop the batch (at-most-once). */
+  def handOff(src: Dataset[_], name: String, pinned: Seq[DataFrame] = Nil)(
+      derive: DataFrame => DataFrame)(sink: (DataFrame, Long) => Unit): StreamingQuery = {
+    val query = src.toDF().writeStream
+      .queryName(name)
+      .outputMode(OutputMode.Append())
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val out = derive(batch).persist()
+        try {
+          out.count()
+          sink(out, batchId)
+        } finally { out.unpersist(); () }
+      }
+      .start()
+    if (pinned.nonEmpty) unpersistOnTermination(src.sparkSession, query, pinned)
+    query
+  }
+
   /** Release frozen-model relations when `query` terminates — the
-    * blue/green lifecycle hygiene shared by the frozen-artifact
-    * streams ([[DsirStream]], [[DriftStream]]): each `start()` pins a
-    * model generation in the block manager, and without this hook a
+    * blue/green lifecycle hygiene of the frozen-artifact streams
+    * ([[handOff]], [[AnnMonitorStream]]): each `start()` pins a model
+    * generation in the block manager, and without this hook a
     * long-lived session retraining N times leaks N generations. The
     * listener matches the query by id and removes itself after
     * firing. */
-  def unpersistOnTermination(spark: org.apache.spark.sql.SparkSession,
-      query: org.apache.spark.sql.streaming.StreamingQuery,
+  def unpersistOnTermination(spark: SparkSession, query: StreamingQuery,
       pinned: Seq[DataFrame]): Unit = {
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit =
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
         if (e.id == query.id) {
           pinned.foreach(_.unpersist())
           spark.streams.removeListener(this)

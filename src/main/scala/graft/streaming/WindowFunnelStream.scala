@@ -3,7 +3,6 @@ package graft.streaming
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** One deadline-funnel level-up: `userId` first reached 1-based
   * `level` (within the 24 h chain deadline) at `t`. Emitted at most
@@ -21,10 +20,9 @@ final case class LevelUp(userId: Long, level: Long, t: Timestamp)
   * level-reached verdict is monotone, so emission stays at-most-once
   * while the DP stays exact for deeper levels.
   *
-  * Delivery contract: [[Scd2Stream]]'s ordered keyed CDC — the DP is
-  * order-sensitive, so per-key ordered delivery with the (ts,
-  * event_id) replay watermark; at-least-once prefix redelivery
-  * converges bit-identically and re-emits nothing
+  * Delivery: the DP is order-sensitive, so the tracker folds under
+  * [[Streams.replayGated]] keyed by user; at-least-once prefix
+  * redelivery converges bit-identically and re-emits nothing
   * ([[WindowFunnelStreamSpec]] proves replay ≡ batch through the
   * shared report tail).
   *
@@ -36,58 +34,43 @@ object WindowFunnelStream {
   private val Steps = graft.operators.Windows.funnelStepNames
   private val WindowUs = graft.operators.Windows.FunnelWindowUs
 
-  private def micros(ts: Timestamp): Long =
-    ts.toInstant.getEpochSecond * 1000000L + ts.toInstant.getNano / 1000L
-  private def fromMicros(us: Long): Timestamp =
-    Timestamp.from(java.time.Instant.ofEpochSecond(
-      Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L))
+  private val NotReached = graft.operators.Windows.FunnelNotReached
 
-  /** (lastTsMicros, lastId, a1, a2, a3) — the replay watermark plus the
-    * batch DP's max-anchor accumulator ([[graft.operators.Windows
+  import Streams.fromMicros
+
+  /** Per-user state beside the watermark: the batch DP's max-anchor
+    * accumulator (a1, a2, a3) ([[graft.operators.Windows
     * .FunnelNotReached]] = level not yet reached — Long.MinValue, so a
     * pre-epoch event's NEGATIVE anchor still counts, exactly the batch
     * fold's sentinel). */
-  private type St = (Long, Long, Long, Long, Long)
-
-  private val NotReached = graft.operators.Windows.FunnelNotReached
-
   def levelUps(events: Dataset[FunnelEvent]): Dataset[LevelUp] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[St, LevelUp](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (user, incoming, state: GroupState[St]) =>
-          var (lastTs, lastId, a1, a2, a3) = state.getOption.getOrElse(
-            (Long.MinValue, Long.MinValue, NotReached, NotReached, NotReached))
-          val out = scala.collection.mutable.ArrayBuffer.empty[LevelUp]
-          incoming.toSeq.sortBy(e => (micros(e.ts), e.eventId)).foreach { e =>
-            val t = micros(e.ts)
-            // replay gate: at-or-before the watermark = already folded
-            if (t > lastTs || (t == lastTs && e.eventId > lastId)) {
-              // FULL event-type name → step index (the batch query's
-              // isin(FunnelSteps) filter + first-letter symbol fused):
-              // an off-inventory event type is a watermark-only no-op,
-              // never a step match (r19 ADVICE — first-letter matching
-              // held only by the harness inventory's initial-injectivity)
-              val s = Steps.indexOf(e.eventType)
-              // the batch DP transition, verbatim (Windows.windowFunnel)
-              if (s == 0 && t > a1) {
-                if (a1 == NotReached) out += LevelUp(user, 1L, fromMicros(t))
-                a1 = t
-              } else if (s == 1 && a1 > NotReached && t - a1 <= WindowUs && a1 > a2) {
-                if (a2 == NotReached) out += LevelUp(user, 2L, fromMicros(t))
-                a2 = a1
-              } else if (s == 2 && a2 > NotReached && t - a2 <= WindowUs && a2 > a3) {
-                if (a3 == NotReached) out += LevelUp(user, 3L, fromMicros(t))
-                a3 = a2
-              }
-              lastTs = t; lastId = e.eventId
-            }
-          }
-          state.update((lastTs, lastId, a1, a2, a3))
-          out.iterator
+    Streams.replayGated(events)(_.userId, _.ts, _.eventId,
+        zero = (NotReached, NotReached, NotReached)) { (user, anchors, admitted) =>
+      var (a1, a2, a3) = anchors
+      val out = scala.collection.mutable.ArrayBuffer.empty[LevelUp]
+      admitted.foreach { case (e, t) =>
+        // FULL event-type name → step index (the batch query's
+        // isin(FunnelSteps) filter + first-letter symbol fused):
+        // an off-inventory event type is a watermark-only no-op,
+        // never a step match (r19 ADVICE — first-letter matching
+        // held only by the harness inventory's initial-injectivity)
+        val s = Steps.indexOf(e.eventType)
+        // the batch DP transition, verbatim (Windows.windowFunnel)
+        if (s == 0 && t > a1) {
+          if (a1 == NotReached) out += LevelUp(user, 1L, fromMicros(t))
+          a1 = t
+        } else if (s == 1 && a1 > NotReached && t - a1 <= WindowUs && a1 > a2) {
+          if (a2 == NotReached) out += LevelUp(user, 2L, fromMicros(t))
+          a2 = a1
+        } else if (s == 2 && a2 > NotReached && t - a2 <= WindowUs && a2 > a3) {
+          if (a3 == NotReached) out += LevelUp(user, 3L, fromMicros(t))
+          a3 = a2
+        }
       }
+      ((a1, a2, a3), out)
+    }
   }
 
   /** The funnel report from a materialized level-up relation — per-

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.operators.Curation
+import graft.operators.{Curation, Dedup}
 
 /** A document entering the weighted sampler: weight is its n_chars. */
 final case class WorDoc(docId: Long, source: String, nChars: Long)
@@ -35,10 +35,7 @@ object WorSampleStream {
     * content-keyed md5 coin — the same arithmetic as the Spark-side
     * `h60('wor:'||doc_id) % 2^30 + 1`, evaluated in the JVM. */
   def priority(docId: Long, nChars: Long): Long = {
-    val hex = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"wor:$docId".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(15)
-    val u = java.lang.Long.parseLong(hex, 16) % Curation.WorCoinMod + 1
+    val u = Dedup.h60(s"wor:$docId") % Curation.WorCoinMod + 1
     u * Curation.WorScale / nChars
   }
 

@@ -153,4 +153,15 @@ class SessionStageSpec extends AnyFunSuite {
     val n = SparkEntry.queries("minhash_jaccard_estimate")(spark, Dir).count()
     assert(n > 0)
   }
+
+  test("isolate drops locally checkpointed blocks without a WARN per RDD") {
+    Sessions.isolate(spark)
+    spark.range(100).toDF("x").localCheckpoint()
+    val rdds = spark.sparkContext.getPersistentRDDs.values.toSeq
+    assert(rdds.size == 1 && rdds.head.isCheckpointed)
+    // Spark logs the WARN under the RDD's runtime class (MapPartitionsRDD)
+    val (_, warns) = TestSpark.warnings(rdds.head.getClass.getName)(Sessions.isolate(spark))
+    assert(warns.isEmpty, s"isolate logged: $warns")
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+  }
 }

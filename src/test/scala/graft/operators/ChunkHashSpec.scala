@@ -74,8 +74,7 @@ class ChunkHashSpec extends AnyFunSuite {
     val got = graft.SparkEntry.queries("corpus_chunk_dedup")(spark, dir)
       .collect().toSeq
     assert(got == expected, "hash-keyed chunk dedup diverged from the string spelling")
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    graft.Sessions.isolate(spark)
     ()
   }
 }

@@ -10,8 +10,8 @@ import graft.TestSpark
   * different remainders mod 3), on crafted group sizes covering every
   * remainder class, on coarse-class boundary ties, and on the
   * single-language skew regime the respelling exists for. Also pins
-  * the heuristic: the registered query switches spellings on the
-  * documents-scan-size conf knob. */
+  * the heuristic: the registered query picks its spelling from the
+  * documents-scan size. */
 class FluencyTwoPhaseSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val Dir = "/root/testdata/sf0.001"
@@ -65,12 +65,11 @@ class FluencyTwoPhaseSpec extends AnyFunSuite {
   }
 
   test("the registered query switches spellings on the scan-size knob") {
-    val conf = TextAnalysis.FluencyTwoPhaseConf
     val window = rows(graft.SparkEntry.queries("fluency_buckets")(spark, Dir))
-    spark.conf.set(conf, "1") // every corpus is over a 1-byte threshold
-    try {
-      val twoPhase = rows(graft.SparkEntry.queries("fluency_buckets")(spark, Dir))
-      assert(twoPhase == window)
-    } finally spark.conf.unset(conf)
+    // the harness corpus is far below the threshold; a scan above it
+    // takes the two-phase spelling
+    val twoPhase = rows(TextAnalysis.fluencyTerciled(TextAnalysis.bigramFluency(spark, Dir),
+      TextAnalysis.FluencyTwoPhaseMinBytes + 1))
+    assert(twoPhase == window)
   }
 }

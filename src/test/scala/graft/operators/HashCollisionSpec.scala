@@ -87,8 +87,7 @@ class HashCollisionSpec extends AnyFunSuite {
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     assert(out == Seq((1L, 3L, 1L, 1.0)),
       s"expected only the true (1,3) pair, got $out")
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    graft.Sessions.isolate(spark)
   }
 
   test("containment verify scores the colliding candidate pair zero") {
@@ -106,7 +105,6 @@ class HashCollisionSpec extends AnyFunSuite {
       (1L, 3L, 1L, 1L, 1L, 1000L, false),
       (2L, 3L, 1L, 1L, 0L, 0L, false)),
       s"widened verify must score colliding pairs by true intersection, got $out")
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    graft.Sessions.isolate(spark)
   }
 }

@@ -81,8 +81,7 @@ class PrefixJoinHashSpec extends AnyFunSuite {
     val got = graft.SparkEntry.queries("jaccard_prefix_join")(spark, dir)
       .collect().toSeq
     assert(got == expected, "hash-typed prefix join diverged from the string spelling")
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+    graft.Sessions.isolate(spark)
     ()
   }
 }
