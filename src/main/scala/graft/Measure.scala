@@ -20,10 +20,10 @@ import scala.jdk.CollectionConverters._
   * would be missed. Both drains lie outside the clock.
   */
 object Measure {
-  /** One completed stage: its first name line, wall time from submission
-    * to completion (-1 when Spark recorded neither), executor run time
-    * summed over its tasks, its task count, the shuffle records it read
-    * and wrote, and the names of its RDDs. */
+  /** One completed stage: the plan nodes that built its RDDs, source first
+    * (e.g. `Scan parquet > Exchange`), wall ms from submission to completion
+    * (-1 when Spark recorded neither), executor run ms summed over its
+    * tasks, its task count, shuffle records read and written, RDD names. */
   final case class Stage(name: String, wallMs: Long, runMs: Long, tasks: Int,
       shuffleReadRecords: Long, shuffleWriteRecords: Long, rddNames: Seq[String])
 
@@ -50,7 +50,8 @@ object Measure {
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
         val i = e.stageInfo
         val m = Option(i.taskMetrics)
-        stages.add(Stage(i.name.takeWhile(_ != '\n'),
+        val nodes = i.rddInfos.sortBy(_.id).map(r => r.scope.fold(r.name)(_.name.trim)).distinct
+        stages.add(Stage(nodes.mkString(" > "),
           (for (s <- i.submissionTime; c <- i.completionTime) yield c - s).getOrElse(-1L),
           m.fold(0L)(_.executorRunTime), i.numTasks,
           m.fold(0L)(_.shuffleReadMetrics.recordsRead),

@@ -16,7 +16,7 @@ object Profile {
       val fn = SparkEntry.queries(n)
       val run = (1 to Reps).map(_ => Measure.query(spark, fn, dir)).last
       println(f"===== $n%s: ${run.wallS}%.3f s, ${run.jobs.size}%d jobs, ${run.stages.size}%d stages =====")
-      run.stages.foreach(s => println(f"  ${s.wallMs}%6d ms wall ${s.runMs}%6d ms run ${s.tasks}%4d tasks  ${s.name.take(60)}%s"))
+      run.stages.foreach(s => println(f"  ${s.wallMs}%6d ms wall ${s.runMs}%6d ms run ${s.tasks}%4d tasks  ${s.name}%s"))
     }
     spark.stop()
   }

@@ -221,13 +221,4 @@ object Tables {
     val rdrs = readers.synchronized { Option(readers.get(spark)) }
     rdrs.foreach(m => m.synchronized(m.clear()))
   }
-
-  /** Test seam: how many LIVE stage tables this session currently holds
-    * (soft-cleared entries don't count — their data may still sit in
-    * the CacheManager, but the registry no longer tracks them). */
-  private[graft] def stagedCount(spark: SparkSession): Int =
-    stageTables.synchronized {
-      Option(stageTables.get(spark))
-        .map(_.valuesIterator.count(_.get != null)).getOrElse(0)
-    }
 }

@@ -99,13 +99,7 @@ object Dedup {
        | FROM documents)""".stripMargin
 
   /** Distinct word-3-gram shingles per doc (docs shorter than 3 words
-    * yield none). One row per (doc_id, shingle). */
-  private def shingled(df: DataFrame): DataFrame =
-    df.withColumn("words", split(col("text"), " "))
-      .filter(size(col("words")) >= 3)
-      .select(col("doc_id"), explode(array_distinct(expr(
-        "transform(sequence(0, size(words)-3)," +
-          " i -> concat_ws(' ', words[i], words[i+1], words[i+2]))"))).as("shingle"))
+    * yield none), in DuckDB SQL. One row per (doc_id, shingle). */
   private def shingledSql(rel: String): String =
     s"""(SELECT doc_id, unnest(list_distinct(
        |   list_transform(range(1, len(words)-1),

@@ -72,10 +72,9 @@ object ChatPipeline {
       // cached once for both stores; an empty batch (e.g. the no-data
       // batch that only advances the watermark) writes nothing to either
       val rows = batch.toDF().persist()
-      try {
-        // materializes the cache before either merge reads it: two merges
-        // reading an unmaterialized cache would each compute the diff
-        val batchKeys = MergeSink.batchKeys(rows, keys)
+      // both merges key by the one key set, whose collect materializes the
+      // cache first: two merges reading it unmaterialized would each diff
+      try MergeSink.withKeySet(rows, keys) { batchKeys =>
         alongside(rows.sparkSession.asInstanceOf[classic.SparkSession])(
           MergeSink.mergeDistinct(rows, keys, msgStorePath, MergeSink.Upsert, batchKeys),
           MergeSink.mergeDistinct(toDocRows(rows), keys, docStorePath, MergeSink.Upsert,

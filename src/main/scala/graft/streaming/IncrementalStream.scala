@@ -28,7 +28,7 @@ case class Recrawl(doc_id: Long, new_text: String, removed: Boolean)
   *      batch delta's;
   *   3. deliver the delta to the sink, and only then merge the state:
   *      upsert (doc_id, hash) for added/changed rows, delete for
-  *      removals, snapshot-swapped like [[MergeSink]] (a production
+  *      removals, by [[MergeSink]]'s touched-file rewrite (a production
   *      cluster swaps in Delta/Iceberg `MERGE INTO` with the same call
   *      sites). Sink-before-state is the at-least-once commit order —
   *      see [[processBatch]].
@@ -106,11 +106,11 @@ object IncrementalStream {
       // sink FIRST — a throw here propagates, the batch fails, and the
       // replay runs against the still-unadvanced state
       onDelta(out, batchId)
-      // state merge: upsert new hashes, drop removals
-      val touched = diff.select("doc_id")
-      val nextState = state.join(touched, Seq("doc_id"), "left_anti")
-        .unionByName(upserts.select(col("doc_id"), col("h_new").as("h")))
-      MergeSink.writeSnapshot(nextState, statePath)
+      // state merge, keyed by the delta's doc_ids: an added or changed
+      // doc's key holds its new hash, a retired doc's key holds no row
+      MergeSink.withKeySet(diff, Seq("doc_id"))(MergeSink.mergeDistinct(
+        upserts.select(col("doc_id"), col("h_new").as("h")), Seq("doc_id"), statePath,
+        MergeSink.Upsert, _))
     } finally {
       // a long-running query must not accumulate one block set per batch
       diff.unpersist()

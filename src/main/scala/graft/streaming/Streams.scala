@@ -271,8 +271,9 @@ object Streams {
   * don't change.
   *
   * A merge rewrites only the data files that hold a key of the
-  * deduplicated batch. One scan of the key columns finds them
-  * (`_metadata.file_path` left-semi-joined to the broadcast batch keys).
+  * deduplicated batch. One scan of the key columns finds them: the rows
+  * whose key is in the batch's key set, one broadcast variable that every
+  * store a micro-batch merges into shares.
   * The batch's merged rows go to one new file, the touched files'
   * surviving rows are rewritten, and every other data file is hard-linked
   * into the next snapshot as it is. So a merge writes in proportion to
@@ -306,8 +307,10 @@ object Streams {
 object MergeSink {
   import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   import scala.jdk.CollectionConverters._
+  import org.apache.parquet.HadoopReadOptions
   import org.apache.parquet.hadoop.ParquetFileReader
   import org.apache.parquet.hadoop.util.HadoopInputFile
+  import org.apache.spark.broadcast.Broadcast
   import org.apache.spark.sql.Row
   import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -340,25 +343,30 @@ object MergeSink {
     */
   def merge(batch: DataFrame, keys: Seq[String], path: String, mode: Mode): Unit = {
     val rows = batch.dropDuplicates(keys).persist() // replay/page-overlap safety
-    try mergeDistinct(rows, keys, path, mode, batchKeys(rows, keys))
+    try withKeySet(rows, keys)(mergeDistinct(rows, keys, path, mode, _))
     finally rows.unpersist()
   }
 
-  /** The key columns of `rows`, collected to the driver. On a cached
-    * batch this job also materializes the cache. */
-  private[streaming] def batchKeys(rows: DataFrame, keys: Seq[String]): Array[Row] =
-    rows.select(keys.map(col): _*).collect()
+  /** Runs `body` with the keys of `rows`, collected once (on a cached
+    * batch this job also materializes the cache) and held in one broadcast
+    * variable, which runs no job and is released when `body` returns. */
+  private[streaming] def withKeySet[T](rows: DataFrame, keys: Seq[String])(
+      body: Broadcast[Set[Row]] => T): T = {
+    val keySet = rows.sparkSession.sparkContext.broadcast[Set[Row]](
+      rows.select(keys.map(col): _*).collect().toSet)
+    try body(keySet) finally keySet.destroy()
+  }
 
-  /** [[merge]] of a batch that holds at most one row per key, whose keys
-    * are `keyRows` ([[batchKeys]]). The batch is read several times, so
-    * the caller should have it cached. */
+  /** [[merge]] of a batch that holds at most one row per key, all of them
+    * in `keySet`. A key of `keySet` with no row in the batch deletes the
+    * key's stored row in [[Upsert]] mode. The batch is read several times
+    * in the other modes, so the caller should have it cached. */
   private[streaming] def mergeDistinct(rows: DataFrame, keys: Seq[String], path: String,
-      mode: Mode, keyRows: Array[Row]): Unit =
-    rewrite(rows, keys, keyRows, path, inserts = mode != UpdateOnly) { (state, batchKeys) =>
+      mode: Mode, keySet: Broadcast[Set[Row]]): Unit =
+    rewrite(rows, keys, keySet, path, inserts = mode != UpdateOnly) { state =>
       mode match {
         case InsertIgnore => // state wins on match
-          state.join(batchKeys, keys, "left_semi")
-            .unionByName(rows.join(state.select(keys.map(col): _*), keys, "left_anti"))
+          state.unionByName(rows.join(state.select(keys.map(col): _*), keys, "left_anti"))
         case UpdateOnly => // batch overwrites matched, unmatched batch rows dropped
           rows.join(state.select(keys.map(col): _*), keys, "left_semi")
         case Upsert => rows // batch overwrites matched + inserts new
@@ -366,52 +374,53 @@ object MergeSink {
     }
 
   /** Touched-file copy-on-write shared by every merge (see the object
-    * doc), of `rows` whose key columns are `batchKeys`.
-    * `matched(state, batchKeys)` gives the rows the batch's keys
-    * hold after the merge, from the rows of the touched files and the
-    * broadcast batch keys; every other stored row survives as it is.
-    * `inserts` says whether a batch key absent from the store adds a
-    * row: a batch that can only update writes nothing when it touches
-    * no file. */
-  private def rewrite(rows: DataFrame, keys: Seq[String], batchKeys: Array[Row], path: String,
-      inserts: Boolean)(matched: (DataFrame, DataFrame) => DataFrame): Unit = {
+    * doc), of `rows` keyed by `keySet`. One predicate, key in `keySet`,
+    * picks the touched files, the stored rows `matched(state)` turns into
+    * the rows the batch's keys hold after the merge, and (negated) the
+    * stored rows that survive as they are. `inserts` says whether a batch
+    * key absent from the store adds a row: a batch that can only update
+    * writes nothing when it touches no file. */
+  private def rewrite(rows: DataFrame, keys: Seq[String], keySet: Broadcast[Set[Row]],
+      path: String, inserts: Boolean)(matched: DataFrame => DataFrame): Unit = {
     val spark = rows.sparkSession
     recover(path)
-    if (batchKeys.isEmpty) return
+    if (keySet.value.isEmpty) return
     if (!Files.exists(Paths.get(path))) {
       if (inserts) writeSnapshot(rows.coalesce(1), path)
       return
     }
     val files = dataFiles(Paths.get(path))
+    // the one-argument open parses a fresh Hadoop conf per footer
+    val conf = spark.sparkContext.hadoopConfiguration
+    val options = HadoopReadOptions.builder(conf).build()
     val footers = files.map { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(f.toUri), spark.sparkContext.hadoopConfiguration))
+      val reader = ParquetFileReader.open(
+        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf), options)
       try reader.getFooter finally reader.close()
     }
     // the schema Spark stored in the footer, read on the driver: schema
     // inference would run a Spark job per merge
     val schema = DataType.fromJson(footers.head.getFileMetaData.getKeyValueMetaData
       .get("org.apache.spark.sql.parquet.row.metadata")).asInstanceOf[StructType]
-    def read(files: Seq[Path]): DataFrame =
-      if (files.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
-      else spark.read.schema(schema).parquet(files.map(_.toString): _*)
-    val batchKeyRel = broadcast(spark.createDataFrame(batchKeys.toSeq.asJava,
-      StructType(keys.map(rows.schema(_)))))
-    def survivors(files: Seq[Path]): DataFrame = read(files).join(batchKeyRel, keys, "left_anti")
+    def read(fs: Seq[Path]): DataFrame =
+      if (fs.isEmpty) read(files).where(lit(false)) // planned as an empty relation
+      else spark.read.schema(schema).parquet(fs.map(_.toString): _*)
+    val inBatch = udf((key: Row) => keySet.value.contains(key)).apply(struct(keys.map(col): _*))
+    def survivors(fs: Seq[Path]): DataFrame = read(fs).filter(!inBatch)
     val hit = read(files)
       .select(keys.map(col) :+ col("_metadata.file_path"): _*)
-      .join(batchKeyRel, keys, "left_semi")
-      .collect().map(r => Paths.get(new java.net.URI(r.getString(keys.size))).getFileName).toSet
+      .filter(inBatch).select("file_path")
+      .collect().map(r => Paths.get(new java.net.URI(r.getString(0))).getFileName).toSet
     val touched = files.filter(f => hit(f.getFileName))
     if (touched.isEmpty && !inserts) return
     val bySize = files.zip(footers.map(_.getBlocks.asScala.map(_.getRowCount).sum))
       .sortBy { case (f, n) => (n, f.getFileName.toString) }
     // rows gathered before each file: the batch plus every smaller file
-    val gathered = bySize.scanLeft(batchKeys.length.toLong)(_ + _._2)
+    val gathered = bySize.scanLeft(keySet.value.size.toLong)(_ + _._2)
     val folded = bySize.zip(gathered).takeWhile { case ((_, n), g) => n <= 2 * g }.map(_._1._1)
     val apart = touched.filterNot(folded.contains)
-    val newFile = matched(read(touched), batchKeyRel).select(schema.fieldNames.toSeq.map(col): _*)
-      .unionByName(survivors(folded)).coalesce(1)
+    val newFile = matched(read(touched).filter(inBatch))
+      .select(schema.fieldNames.toSeq.map(col): _*).unionByName(survivors(folded)).coalesce(1)
     // survivors(apart) keeps its scan's partitions (about one per file),
     // so its rows stay out of the new file; a coalesce(1) here would make
     // the union a single partition and so a single file
@@ -432,8 +441,7 @@ object MergeSink {
   /** Snapshot swap: write `rows` next to the live dir, hard-link the
     * `carried` data files (and their checksums) of the live snapshot in
     * beside them, then two atomic renames (see [[merge]] Scaladoc for the
-    * crash-recovery contract). A whole-snapshot write carries no files;
-    * [[IncrementalStream]]'s hash-state store writes that way. */
+    * crash-recovery contract). A store's first write carries no files. */
   private[streaming] def writeSnapshot(rows: DataFrame, path: String,
       carried: Seq[Path] = Nil): Unit = {
     val tmp = Paths.get(path + ".tmp")
@@ -465,7 +473,7 @@ object MergeSink {
     */
   def mergeStruct(batch: DataFrame, keys: Seq[String], path: String, structCol: String): Unit = {
     val deduped = batch.dropDuplicates(keys).persist()
-    try rewrite(deduped, keys, batchKeys(deduped, keys), path, inserts = true) { (state, _) =>
+    try withKeySet(deduped, keys)(rewrite(deduped, keys, _, path, inserts = true) { state =>
       val others = state.columns.filterNot(c => keys.contains(c) || c == structCol).toSeq
       val fields = state.schema(structCol).dataType.asInstanceOf[StructType].fieldNames.toSeq
       val st = state.select(keys.map(col) ++ others.map(c => col(c).as(s"_s_$c")) :+
@@ -480,6 +488,6 @@ object MergeSink {
           when(col("_b_sub").isNull, col("_s_sub"))
             .when(col("_s_sub").isNull, col("_b_sub"))
             .otherwise(mergedSub).as(structCol): _*)
-    } finally deduped.unpersist()
+    }) finally deduped.unpersist()
   }
 }

@@ -57,6 +57,14 @@ class MeasureSpec extends AnyFunSuite {
     } finally pool.shutdown()
   }
 
+  test("the two stages of a shuffle query are named apart, by their plan nodes") {
+    val (_, run) = Measure(spark)(shuffleQuery())
+    val names = run.stages.map(_.name)
+    assert(names.size == 2, names)
+    assert(names.distinct.size == 2, s"stages share a name: $names")
+    assert(names.head.endsWith("Exchange") && names.last.startsWith("AQEShuffleRead"), names)
+  }
+
   test("a body that throws propagates its exception, and the next Measure sees only its own jobs") {
     val e = intercept[IllegalStateException] {
       Measure(spark) {

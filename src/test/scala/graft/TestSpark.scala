@@ -46,21 +46,27 @@ object TestSpark {
       finally Sessions.isolate(spark)
     }
 
-  /** The messages of the WARN events the logger named `logger` emits
-    * while `body` runs, seen through a log4j2 appender on the root
-    * logger (logging is synchronous, so every event has arrived when
-    * `body` returns). */
+  /** The messages of the WARN events that the logger named `logger`, or
+    * a logger named after a subclass of the class `logger` names, emits
+    * while `body` runs, seen through a log4j2 appender on the root logger
+    * (logging is synchronous, so every event has arrived when `body`
+    * returns). Spark names each logger after the runtime class, so a base
+    * class's own name alone would hear none of its subclasses' WARNs. */
   def warnings[T](logger: String)(body: => T): (T, Seq[String]) = {
     import org.apache.logging.log4j.{Level, LogManager}
     import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
     import org.apache.logging.log4j.core.appender.AbstractAppender
     import org.apache.logging.log4j.core.config.Property
     spark // Spark configures logging on start-up; attach after it
+    val base = scala.util.Try(Class.forName(logger)).toOption
+    def heard(name: String): Boolean = name == logger || base.exists(b =>
+      scala.util.Try(b.isAssignableFrom(Class.forName(name, false, b.getClassLoader)))
+        .getOrElse(false))
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val app = new AbstractAppender(s"warnings ${java.util.UUID.randomUUID()}",
         null, null, true, Property.EMPTY_ARRAY) {
       override def append(e: LogEvent): Unit =
-        if (e.getLevel == Level.WARN && e.getLoggerName == logger)
+        if (e.getLevel == Level.WARN && heard(e.getLoggerName))
           seen.add(e.getMessage.getFormattedMessage)
     }
     val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]

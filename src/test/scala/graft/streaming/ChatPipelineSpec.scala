@@ -139,7 +139,7 @@ class ChatPipelineSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("a data micro-batch computes the diff once, in at most 9 jobs, all of its batch") {
+  test("a data micro-batch computes the diff once, in at most 5 jobs, all of its batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val in = MemoryStream[RawPage]
@@ -159,9 +159,30 @@ class ChatPipelineSpec extends AnyFunSuite {
       val batch = q.recentProgress.filter(_.numInputRows > 0).last.batchId
       val batchJobs = jobs.filter(_.endsWith(s"batch = $batch"))
       assert(diffRuns == 1, s"the diff ran $diffRuns times")
-      assert(batchJobs.size <= 9, s"${batchJobs.size} jobs in batch $batch")
+      assert(batchJobs.size <= 5, s"${batchJobs.size} jobs in batch $batch")
       // jobs of the second merge thread carry the stream's description too
       assert(jobs.forall(_.contains(s"runId = ${q.runId}")), s"jobs outside the stream: $jobs")
+    } finally q.stop()
+  }
+
+  test("a data micro-batch ships its keys to the merges without a job") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val in = MemoryStream[RawPage]
+    val q = start(in, Files.createTempDirectory("chatpipe-keys"))
+    try {
+      in.addData(fetch(5))
+      q.processAllAvailable()
+      val (_, run) = Measure(spark) {
+        in.addData(fetch(7, deleted = Set(2L)))
+        q.processAllAvailable()
+      }
+      // a local relation is read through a parallelize; the page source's
+      // one feeds the diff's shuffle, a broadcast of local key rows feeds
+      // none
+      val shipped = run.stages.filter(s =>
+        s.rddNames.contains("ParallelCollectionRDD") && s.shuffleWriteRecords == 0)
+      assert(shipped.isEmpty, s"stages of a local relation: $shipped")
     } finally q.stop()
   }
 

@@ -1,9 +1,11 @@
 package graft.streaming
 
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import graft.{SparkEntry, TestSpark}
 import graft.operators.Pipeline
 
@@ -205,6 +207,42 @@ class IncrementalStreamSpec extends AnyFunSuite {
     try q2.processAllAvailable() finally q2.stop()
     assert(delivered.toSeq == Seq(someId),
       s"replayed batch must deliver the delta exactly once, got $delivered")
+  }
+
+  test("a one-doc batch rewrites only the state file that holds the doc") {
+    import spark.implicits._
+    val statePath = freshStatePath("touched")
+    MergeSink.writeSnapshot(graft.Tables.documents(spark, Dir)
+      .select(col("doc_id"), md5(col("text")).as("h"))
+      .repartitionByRange(4, col("doc_id")), statePath)
+    val dir = Paths.get(statePath)
+    val before = {
+      val listing = Files.list(dir)
+      try listing.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.endsWith(".parquet")).toSeq
+      finally listing.close()
+    }
+    assert(before.size == 4)
+    // hold each file by a link of our own, so its inode outlives the swap
+    val held = Files.createTempDirectory("graft-incr-held")
+    before.foreach(f => Files.createLink(held.resolve(f), dir.resolve(f)))
+    val someId = graft.Tables.documents(spark, Dir)
+      .select("doc_id").orderBy("doc_id").first().getLong(0)
+    val holder = IncrementalStream.readState(spark, statePath).filter(col("doc_id") === someId)
+      .select("_metadata.file_name").first().getString(0)
+    val text = "fresh text for the touched-file test"
+    IncrementalStream.processBatch(Seq(Recrawl(someId, text, removed = false)).toDF(), statePath,
+      0L)((_, _) => ())
+    before.filterNot(_ == holder).foreach { f =>
+      assert(Files.exists(dir.resolve(f)) && Files.isSameFile(dir.resolve(f), held.resolve(f)),
+        s"untouched state file $f was not carried as the same inode")
+    }
+    assert(!Files.exists(dir.resolve(holder)), s"touched state file $holder kept")
+    val state = IncrementalStream.readState(spark, statePath)
+    assert(state.count() == graft.Tables.documents(spark, Dir).count())
+    val digest = java.security.MessageDigest.getInstance("MD5").digest(text.getBytes("UTF-8"))
+    assert(state.filter(col("doc_id") === someId).select("h").as[String].collect().toSeq ==
+      Seq(digest.map("%02x".format(_)).mkString))
   }
 
   test("junk-gated docs update the hash state but emit no survivor row") {
