@@ -40,10 +40,11 @@ object ScanQueries {
     * driver-side setup exactly like [[archiveDir]]) and then read
     * through the same binaryFile source the 100 TB backfill path uses —
     * page bytes reach executors via the source, never as a
-    * driver-captured literal. */
+    * driver-captured literal. Its mtime, the page's fetch time, is the
+    * frozen clock `at` of its golden test. */
   private lazy val stagedFixtures: java.nio.file.Path =
     java.nio.file.Files.createTempDirectory("graft-fixtures")
-  private def page(spark: SparkSession, key: String, fixture: String) = {
+  private def page(spark: SparkSession, key: String, fixture: String, at: Instant = Now) = {
     val f = stagedFixtures.resolve(s"${key}__$fixture.html")
     // Stage via a dot-prefixed temp (hidden to Spark's file listing) and
     // rename into place: rename(2) is atomic on POSIX, so a concurrent
@@ -53,6 +54,7 @@ object ScanQueries {
     val tmp = java.nio.file.Files.createTempFile(stagedFixtures, ".stage-", ".tmp")
     java.nio.file.Files.copy(fixturePage(fixture), tmp,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    tmp.toFile.setLastModified(at.toEpochMilli)
     java.nio.file.Files.move(tmp, f,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     Scans.readArchive(spark, f.toString)
@@ -89,12 +91,14 @@ object ScanQueries {
     * Each page anchors to the `now` of its golden test so the yearless
     * timestamp repair runs its real paths: the second fixture is the
     * December-mail-read-in-January rollover (test_mailbox.py:44-47). */
-  val htmlScanMessage: Q = (spark, _) =>
-    Scans.messageScan(page(spark, "782186", "message"),
-        Instant.parse("2022-06-16T23:59:59Z")).toDF()
-      .unionByName(Scans.messageScan(page(spark, "781884", "message_year"),
-        Instant.parse("2023-01-02T00:00:00Z")).toDF())
+  val htmlScanMessage: Q = (spark, _) => {
+    val (june, january) = (Instant.parse("2022-06-16T23:59:59Z"),
+      Instant.parse("2023-01-02T00:00:00Z"))
+    Scans.messageScan(page(spark, "782186", "message", june), june).toDF()
+      .unionByName(Scans.messageScan(page(spark, "781884", "message_year", january),
+        january).toDF())
       .orderBy("id")
+  }
 
   /** The archived-page backfill path, end-to-end: fixtures copied once
     * into a page-per-file archive layout (`<key>__<id>.html`), read as
@@ -106,7 +110,9 @@ object ScanQueries {
     val dir = java.nio.file.Files.createTempDirectory("graft-archive")
     Seq("help__1" -> "chat_help", "global__1" -> "chat_complex", "global__2" -> "chat_long")
       .foreach { case (name, fixture) =>
-        java.nio.file.Files.copy(fixturePage(fixture), dir.resolve(s"$name.html"))
+        val f = dir.resolve(s"$name.html")
+        java.nio.file.Files.copy(fixturePage(fixture), f)
+        f.toFile.setLastModified(Now.toEpochMilli)
       }
     dir.toString
   }

@@ -2,6 +2,7 @@ package graft.sources
 
 import java.time.Instant
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.types._
 
 /** A fetched page: where it came from + raw bytes-as-string.
   * `room`/`key` is the scrape key (chat room, username, mail id). */
@@ -15,24 +16,29 @@ final case class RawPage(key: String, html: String, fetchedAt: java.sql.Timestam
   * sequential logic inside one page (day-rollover state walk) is
   * intentionally per-page, exactly like the reference. Typed Datasets
   * keep the parsers unit-testable off-cluster.
+  *
+  * The dated scans parse each page against its own `fetchedAt`, the
+  * clock the reference parses each response against (day and year
+  * rollovers, scrapers/chat.py:36-51,100-105). Their `now` is only the
+  * clock of a page whose fetch time is null.
   */
 object Scans {
   def chatScan(pages: Dataset[RawPage], now: Instant): Dataset[ChatMessage] = {
     val spark = pages.sparkSession
     import spark.implicits._
-    pages.flatMap(p => HtmlParsers.parseChat(p.key, p.html, now))
+    pages.flatMap(p => HtmlParsers.parseChat(p.key, p.html, clock(p, now)))
   }
 
   def flagsScan(pages: Dataset[RawPage], now: Instant): Dataset[ChatMessage] = {
     val spark = pages.sparkSession
     import spark.implicits._
-    pages.flatMap(p => HtmlParsers.parseFlags(p.key, p.html, now))
+    pages.flatMap(p => HtmlParsers.parseFlags(p.key, p.html, clock(p, now)))
   }
 
   def profileScan(pages: Dataset[RawPage], now: Instant): Dataset[UserSnapshot] = {
     val spark = pages.sparkSession
     import spark.implicits._
-    pages.map(p => HtmlParsers.parseProfile(p.key, p.html, now))
+    pages.map(p => HtmlParsers.parseProfile(p.key, p.html, clock(p, now)))
   }
 
   def onlineScan(pages: Dataset[RawPage]): Dataset[String] = {
@@ -50,8 +56,12 @@ object Scans {
   def messageScan(pages: Dataset[RawPage], now: Instant): Dataset[Mail] = {
     val spark = pages.sparkSession
     import spark.implicits._
-    pages.map(p => HtmlParsers.parseMessage(p.key.toLong, p.html, now))
+    pages.map(p => HtmlParsers.parseMessage(p.key.toLong, p.html, clock(p, now)))
   }
+
+  /** The clock page `p` is parsed against: its fetch time, else `now`. */
+  private def clock(p: RawPage, now: Instant): Instant =
+    Option(p.fetchedAt).fold(now)(_.toInstant)
 
   /** Archived-page backfill: a directory tree of captured pages as a
     * distributed `Dataset[RawPage]`, page-per-file via the binaryFile
@@ -59,8 +69,10 @@ object Scans {
     * parsers the live stream uses (each scan above is source-agnostic).
     * The scrape key is the file name's prefix before "__" (archive
     * convention `<key>__<fetch-id>.html`), or the bare stem when there
-    * is none; fetchedAt is the file's modification time. Reading is
-    * file-parallel with no shuffle; pages parse where they are read.
+    * is none; fetchedAt is the file's modification time, so a copy of
+    * the archive that does not keep mtimes dates every page to the copy.
+    * Reading is file-parallel with no shuffle; pages parse where they are
+    * read.
     */
   def readArchive(spark: SparkSession, dir: String): Dataset[RawPage] = {
     import spark.implicits._
@@ -77,7 +89,10 @@ object Scans {
   def streamArchive(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Int = 1000): Dataset[RawPage] =
     toPages(spark.readStream.format("binaryFile")
-      .schema("path STRING, modificationTime TIMESTAMP, length LONG, content BINARY")
+      // a StructType, not a DDL string: parsing one initialises the SQL
+      // parser, which no other step of a stream's start needs
+      .schema(new StructType().add("path", StringType).add("modificationTime", TimestampType)
+        .add("length", LongType).add("content", BinaryType))
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .load(dir))
 

@@ -16,8 +16,8 @@ case class Recrawl(doc_id: Long, new_text: String, removed: Boolean)
   * Streaming `foreachBatch` loop over crawl results.
   *
   * Per micro-batch:
-  *   1. diff the batch against the persisted content-hash state — a
-  *      LEFT join (batch side drives; docs not crawled this batch are
+  *   1. diff the batch against the persisted content-hash state — ONE
+  *      LEFT join of crawls and removals (docs not in the batch are
   *      untouched, which is what distinguishes the continuous mode from
   *      the batch query's full-snapshot full-outer diff); equal-hash
   *      rows are SKIPPED (no output, no state write) — the
@@ -48,7 +48,7 @@ object IncrementalStream {
 
   /** Hash-state rows at `statePath`: (doc_id, h). */
   def readState(spark: SparkSession, statePath: String): DataFrame =
-    if (new java.io.File(statePath).exists()) spark.read.parquet(statePath)
+    if (new java.io.File(statePath).exists()) graft.Tables.parquet(spark, statePath)
     else spark.emptyDataFrame
       .select(lit(0L).as("doc_id"), lit("").as("h")).limit(0)
 
@@ -81,23 +81,19 @@ object IncrementalStream {
     // replay/page-overlap safety; a doc both crawled and removed in one
     // batch resolves to the crawl (the fetch is fresher evidence than a
     // stale 404 from an earlier page of the same poll)
-    val crawled = batch.filter(!col("removed"))
-      .select(col("doc_id"), col("new_text"), md5(col("new_text")).as("h_new"))
-      .dropDuplicates("doc_id")
-    val removals = batch.filter(col("removed")).select("doc_id")
-      .join(crawled.select("doc_id"), Seq("doc_id"), "left_anti")
-      .dropDuplicates("doc_id")
-    val upserts = crawled.join(state, Seq("doc_id"), "left_outer")
+    val crawled = batch.filter(!col("removed")).dropDuplicates("doc_id")
+    val removals = batch.filter(col("removed"))
+      .join(crawled.select("doc_id"), Seq("doc_id"), "left_anti").dropDuplicates("doc_id")
+    // one join against the state; an equal hash or an unknown doc's removal
+    // is skipped. Cached: read by deltaStages' two branches AND the merge
+    val diff = crawled.unionByName(removals).join(state, Seq("doc_id"), "left_outer")
+      .withColumn("h_new", md5(col("new_text")))
       .withColumn("status",
-        when(col("h").isNull, lit("added"))
+        when(col("removed"), when(col("h").isNotNull, lit("removed")))
+          .when(col("h").isNull, lit("added"))
           .when(col("h") =!= col("h_new"), lit("changed")))
-      .filter(col("status").isNotNull) // equal hash → skip entirely
-    val retired = removals.join(state, Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), lit("removed").as("status"),
-        lit(null).cast("string").as("new_text"))
-    // delta-sized; read by deltaStages' two branches AND the state merge
-    val diff = upserts.select("doc_id", "status", "new_text")
-      .unionByName(retired).persist()
+      .filter(col("status").isNotNull)
+      .select("doc_id", "status", "new_text", "h_new").persist()
     val out = Pipeline.deltaStages(diff).persist()
     try {
       // materialize against the PRE-batch state before anything mutates
@@ -109,8 +105,8 @@ object IncrementalStream {
       // state merge, keyed by the delta's doc_ids: an added or changed
       // doc's key holds its new hash, a retired doc's key holds no row
       MergeSink.withKeySet(diff, Seq("doc_id"))(MergeSink.mergeDistinct(
-        upserts.select(col("doc_id"), col("h_new").as("h")), Seq("doc_id"), statePath,
-        MergeSink.Upsert, _))
+        diff.filter(col("status") =!= "removed").select(col("doc_id"), col("h_new").as("h")),
+        Seq("doc_id"), statePath, MergeSink.Upsert, _))
     } finally {
       // a long-running query must not accumulate one block set per batch
       diff.unpersist()

@@ -307,12 +307,10 @@ object Streams {
 object MergeSink {
   import java.nio.file.{Files, Path, Paths, StandardCopyOption}
   import scala.jdk.CollectionConverters._
-  import org.apache.parquet.HadoopReadOptions
-  import org.apache.parquet.hadoop.ParquetFileReader
-  import org.apache.parquet.hadoop.util.HadoopInputFile
   import org.apache.spark.broadcast.Broadcast
   import org.apache.spark.sql.Row
-  import org.apache.spark.sql.types.{DataType, StructType}
+  import org.apache.spark.sql.types.StructType
+  import graft.Tables
 
   sealed trait Mode
   case object InsertIgnore extends Mode
@@ -389,19 +387,9 @@ object MergeSink {
       if (inserts) writeSnapshot(rows.coalesce(1), path)
       return
     }
-    val files = dataFiles(Paths.get(path))
-    // the one-argument open parses a fresh Hadoop conf per footer
-    val conf = spark.sparkContext.hadoopConfiguration
-    val options = HadoopReadOptions.builder(conf).build()
-    val footers = files.map { f =>
-      val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf), options)
-      try reader.getFooter finally reader.close()
-    }
-    // the schema Spark stored in the footer, read on the driver: schema
-    // inference would run a Spark job per merge
-    val schema = DataType.fromJson(footers.head.getFileMetaData.getKeyValueMetaData
-      .get("org.apache.spark.sql.parquet.row.metadata")).asInstanceOf[StructType]
+    val files = Tables.dataFiles(Paths.get(path))
+    val footers = files.map(Tables.footer(spark.sparkContext.hadoopConfiguration, _))
+    val schema = Tables.parquetSchema(spark, path)
     def read(fs: Seq[Path]): DataFrame =
       if (fs.isEmpty) read(files).where(lit(false)) // planned as an empty relation
       else spark.read.schema(schema).parquet(fs.map(_.toString): _*)
@@ -426,16 +414,6 @@ object MergeSink {
     // the union a single partition and so a single file
     writeSnapshot(if (apart.isEmpty) newFile else survivors(apart).unionByName(newFile),
       path, files.filterNot(f => touched.contains(f) || folded.contains(f)))
-  }
-
-  /** The parquet data files of a snapshot dir. */
-  private def dataFiles(dir: Path): Seq[Path] = {
-    val listing = Files.list(dir)
-    try listing.iterator().asScala.filter { f =>
-      val name = f.getFileName.toString
-      !name.startsWith("_") && !name.startsWith(".")
-    }.toSeq
-    finally listing.close()
   }
 
   /** Snapshot swap: write `rows` next to the live dir, hard-link the

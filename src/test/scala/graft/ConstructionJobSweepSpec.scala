@@ -81,10 +81,8 @@ class ConstructionJobSweepSpec extends AnyFunSuite {
     "lsh_vs_exact_recall")
 
   test("query construction is lazy (no jobs before the first action)") {
-    // Warm the per-session reader memo first: the FIRST access to each
-    // table runs its one FileIndex/schema job (Tables.table scaladoc) —
-    // a once-per-session catalog cost, not a per-query eagerness bug.
-    Tables.names.foreach(n => Tables.table(spark, Dir, n))
+    // the reader memo is not primed: a cold table read runs no job either
+    Tables.invalidate(spark)
     val offenders = TestSpark.sweepRegistry { (name, fn) =>
       val n = Measure(spark)(fn(spark, Dir))._2.jobs.size // construct ONLY — no action
       if (n > 0 && !EagerByDesign.contains(name))

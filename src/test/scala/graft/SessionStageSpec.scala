@@ -14,7 +14,6 @@ class SessionStageSpec extends AnyFunSuite {
   private val Dir = "/root/testdata/sf0.001"
 
   test("table readers are memoized per (session, path)") {
-    // spark.read.parquet re-derives FileIndex+schema as a job per call;
     // the memo returns one reader relation per table per session (the
     // catalog-table model — see Tables.table scaladoc)
     val a = Tables.table(spark, Dir, "documents")
@@ -23,6 +22,12 @@ class SessionStageSpec extends AnyFunSuite {
     val other = Tables.table(spark, "/root/testdata/sf0.1", "documents")
     assert(!(other eq a), "different dirs must not share a reader")
     assert(a.count() == 500 && other.count() == 5000) // and they read the right files
+  }
+
+  test("a table read after invalidate runs no job") {
+    Tables.invalidate(spark)
+    val (_, run) = Measure(spark)(Tables.table(spark, Dir, "orders"))
+    assert(run.jobs.isEmpty, s"a cold table read ran ${run.jobs.size} job(s)")
   }
 
   test("stage builds once per session and returns the same relation") {

@@ -44,6 +44,9 @@ class ScansSpec extends AnyFunSuite {
     java.nio.file.Files.writeString(dir.resolve("help__0001.html"), load("chat_help"))
     java.nio.file.Files.writeString(dir.resolve("global__0002.html"), load("chat_complex"))
     java.nio.file.Files.writeString(dir.resolve("trade.html"), load("chat_deleted"))
+    // each file's mtime is its page's fetch time: the test's frozen clock
+    Seq("help__0001", "global__0002", "trade")
+      .foreach(f => dir.resolve(s"$f.html").toFile.setLastModified(Now.toEpochMilli))
     val pages = Scans.readArchive(spark, dir.toString)
     assert(pages.collect().map(_.key).sorted.toSeq == Seq("global", "help", "trade"))
     val got = Scans.chatScan(pages, Now).collect().toSeq
@@ -52,6 +55,17 @@ class ScansSpec extends AnyFunSuite {
         HtmlParsers.parseChat("global", load("chat_complex"), Now) ++
         HtmlParsers.parseChat("trade", load("chat_deleted"), Now)
     assert(got.sortBy(_.id) == expected.sortBy(_.id))
+  }
+
+  test("chatScan dates a page fetched 25 h before now to its messages' real day") {
+    import spark.implicits._
+    val posted = Now.minusSeconds(25 * 3600)
+    val msgs = (1L to 3L).map(i => (i, posted.plusSeconds(i)))
+    val page = RawPage("old", graft.streaming.ChatPages.page(msgs),
+      java.sql.Timestamp.from(posted.plusSeconds(5)))
+    val got = Scans.chatScan(Seq(page).toDS(), Now).collect()
+      .map(m => m.id.toLong -> m.ts.toInstant).toMap
+    assert(got == msgs.toMap)
   }
 
   test("mailboxScan + messageScan") {

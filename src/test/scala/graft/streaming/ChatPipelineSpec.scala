@@ -23,7 +23,7 @@ class ChatPipelineSpec extends AnyFunSuite {
     * second apart five minutes before `Now`; `deleted` show as deleted. */
   private def fetch(upTo: Long, deleted: Set[Long] = Set.empty) =
     RawPage("global", ChatPages.page((1L to upTo).map(i => (i, Now.minusSeconds(300 - i))),
-      deleted), new Timestamp(0))
+      deleted), Timestamp.from(Now))
 
   /** A store's rows as sorted strings. */
   private def rows(store: String): Seq[String] =
@@ -58,12 +58,12 @@ class ChatPipelineSpec extends AnyFunSuite {
     val in = MemoryStream[RawPage]
     val q = ChatPipeline.start(in.toDS(), Now, msgStore, docStore, intervalMs = 10)
     try {
-      in.addData(RawPage("global", page1, new Timestamp(0)))
+      in.addData(RawPage("global", page1, Timestamp.from(Now)))
       q.processAllAvailable()
       val afterFirst = spark.read.parquet(msgStore)
       assert(afterFirst.count() == 2) // both messages inserted
 
-      in.addData(RawPage("global", page2, new Timestamp(0)))
+      in.addData(RawPage("global", page2, Timestamp.from(Now)))
       q.processAllAvailable()
 
       val msgs = spark.read.parquet(msgStore)
@@ -82,6 +82,31 @@ class ChatPipelineSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("a page fetched a second after the pipeline's now stores that second's messages") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val dir = Files.createTempDirectory("chatpipe-live")
+    val in = MemoryStream[RawPage]
+    val q = start(in, dir)
+    val earlier = (1L to 5L).map(i => (i, Now.minusSeconds(600 - 100 * i)))
+    // posted in the second after Now: parsed against Now, its time of day
+    // lies in the future, so it would be dated a day early
+    val posted = Now.plusSeconds(1)
+    val later = (6L to 9L).map(i => (i, posted))
+    try {
+      in.addData(RawPage("global", ChatPages.page(earlier), Timestamp.from(Now)))
+      q.processAllAvailable()
+      in.addData(RawPage("global", ChatPages.page(earlier ++ later),
+        Timestamp.from(posted.plusMillis(500))))
+      q.processAllAvailable()
+    } finally q.stop()
+    for (store <- stores(dir)) {
+      val ts = spark.read.parquet(store).select("id", "ts").as[(String, Timestamp)].collect().toMap
+      assert(later.forall { case (i, at) => ts.get(i.toString).contains(Timestamp.from(at)) },
+        s"$store: messages 6-9 posted at $posted stored as ${(6 to 9).map(i => ts.get(i.toString))}")
+    }
+  }
+
   test("a micro-batch whose diff is empty writes no store file") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -94,7 +119,7 @@ class ChatPipelineSpec extends AnyFunSuite {
       finally listing.close()
     }
     val page = RawPage("global", ChatPages.page(
-      (1L to 3L).map(i => (i, Now.minusSeconds(300 - i)))), new Timestamp(0))
+      (1L to 3L).map(i => (i, Now.minusSeconds(300 - i)))), Timestamp.from(Now))
     val in = MemoryStream[RawPage]
     val q = ChatPipeline.start(in.toDS(), Now, stores(0).toString, stores(1).toString,
       intervalMs = 10)

@@ -3,6 +3,9 @@ package graft.streaming
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -243,6 +246,48 @@ class IncrementalStreamSpec extends AnyFunSuite {
     val digest = java.security.MessageDigest.getInstance("MD5").digest(text.getBytes("UTF-8"))
     assert(state.filter(col("doc_id") === someId).select("h").as[String].collect().toSeq ==
       Seq(digest.map("%02x".format(_)).mkString))
+  }
+
+  /** The parquet scans of `dir` that running `plan` takes: the plan of a
+    * cached relation counts once, however many nodes read the relation. */
+  private def scans(plan: SparkPlan, dir: String,
+      built: java.util.Set[AnyRef] = java.util.Collections.newSetFromMap(
+        new java.util.IdentityHashMap[AnyRef, java.lang.Boolean])): Int =
+    Plans.collect(plan) {
+      case s: FileSourceScanExec if s.relation.location.rootPaths.exists(
+        _.toUri.getPath.startsWith(dir)) => 1
+      case m: InMemoryTableScanExec if built.add(m.relation.cacheBuilder) =>
+        scans(m.relation.cacheBuilder.cachedPlan, dir, built)
+    }.sum
+  private object Plans extends AdaptiveSparkPlanHelper
+
+  test("a batch runs no schema-inference job and its delta scans the state once") {
+    import spark.implicits._
+    val statePath = freshStatePath("once")
+    MergeSink.writeSnapshot(graft.Tables.documents(spark, Dir)
+      .select(col("doc_id"), md5(col("text")).as("h"))
+      .repartitionByRange(4, col("doc_id")), statePath)
+    val Seq(changed, retired, unchanged) = graft.Tables.documents(spark, Dir)
+      .select("doc_id", "text").orderBy("doc_id").limit(3).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq
+    val added = 999999L
+    val batch = Seq(
+      Recrawl(added, "an added doc with many distinct tokens in its text", removed = false),
+      Recrawl(changed._1, "a changed doc with many distinct tokens in its text", removed = false),
+      Recrawl(retired._1, null, removed = true),
+      Recrawl(unchanged._1, unchanged._2, removed = false)).toDF()
+    var stateScans = -1
+    var statuses = Map.empty[Long, String]
+    val (_, run) = graft.Measure(spark)(IncrementalStream.processBatch(batch, statePath, 0L) {
+      (delta, _) =>
+        stateScans = scans(delta.queryExecution.executedPlan, statePath)
+        statuses = delta.select("doc_id", "status").as[(Long, String)].collect().toMap
+    })
+    info(s"${run.jobs.size} jobs; the delta's plan scans the state $stateScans time(s)")
+    assert(statuses == Map(added -> "added", changed._1 -> "changed", retired._1 -> "retired"))
+    val inference = run.stages.filter(_.name == "parallelize > mapPartitions")
+    assert(inference.isEmpty, s"${inference.size} schema-inference stage(s) ran")
+    assert(stateScans == 1, s"the delta's plan scans the state $stateScans times")
   }
 
   test("junk-gated docs update the hash state but emit no survivor row") {

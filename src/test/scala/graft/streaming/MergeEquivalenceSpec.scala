@@ -143,6 +143,31 @@ class MergeEquivalenceSpec extends AnyFunSuite {
     }
   }
 
+  test("a store whose data files carry no Spark row metadata merges like the whole-snapshot merge") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    val store = Files.createDirectories(Files.createTempDirectory("mergeq-foreign").resolve("store"))
+    val message = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message row { required int64 k; optional binary v (STRING); }")
+    // two files written by parquet-mr alone, as another writer would
+    for ((name, keys) <- Seq("a.parquet" -> (0L until 20L), "b.parquet" -> (100L until 140L))) {
+      val writer = ExampleParquetWriter.builder(
+          new org.apache.hadoop.fs.Path(store.resolve(name).toUri))
+        .withType(message).withConf(spark.sparkContext.hadoopConfiguration).build()
+      val rows = new SimpleGroupFactory(message)
+      try keys.foreach(k => writer.write(rows.newGroup().append("k", k).append("v", s"init$k")))
+      finally writer.close()
+    }
+    val kv = org.apache.spark.sql.types.StructType.fromDDL("k BIGINT, v STRING")
+    for (b <- Seq(Seq(3L, 3L, 50L), Seq(3L, 104L, 51L))) {
+      val batch = spark.createDataFrame(b.map(k => Row(k, s"new$k")).asJava, kv)
+      val expected = oracle(spark.read.parquet(store.toString), batch, Some(MergeSink.Upsert))
+        .collect().toSet
+      MergeSink.merge(batch, Keys, store.toString, MergeSink.Upsert)
+      assert(spark.read.parquet(store.toString).collect().toSet == expected)
+    }
+  }
+
   test("Upsert: touched-file merge == whole-snapshot merge") { check("upsert", Some(MergeSink.Upsert)) }
   test("UpdateOnly: touched-file merge == whole-snapshot merge") {
     check("update", Some(MergeSink.UpdateOnly))

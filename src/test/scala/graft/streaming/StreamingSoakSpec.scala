@@ -44,7 +44,7 @@ class StreamingSoakSpec extends AnyFunSuite {
     val q = ChatPipeline.start(in.toDS(), Now, msgStore, docStore, intervalMs = 10)
     try {
       def batch(pages: String*): Unit = {
-        in.addData(pages.map(p => RawPage("global", p, new Timestamp(0))))
+        in.addData(pages.map(p => RawPage("global", p, Timestamp.from(Now))))
         q.processAllAvailable()
       }
       // b1: initial scrape
