@@ -44,10 +44,13 @@ object Tables {
   def parquetSchema(spark: SparkSession, path: String): StructType = {
     val p = Paths.get(path)
     val file = if (Files.isDirectory(p)) dataFiles(p).minBy(_.getFileName.toString) else p
-    ParquetFileFormat.readSchemaFromFooter(
-      new Footer(hadoopPath(file), footer(spark.sessionState.newHadoopConf(), file)),
-      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    footerSchema(spark, file, footer(spark.sessionState.newHadoopConf(), file))
   }
+
+  /** The schema [[parquetSchema]] reads from `file`, given its footer. */
+  def footerSchema(spark: SparkSession, file: Path, footer: ParquetMetadata): StructType =
+    ParquetFileFormat.readSchemaFromFooter(new Footer(hadoopPath(file), footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
 
   /** The footer of `file`; the one-argument open parses a new Hadoop conf. */
   def footer(conf: Configuration, file: Path): ParquetMetadata =

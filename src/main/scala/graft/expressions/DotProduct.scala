@@ -5,17 +5,19 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 import org.apache.spark.sql.SparkSessionExtensions
 
-/** Native dot product over two `array<double>` columns.
+/** Native dot product over two `array<double>` columns (→ double) or two
+  * `array<bigint>` columns (→ bigint).
   *
   * The built-in spelling — `aggregate(zip_with(a, b, (x,y) -> x*y), 0D,
   * (acc,x) -> acc+x)` — materializes an intermediate array and evaluates
   * the lambdas interpreted, per element, outside whole-stage codegen.
-  * This expression generates a tight fused loop instead (and is the hot
-  * kernel under every similarity query: top-k, LSH bucketing, near-dup
-  * cosine).
+  * This expression generates a tight fused loop instead: the double form
+  * is the hot kernel under every similarity query (top-k, LSH bucketing,
+  * near-dup cosine), the bigint form under the quantized-embedding ops
+  * ([[graft.operators.Semantic]]: distances, norms, pairwise cosine).
   *
   * Semantics: left-to-right accumulation — BIT-IDENTICAL to the
   * built-in fold and to DuckDB's `list_reduce` equivalent, so swapping
@@ -23,33 +25,46 @@ import org.apache.spark.sql.SparkSessionExtensions
   * Unequal lengths use the common prefix; null array → null. (Inputs
   * here are fixed-width embedding vectors; both caveats are theoretical.)
   *
+  * Bigint overflow: raw 64-bit multiply-add, NO ANSI check — callers own
+  * the bound. The quantization contract (values in ±2·10⁶, ≤ 64 dims)
+  * keeps every partial below 2.6·10¹⁴, five orders of magnitude under
+  * Long.MaxValue.
+  *
   * Exposed as SQL function `graft_dot` via [[GraftExtensions]]
   * (`SparkSessionExtensions.injectFunction`).
   */
 case class DotProduct(left: Expression, right: Expression)
     extends BinaryExpression {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(dt: DataType) = dt match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_dot requires two array<double> arguments, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (ArrayType(DoubleType, _), ArrayType(DoubleType, _)) |
+         (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
+    case (l, r) => TypeCheckResult.TypeCheckFailure(
+      s"graft_dot requires two array<double> or two array<bigint> arguments, got " +
+        s"${l.simpleString} and ${r.simpleString}")
   }
-  override def dataType: DataType = DoubleType
+  override def dataType: DataType = left.dataType match {
+    case ArrayType(LongType, _) => LongType
+    case _ => DoubleType
+  }
   override def prettyName: String = "graft_dot"
+
+  private lazy val long = dataType == LongType
 
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
     val n = math.min(x.numElements(), y.numElements())
-    var s = 0.0
     var i = 0
-    while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
-    s
+    if (long) {
+      var s = 0L
+      while (i < n) { s += x.getLong(i) * y.getLong(i); i += 1 }
+      s
+    } else {
+      var s = 0.0
+      while (i < n) { s += x.getDouble(i) * y.getDouble(i); i += 1 }
+      s
+    }
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -57,11 +72,12 @@ case class DotProduct(left: Expression, right: Expression)
       val i = ctx.freshName("i")
       val n = ctx.freshName("n")
       val s = ctx.freshName("s")
+      val (jt, get, zero) = if (long) ("long", "getLong", "0L") else ("double", "getDouble", "0.0")
       s"""
          |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
+         |$jt $s = $zero;
          |for (int $i = 0; $i < $n; $i++) {
-         |  $s += $a.getDouble($i) * $b.getDouble($i);
+         |  $s += $a.$get($i) * $b.$get($i);
          |}
          |${ev.value} = $s;
        """.stripMargin
@@ -95,7 +111,6 @@ object GraftExtensions {
     * caller-owned session built without the extension) register. */
   val kernels: Seq[Kernel] = Seq(
     Kernel("graft_dot", classOf[DotProduct], ch => DotProduct(ch.head, ch(1))),
-    Kernel("graft_doti", classOf[DotProductLong], ch => DotProductLong(ch.head, ch(1))),
     Kernel("graft_simhash", classOf[SimHashVotes], ch => SimHashVotes(ch.head, ch(1))),
     Kernel("graft_topk", classOf[TopKByCount], ch => TopKByCount(ch.head, ch(1), ch(2))),
     Kernel("graft_pairs", classOf[PackedPairs], ch => PackedPairs(ch.head)),

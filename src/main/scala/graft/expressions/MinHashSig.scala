@@ -76,15 +76,10 @@ object MinHashSig {
   /** Mersenne prime 2³¹−1 — the universal-hash modulus. */
   val MersenneP: Long = 2147483647L
 
-  private def h60c(s: String): Long =
-    java.lang.Long.parseLong(
-      java.security.MessageDigest.getInstance("MD5")
-        .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(15), 16)
-
   /** md5-derived hash-family constants, the single source both the
     * kernel and the oracle-SQL interpolation read (up to 64 slots). */
-  val hashA: IndexedSeq[Long] = (0 until 64).map(s => h60c(s"A$s") % (MersenneP - 1) + 1)
-  val hashB: IndexedSeq[Long] = (0 until 64).map(s => h60c(s"B$s") % MersenneP)
+  val hashA: IndexedSeq[Long] = (0 until 64).map(s => H60(s"A$s") % (MersenneP - 1) + 1)
+  val hashB: IndexedSeq[Long] = (0 until 64).map(s => H60(s"B$s") % MersenneP)
 
   /** The fused loop; static so the generated code and the interpreted
     * eval share one implementation (PackedPairs precedent). Returns

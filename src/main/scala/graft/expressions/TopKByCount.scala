@@ -1,12 +1,12 @@
 package graft.expressions
 
+import java.nio.ByteBuffer
+
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -17,10 +17,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * The window spelling of per-group ranking — `row_number() OVER
   * (PARTITION BY g ORDER BY n DESC, term)` then `rank <= k` — shuffles
   * and SORTS the ENTIRE input relation per group just to discard all
-  * but k rows. This aggregate keeps a k-bounded heap per group instead,
-  * and because [[TypedImperativeAggregate]] supports partial
-  * aggregation, each map task combines down to ≤ k pairs per group
-  * BEFORE the exchange: the shuffle carries O(partitions × groups × k)
+  * but k rows. This aggregate keeps a k-bounded heap per group instead
+  * ([[BoundedTopK]]), and each map task combines down to ≤ k pairs per
+  * group BEFORE the exchange: the shuffle carries O(partitions × groups × k)
   * rows no matter how large the per-group input is. That is the scale
   * difference between "sort the vocabulary of every language" and
   * "merge 32 bounded heaps" — the same partial-vs-final shape as
@@ -34,8 +33,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * already relies on). Null terms or counts are ignored (counts come
   * from a count(*) aggregate and are never null in practice).
   *
-  * k must be a foldable int in [1, 1024]: the buffer is O(k) per group
-  * per task and the point of the operator is that k stays small.
+  * k is a literal int in [1, 1024] ([[BoundedTopK]]).
   */
 case class TopKByCount(
     count: Expression,
@@ -43,55 +41,31 @@ case class TopKByCount(
     k: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.PriorityQueue[(Long, UTF8String)]] {
+  extends BoundedTopK[(Long, UTF8String)] {
 
-  private lazy val kVal: Int = k.eval().asInstanceOf[Int]
-
-  // PriorityQueue dequeues the Ordering-LARGEST element; make "largest"
-  // mean "worst" (lowest n, then lexically greatest term) so the head
-  // is always the eviction candidate.
-  private val worstFirst: Ordering[(Long, UTF8String)] = new Ordering[(Long, UTF8String)] {
-    override def compare(a: (Long, UTF8String), b: (Long, UTF8String)): Int = {
-      val byN = java.lang.Long.compare(b._1, a._1) // lower n = worse = larger
-      if (byN != 0) byN else a._2.compareTo(b._2)  // greater term = worse = larger
+  // worst = lowest n, then lexically greatest term
+  override protected val worstFirst: Ordering[(Long, UTF8String)] =
+    new Ordering[(Long, UTF8String)] {
+      override def compare(a: (Long, UTF8String), b: (Long, UTF8String)): Int = {
+        val byN = java.lang.Long.compare(b._1, a._1) // lower n = worse = larger
+        if (byN != 0) byN else a._2.compareTo(b._2)  // greater term = worse = larger
+      }
     }
-  }
 
   override def children: Seq[Expression] = Seq(count, term, k)
-  override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(
     StructType(Seq(StructField("term", StringType), StructField("n", LongType))),
     containsNull = false)
   override def prettyName: String = "graft_topk"
 
-  override def checkInputDataTypes(): TypeCheckResult =
+  override protected def checkElementTypes(): TypeCheckResult =
     if (count.dataType != LongType)
       TypeCheckResult.TypeCheckFailure(
         s"graft_topk requires a BIGINT count, got ${count.dataType.simpleString}")
     else if (term.dataType != StringType)
       TypeCheckResult.TypeCheckFailure(
         s"graft_topk requires a STRING term, got ${term.dataType.simpleString}")
-    else if (!k.foldable || k.dataType != IntegerType)
-      TypeCheckResult.TypeCheckFailure("graft_topk requires a literal int k")
-    else {
-      val kv = k.eval().asInstanceOf[Int]
-      if (kv >= 1 && kv <= 1024) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(s"graft_topk k must be in [1, 1024], got $kv")
-    }
-
-  override def createAggregationBuffer(): mutable.PriorityQueue[(Long, UTF8String)] =
-    mutable.PriorityQueue.empty(worstFirst)
-
-  private def offer(
-      buf: mutable.PriorityQueue[(Long, UTF8String)],
-      n: Long,
-      t: UTF8String): Unit =
-    if (buf.size < kVal) {
-      buf.enqueue((n, t))
-    } else if (worstFirst.compare(buf.head, (n, t)) > 0) { // head is worse
-      buf.dequeue()
-      buf.enqueue((n, t))
-    }
+    else TypeCheckResult.TypeCheckSuccess
 
   override def update(
       buf: mutable.PriorityQueue[(Long, UTF8String)],
@@ -100,51 +74,26 @@ case class TopKByCount(
     val t = term.eval(input)
     if (n != null && t != null) {
       // clone: the incoming UTF8String aliases a reused row buffer
-      offer(buf, n.asInstanceOf[Long], t.asInstanceOf[UTF8String].clone())
+      offer(buf, (n.asInstanceOf[Long], t.asInstanceOf[UTF8String].clone()))
     }
     buf
   }
 
-  override def merge(
-      a: mutable.PriorityQueue[(Long, UTF8String)],
-      b: mutable.PriorityQueue[(Long, UTF8String)]): mutable.PriorityQueue[(Long, UTF8String)] = {
-    b.foreach { case (n, t) => offer(a, n, t) }
-    a
-  }
+  override protected def row(e: (Long, UTF8String)): InternalRow =
+    new GenericInternalRow(Array[Any](e._2, e._1))
 
-  override def eval(buf: mutable.PriorityQueue[(Long, UTF8String)]): Any = {
-    // ascending under worst-is-largest = best first
-    val best = buf.toArray.sorted(worstFirst)
-    new GenericArrayData(best.map { case (n, t) =>
-      new GenericInternalRow(Array[Any](t, n))
-    })
+  // n, the term's byte length, the term's bytes
+  override protected def byteSize(e: (Long, UTF8String)): Int = 12 + e._2.numBytes
+  override protected def write(bb: ByteBuffer, e: (Long, UTF8String)): Unit = {
+    bb.putLong(e._1)
+    bb.putInt(e._2.numBytes)
+    e._2.writeTo(bb)
   }
-
-  override def serialize(buf: mutable.PriorityQueue[(Long, UTF8String)]): Array[Byte] = {
-    val items = buf.toArray
-    val bytes = items.map(_._2.getBytes)
-    val bb = java.nio.ByteBuffer.allocate(4 + items.length * 12 + bytes.map(_.length).sum)
-    bb.putInt(items.length)
-    items.indices.foreach { i =>
-      bb.putLong(items(i)._1)
-      bb.putInt(bytes(i).length)
-      bb.put(bytes(i))
-    }
-    bb.array()
-  }
-
-  override def deserialize(b: Array[Byte]): mutable.PriorityQueue[(Long, UTF8String)] = {
-    val bb = java.nio.ByteBuffer.wrap(b)
-    val buf = createAggregationBuffer()
-    val n = bb.getInt()
-    (0 until n).foreach { _ =>
-      val c = bb.getLong()
-      val len = bb.getInt()
-      val arr = new Array[Byte](len)
-      bb.get(arr)
-      buf.enqueue((c, UTF8String.fromBytes(arr)))
-    }
-    buf
+  override protected def read(bb: ByteBuffer): (Long, UTF8String) = {
+    val n = bb.getLong()
+    val term = new Array[Byte](bb.getInt())
+    bb.get(term)
+    (n, UTF8String.fromBytes(term))
   }
 
   override def withNewMutableAggBufferOffset(newOffset: Int): TopKByCount =

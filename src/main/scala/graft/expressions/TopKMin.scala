@@ -1,12 +1,12 @@
 package graft.expressions
 
+import java.nio.ByteBuffer
+
 import scala.collection.mutable
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** Bounded per-group MIN-top-k aggregate: `graft_topk_min(key, id, k)`
@@ -39,17 +39,15 @@ import org.apache.spark.sql.types._
   * NaN sorts greatest (worst for a min-ranking) — callers ranking by
   * similarity DESC pass the negated score as the key.
   *
-  * k must be a foldable int in [1, 1024]: the buffer is O(k) per
-  * group per task; the operator's point is that k stays small. */
+  * k is a literal int in [1, 1024] ([[BoundedTopK]]). */
 case class TopKMin(
     key: Expression,
     id: Expression,
     k: Expression,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[mutable.PriorityQueue[(Long, Long)]] {
+  extends BoundedTopK[(Long, Long)] {
 
-  private lazy val kVal: Int = k.eval().asInstanceOf[Int]
   private lazy val doubleKey: Boolean = key.dataType == DoubleType
 
   /** Order-isomorphic double→long (self-inverse on the bit pattern):
@@ -63,48 +61,23 @@ case class TopKMin(
   private def fromSortable(l: Long): Double =
     java.lang.Double.longBitsToDouble(if (l < 0) l ^ 0x7fffffffffffffffL else l)
 
-  // PriorityQueue dequeues the Ordering-LARGEST element; "largest" =
-  // worst = greatest (key, id), so the head is the eviction candidate.
-  private val worstFirst: Ordering[(Long, Long)] = new Ordering[(Long, Long)] {
-    override def compare(a: (Long, Long), b: (Long, Long)): Int = {
-      val byKey = java.lang.Long.compare(a._1, b._1)
-      if (byKey != 0) byKey else java.lang.Long.compare(a._2, b._2)
-    }
-  }
+  // worst = greatest (key, id)
+  override protected val worstFirst: Ordering[(Long, Long)] =
+    Ordering.Tuple2(Ordering.Long, Ordering.Long)
 
   override def children: Seq[Expression] = Seq(key, id, k)
-  override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(
     StructType(Seq(StructField("key", key.dataType), StructField("id", LongType))),
     containsNull = false)
   override def prettyName: String = "graft_topk_min"
 
-  override def checkInputDataTypes(): TypeCheckResult =
+  override protected def checkElementTypes(): TypeCheckResult =
     if ((key.dataType != LongType && key.dataType != DoubleType) ||
         id.dataType != LongType)
       TypeCheckResult.TypeCheckFailure(
         s"graft_topk_min requires (BIGINT|DOUBLE key, BIGINT id), got " +
           s"(${key.dataType.simpleString}, ${id.dataType.simpleString})")
-    else if (!k.foldable || k.dataType != IntegerType)
-      TypeCheckResult.TypeCheckFailure("graft_topk_min requires a literal int k")
-    else {
-      val kv = k.eval().asInstanceOf[Int]
-      if (kv >= 1 && kv <= 1024) TypeCheckResult.TypeCheckSuccess
-      else TypeCheckResult.TypeCheckFailure(
-        s"graft_topk_min k must be in [1, 1024], got $kv")
-    }
-
-  override def createAggregationBuffer(): mutable.PriorityQueue[(Long, Long)] =
-    mutable.PriorityQueue.empty(worstFirst)
-
-  private def offer(buf: mutable.PriorityQueue[(Long, Long)], kv: Long, iv: Long): Unit =
-    if (buf.size < kVal) {
-      buf.enqueue((kv, iv))
-    } else if (worstFirst.compare(buf.head, (kv, iv)) > 0) { // head is worse
-      buf.dequeue()
-      buf.enqueue((kv, iv))
-      ()
-    }
+    else TypeCheckResult.TypeCheckSuccess
 
   override def update(
       buf: mutable.PriorityQueue[(Long, Long)],
@@ -114,43 +87,20 @@ case class TopKMin(
     if (kv != null && iv != null) {
       val kl = if (doubleKey) toSortable(kv.asInstanceOf[Double])
                else kv.asInstanceOf[Long]
-      offer(buf, kl, iv.asInstanceOf[Long])
+      offer(buf, (kl, iv.asInstanceOf[Long]))
     }
     buf
   }
 
-  override def merge(
-      a: mutable.PriorityQueue[(Long, Long)],
-      b: mutable.PriorityQueue[(Long, Long)]): mutable.PriorityQueue[(Long, Long)] = {
-    b.foreach { case (kv, iv) => offer(a, kv, iv) }
-    a
-  }
+  override protected def row(e: (Long, Long)): InternalRow =
+    new GenericInternalRow(Array[Any](if (doubleKey) fromSortable(e._1) else e._1, e._2))
 
-  override def eval(buf: mutable.PriorityQueue[(Long, Long)]): Any = {
-    val best = buf.toArray.sorted(worstFirst) // ascending (key, id) = best first
-    new GenericArrayData(best.map { case (kv, iv) =>
-      val keyOut: Any = if (doubleKey) fromSortable(kv) else kv
-      new GenericInternalRow(Array[Any](keyOut, iv))
-    })
+  override protected def byteSize(e: (Long, Long)): Int = 16
+  override protected def write(bb: ByteBuffer, e: (Long, Long)): Unit = {
+    bb.putLong(e._1)
+    bb.putLong(e._2)
   }
-
-  override def serialize(buf: mutable.PriorityQueue[(Long, Long)]): Array[Byte] = {
-    val items = buf.toArray
-    val bb = java.nio.ByteBuffer.allocate(4 + items.length * 16)
-    bb.putInt(items.length)
-    items.foreach { case (kv, iv) => bb.putLong(kv); bb.putLong(iv) }
-    bb.array()
-  }
-
-  override def deserialize(b: Array[Byte]): mutable.PriorityQueue[(Long, Long)] = {
-    val bb = java.nio.ByteBuffer.wrap(b)
-    val buf = createAggregationBuffer()
-    val n = bb.getInt()
-    // offer (not enqueue) so the O(k) bound holds locally even for
-    // foreign bytes — serialized buffers we wrote are already ≤ k
-    (0 until n).foreach(_ => offer(buf, bb.getLong(), bb.getLong()))
-    buf
-  }
+  override protected def read(bb: ByteBuffer): (Long, Long) = (bb.getLong(), bb.getLong())
 
   override def withNewMutableAggBufferOffset(newOffset: Int): TopKMin =
     copy(mutableAggBufferOffset = newOffset)

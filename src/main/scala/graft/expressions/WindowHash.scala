@@ -20,8 +20,8 @@ import org.apache.spark.sql.types._
   * h60(concat_ws(' ', slice(w, i+1, n))))` — evaluates the lambda on
   * the expression interpreter: per position it allocates a sliced
   * ArrayData, a concat buffer, and walks the md5/conv expression tree
-  * reflectively. This kernel is one fused JVM loop (thread-local
-  * MessageDigest, no slice allocation, 60-bit value taken from the
+  * reflectively. This kernel is one fused JVM loop ([[H60.windows]]:
+  * one md5 per window, no slice allocation, 60-bit value taken from the
   * digest bytes without the hex-string round-trip) invoked once per
   * row from whole-stage-codegen'd code.
   *
@@ -71,42 +71,12 @@ case class WindowHash(left: Expression, right: Expression)
 }
 
 object WindowHash {
-  private val md = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-  private val Space = Array(' '.toByte)
-
-  /** The fused loop; static so the generated code and the interpreted
-    * eval share one implementation (PackedPairs precedent). */
+  /** The fused loop ([[H60.windows]]); static so the generated code and
+    * the interpreted eval share one implementation (PackedPairs
+    * precedent). */
   def compute(arr: ArrayData, n: Int): Array[Long] = {
-    val len = arr.numElements()
-    val m = len - n + 1
-    if (m <= 0) return Array.emptyLongArray
-    val out = new Array[Long](m)
-    val digest = md.get()
-    var i = 0
-    while (i < m) {
-      digest.reset()
-      var j = 0
-      while (j < n) {
-        val w = arr.getUTF8String(i + j)
-        if (w == null) throw new IllegalArgumentException(
-          "graft_winhash: null token in input array; tokens must be non-null")
-        digest.update(w.getBytes)
-        if (j < n - 1) digest.update(Space)
-        j += 1
-      }
-      val d = digest.digest()
-      // first 15 hex digits of the md5 = bytes 0..6 plus the high
-      // nibble of byte 7 — the same 60-bit value
-      // conv(substring(md5(x),1,15),16,10) yields, without strings
-      var v = 0L
-      var k = 0
-      while (k < 7) { v = (v << 8) | (d(k) & 0xffL); k += 1 }
-      out(i) = (v << 4) | ((d(7) & 0xf0L) >>> 4)
-      i += 1
-    }
+    val out = new Array[Long](H60.windowCount(arr, n))
+    H60.windows(arr, n, "graft_winhash", out, null)
     out
   }
 }

@@ -78,12 +78,6 @@ case class WindowHashSet(left: Expression, right: Expression)
 }
 
 object WindowHashSet {
-  private val md = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
-  private val Space = Array(' '.toByte)
-
   /** In-place quicksort of the parallel (h1, h2) arrays by the pair,
     * ascending — primitive arrays, no boxing (insertion sort below the
     * usual small-range cutoff). */
@@ -124,46 +118,18 @@ object WindowHashSet {
     }
   }
 
-  /** The fused loop; static so the generated code and the interpreted
-    * eval share one implementation ([[WindowHash]] precedent). */
+  /** The fused loop ([[H60.windows]], h1 at digest byte 0 and h2 at
+    * byte 8 of one md5), then sort and unique; static so the generated
+    * code and the interpreted eval share one implementation. */
   def compute(arr: ArrayData, n: Int): ArrayData = {
-    val len = arr.numElements()
-    val m = len - n + 1
-    if (m <= 0) return new GenericArrayData(Array.empty[Any])
+    val m = H60.windowCount(arr, n)
     val h1 = new Array[Long](m)
     val h2 = new Array[Long](m)
-    val digest = md.get()
-    var i = 0
-    while (i < m) {
-      digest.reset()
-      var j = 0
-      while (j < n) {
-        val w = arr.getUTF8String(i + j)
-        if (w == null) throw new IllegalArgumentException(
-          "graft_winhash_set: null token in input array; tokens must be non-null")
-        digest.update(w.getBytes)
-        if (j < n - 1) digest.update(Space)
-        j += 1
-      }
-      val d = digest.digest()
-      // h1: hex digits 1..15 = bytes 0..6 + high nibble of byte 7
-      // (bit-identical to graft_winhash / conv(substring(md5,1,15),16,10))
-      var v = 0L
-      var k = 0
-      while (k < 7) { v = (v << 8) | (d(k) & 0xffL); k += 1 }
-      h1(i) = (v << 4) | ((d(7) & 0xf0L) >>> 4)
-      // h2: hex digits 17..31 = bytes 8..14 + high nibble of byte 15
-      // (conv(substring(md5,17,15),16,10) — independent digest bits)
-      v = 0L
-      k = 8
-      while (k < 15) { v = (v << 8) | (d(k) & 0xffL); k += 1 }
-      h2(i) = (v << 4) | ((d(15) & 0xf0L) >>> 4)
-      i += 1
-    }
+    H60.windows(arr, n, "graft_winhash_set", h1, h2)
     sortPairs(h1, h2, 0, m - 1)
     // unique scan + struct-row emission
     var cnt = 0
-    i = 0
+    var i = 0
     while (i < m) {
       if (i == 0 || h1(i) != h1(i - 1) || h2(i) != h2(i - 1)) cnt += 1
       i += 1

@@ -35,12 +35,8 @@ object Dedup {
     s"CAST(conv(substring(md5($x),1,15),16,10) AS BIGINT)"
   def h60Duck(x: String): String =
     s"CAST('0x' || substr(md5($x),1,15) AS BIGINT)"
-  private val md5Digest = ThreadLocal.withInitial[java.security.MessageDigest](
-    () => java.security.MessageDigest.getInstance("MD5"))
-  /** Same hash in the JVM: the first 60 bits of md5(s), which are its
-    * first 15 hex digits. Each thread reuses one digest. */
-  def h60(s: String): Long =
-    java.nio.ByteBuffer.wrap(md5Digest.get.digest(s.getBytes("UTF-8"))).getLong >>> 4
+  /** Same hash in the JVM ([[graft.expressions.H60]]). */
+  def h60(s: String): Long = graft.expressions.H60(s)
 
   /** Synthetic re-key offsets for injected corpus variants (re-crawls,
     * leaked docs, "added" snapshot keys). 2^40 / 2^41 sit above any real

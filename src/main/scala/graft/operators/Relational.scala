@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
@@ -20,13 +20,6 @@ import graft.Tables
   *     mirrored by `CAST(ts AS TIMESTAMP)` in the oracle SQL.
   */
 object Relational {
-  /** Sum a double column exactly (order-independent): via decimal. */
-  private def sumd(c: Column): Column = sum(c.cast("decimal(38,10)")).cast("double")
-
-  /** Oracle-side events relation with ts truncated like Spark reads it. */
-  private val EV =
-    "(SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value, props FROM events)"
-
   // ===========================================================================
   // A — aggregations / dedup / CDC (SURVEY §2.4)
   // ===========================================================================

@@ -11,9 +11,6 @@ import graft.functions.Fns
   * DuckDB SQL computing the same values.
   */
 object Scalars {
-  private val EV =
-    "(SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value, props FROM events)"
-
   /** F1+F2 `regexp_extract_id` — delete-link message IDs and flag-badge
     * counts (scrapers/chat.py:19-20,59-61,106-114). */
   val regexpExtractId: Q = (spark, dir) =>

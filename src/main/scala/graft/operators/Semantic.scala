@@ -56,18 +56,18 @@ object Semantic {
   // ---------------------------------------------------------------------
 
   /** (vec_id, q, na) with q = shifted quantized embedding and
-    * na = ‖q‖² via the codegen'd [[graft.expressions.DotProductLong]]
+    * na = ‖q‖² via the codegen'd [[graft.expressions.DotProduct]]
     * kernel — precomputed once so every distance below is
     * na − 2·(q·c) + ‖c‖², one fused-loop dot per centroid instead of a
     * per-element interpreted fold. */
   private[operators] def quantShifted(vecs: DataFrame): DataFrame =
     vecs.select(col("vec_id"),
       expr(s"graft_quant(embedding, ${QScale}L, ${QShift}L)").as("q"))
-      .withColumn("na", expr("graft_doti(q, q)"))
+      .withColumn("na", expr("graft_dot(q, q)"))
 
   /** Nearest-centroid assignment as a PURE PROJECTION: the K centroids
     * are driver-held constants, so each centroid's squared distance is
-    * its own TOP-LEVEL column — `na − 2·graft_doti(q, <literal array>)
+    * its own TOP-LEVEL column — `na − 2·graft_dot(q, <literal array>)
     * + nc` — evaluated by the kernel's generated code inside the
     * whole-stage span. (The r14 spelling folded over a centroid ARRAY
     * column inside a `transform` lambda; higher-order lambdas evaluate
@@ -88,7 +88,7 @@ object Semantic {
     // identical to the folded form
     val ds = cents.sortBy(_._1).map { case (cid, c, nc) =>
       struct(
-        (col("na") - lit(2L) * expr(s"graft_doti(q, array(${c.map(v => s"${v}L").mkString(",")}))")
+        (col("na") - lit(2L) * expr(s"graft_dot(q, array(${c.map(v => s"${v}L").mkString(",")}))")
           + lit(nc)).as("d"),
         lit(cid).as("cid"))
     }
@@ -112,7 +112,7 @@ object Semantic {
       .agg(count(lit(1)).as("n"), sums: _*)
       .select(col("cid"),
         array((0 until Dim).map(i => expr(s"s$i div n")): _*).as("c"))
-      .withColumn("nc", expr("graft_doti(c, c)"))
+      .withColumn("nc", expr("graft_dot(c, c)"))
   }
 
   /** [[Iters]] assignment rounds over (vec_id, q, na), with centroids
@@ -249,7 +249,7 @@ object Semantic {
     // (docs/SCALE.md); this query prices the single-campaign path.
     kmeans(quantShifted(dupCorpus(spark, dir)))
       .withColumn("qu", expr(s"transform(q, x -> x - $QShift)"))
-      .withColumn("nrm", expr("graft_doti(qu, qu)"))
+      .withColumn("nrm", expr("graft_dot(qu, qu)"))
       .groupBy("cid")
       .agg(collect_list(struct(col("vec_id"), col("qu"), col("nrm"))).as("members"))
       .select(col("cid").as("cluster"),
@@ -301,7 +301,7 @@ object Semantic {
   private[operators] def withSubs(v: DataFrame): DataFrame =
     (0 until PqM).foldLeft(v) { (df, m) =>
       df.withColumn(s"qs$m", expr(s"slice(q, ${m * PqSubDim + 1}, $PqSubDim)"))
-        .withColumn(s"ns$m", expr(s"graft_doti(qs$m, qs$m)"))
+        .withColumn(s"ns$m", expr(s"graft_dot(qs$m, qs$m)"))
     }
 
   /** Best (d, cid) struct for subspace m against driver-held centroids —
@@ -312,7 +312,7 @@ object Semantic {
     val ds = cents.sortBy(_._1).map { case (cid, c, nc) =>
       struct(
         (col(s"ns$m") - lit(2L) *
-          expr(s"graft_doti(qs$m, array(${c.map(v => s"${v}L").mkString(",")}))")
+          expr(s"graft_dot(qs$m, array(${c.map(v => s"${v}L").mkString(",")}))")
           + lit(nc)).as("d"),
         lit(cid).as("cid"))
     }
@@ -478,7 +478,7 @@ object Semantic {
           byCid.get(cid) match {
             case Some((_, c, nc)) =>
               col(s"ns$m") - lit(2L) *
-                expr(s"graft_doti(qs$m, array(${c.map(v => s"${v}L").mkString(",")}))") +
+                expr(s"graft_dot(qs$m, array(${c.map(v => s"${v}L").mkString(",")}))") +
                 lit(nc)
             case None => lit(0L)
           }
@@ -654,7 +654,7 @@ object Semantic {
     val both = coded.crossJoin(broadcast(qrel))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("adist", adcDist)
-      .withColumn("d", col("na") - lit(2L) * expr("graft_doti(q, q_q)") + col("q_na"))
+      .withColumn("d", col("na") - lit(2L) * expr("graft_dot(q, q_q)") + col("q_na"))
       .groupBy("q_id")
       .agg(expr(s"graft_topk_min(adist, vec_id, $PqTopK)").as("ta"),
         expr(s"graft_topk_min(d, vec_id, $PqTopK)").as("te"))
@@ -738,14 +738,14 @@ object Semantic {
     val e = Tables.fanout(Tables.embeddings(spark, dir))
       .select(col("vec_id"), col("label").cast("long").as("label"),
         expr(s"graft_quant(embedding, ${QScale}L, ${QShift}L)").as("q"))
-      .withColumn("na", expr("graft_doti(q, q)"))
+      .withColumn("na", expr("graft_dot(q, q)"))
     val anchors = e.filter(col("vec_id") < PqQueries)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
         col("q").as("q_q"), col("na").as("q_na"))
     e.crossJoin(broadcast(anchors))
       .filter(col("vec_id") =!= col("q_id") && col("label") =!= col("q_label"))
       .withColumn("d",
-        col("na") - lit(2L) * expr("graft_doti(q, q_q)") + col("q_na"))
+        col("na") - lit(2L) * expr("graft_dot(q, q_q)") + col("q_na"))
       .groupBy("q_id")
       .agg(expr(s"graft_topk_min(d, vec_id, $HardNegK)").as("top"))
       .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "t")))
@@ -856,14 +856,14 @@ object Semantic {
     val e = Tables.fanout(Tables.embeddings(spark, dir))
       .select(col("vec_id"), col("label").cast("long").as("label"),
         expr(s"graft_quant(embedding, ${QScale}L, ${QShift}L)").as("q"))
-      .withColumn("na", expr("graft_doti(q, q)"))
+      .withColumn("na", expr("graft_dot(q, q)"))
     val anchors = e.filter(col("vec_id") < PqQueries)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
         col("q").as("q_q"), col("na").as("q_na"))
     e.crossJoin(broadcast(anchors))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("d",
-        col("na") - lit(2L) * expr("graft_doti(q, q_q)") + col("q_na"))
+        col("na") - lit(2L) * expr("graft_dot(q, q_q)") + col("q_na"))
       .groupBy("q_id", "q_label")
       // runtime guard, not just a spec assertion: a label outside
       // [0,16) would silently corrupt both the packed tie order and
@@ -947,7 +947,7 @@ object Semantic {
   private[graft] def quantSigned(vecs: DataFrame): DataFrame =
     vecs.select(col("vec_id"),
       expr(s"graft_quant(embedding, ${QScale}L, 0L)").as("q"))
-      .withColumn("na", expr("graft_doti(q, q)"))
+      .withColumn("na", expr("graft_dot(q, q)"))
 
   /** The frozen eval suite over `dir`'s embeddings — the broadcastable
     * artifact both the batch audit and the streaming ingest gate
@@ -962,7 +962,7 @@ object Semantic {
     * arithmetic), ONE definition for batch and stream. */
   private[graft] def decontamMatches(vecs: DataFrame, ev: DataFrame): DataFrame =
     vecs.crossJoin(broadcast(ev))
-      .withColumn("dot", expr("graft_doti(q, e_q)"))
+      .withColumn("dot", expr("graft_dot(q, e_q)"))
       .filter(col("dot") > 0 &&
         expr("graft_mulge(10L * dot, 10L * dot, 81L * na, e_na)"))
       .groupBy("vec_id").agg(count(lit(1)).as("n_matched"))

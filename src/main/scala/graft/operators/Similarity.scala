@@ -1073,7 +1073,7 @@ object Similarity {
     * is bit-reproducible in the oracle's unrolled-step SQL.
     *
     * Scale shape: scoring is corpus × bounded-query broadcast with the
-    * codegen'd [[graft.expressions.DotProductLong]]; the pool is the
+    * codegen'd [[graft.expressions.DotProduct]]; the pool is the
     * bounded [[graft.expressions.TopKMin]] heap (map-side combined to
     * ≤ K0 rows per query BEFORE the exchange); the pool's embeddings
     * attach via one candidate-bounded equi-join; then ONE hash
@@ -1089,7 +1089,7 @@ object Similarity {
       .select(col("vec_id").as("q_id"), col("e").as("qe"))
     val pool = qe.crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("simq", expr("graft_doti(qe, e)"))
+      .withColumn("simq", expr("graft_dot(qe, e)"))
       .groupBy("q_id")
       .agg(expr(s"graft_topk_min(-simq, vec_id, $MmrPool)").as("top"))
       .select(col("q_id"), explode(col("top")).as("t"))

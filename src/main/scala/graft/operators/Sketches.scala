@@ -59,9 +59,6 @@ object Sketches {
   private val Lanes = Bits / LaneBits // 32 lanes
   private val NumHashes = 2
 
-  private val EV =
-    "(SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value, props FROM events)"
-
   /** `bloom_prefilter` — build a Bloom filter of the "known" users (the
     * [[Relational.distinctMembership]] seen set: signups in the first
     * week) and test EVERY distinct user against it. Output: one row per

@@ -19,9 +19,6 @@ import graft.Tables
   * pointwise expression; a single `lag` cannot repair a multi-day cascade.
   */
 object TimeRepair {
-  private val EV =
-    "(SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value, props FROM events)"
-
   /** Deterministic stand-in for "now"/"today" (the reference freezes the
     * clock in tests the same way, via freezegun). Deliberately INSIDE the
     * testdata's ts range (2024-01-01..2024-01-30) so that both branches of

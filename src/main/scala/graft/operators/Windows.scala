@@ -16,13 +16,6 @@ import graft.Tables
   * explosion.
   */
 object Windows {
-  private val EV =
-    "(SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id, event_type, value, props FROM events)"
-
-  /** Decimal-pinned double sum (order-independent across partials). */
-  private def sumd(c: org.apache.spark.sql.Column) =
-    sum(c.cast("decimal(38,10)")).cast("double")
-
   /** Tumbling 6-hour windows per event type: count + exact value sum. */
   val tumblingWindowAgg: Q = (spark, dir) =>
     Tables.events(spark, dir)

@@ -57,7 +57,7 @@ object ChatPipeline {
     * for good (silent at-most-once, contradicting the contract above).
     * A failed merge must fail the query so the replay re-runs against
     * the uncommitted state version. The isolator stays correct only on
-    * the stateless poll path ([[Streams.polling]]), where a skipped
+    * the stateless poll path ([[Streams.pollingQuery]]), where a skipped
     * batch's data is re-presented by the next live fetch.
     */
   def start(pages: Dataset[RawPage], now: Instant, msgStorePath: String,

@@ -389,7 +389,8 @@ object MergeSink {
     }
     val files = Tables.dataFiles(Paths.get(path))
     val footers = files.map(Tables.footer(spark.sparkContext.hadoopConfiguration, _))
-    val schema = Tables.parquetSchema(spark, path)
+    val (first, firstFooter) = files.zip(footers).minBy(_._1.getFileName.toString)
+    val schema = Tables.footerSchema(spark, first, firstFooter) // as Tables.parquetSchema
     def read(fs: Seq[Path]): DataFrame =
       if (fs.isEmpty) read(files).where(lit(false)) // planned as an empty relation
       else spark.read.schema(schema).parquet(fs.map(_.toString): _*)

@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** graft_dot must be BIT-identical to the built-in fold it replaces —
-  * the oracle hash-compare tolerates zero ulps of drift. */
+  * the oracle hash-compare tolerates zero ulps of drift — over both of
+  * its element types, `array<double>` and `array<bigint>`. */
 class DotProductSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
@@ -22,14 +23,32 @@ class DotProductSpec extends AnyFunSuite {
     rows.foreach { case (n, b) =>
       assert(java.lang.Double.doubleToLongBits(n) == java.lang.Double.doubleToLongBits(b))
     }
+    // array<bigint>, in the quantization contract's range: ±2·10⁶, 64 dims
+    val rng = new scala.util.Random(7)
+    def vec() = Seq.fill(64)(rng.nextInt(4000001).toLong - 2000000L)
+    val longs = Seq.fill(100)((vec(), vec())).toDF("a", "b").select(
+        expr("graft_dot(a, b)").as("native"),
+        expr("aggregate(zip_with(a, b, (x, y) -> x * y), 0L, (s, x) -> s + x)").as("builtin"))
+      .as[(Long, Long)].collect()
+    assert(longs.length == 100)
+    longs.foreach { case (n, b) => assert(n == b) }
   }
 
   test("null array -> null; empty arrays -> 0.0") {
     import spark.implicits._
-    val got = spark.sql(
-      "SELECT graft_dot(CAST(NULL AS ARRAY<DOUBLE>), array(1D)) AS n, " +
-        "graft_dot(CAST(array() AS ARRAY<DOUBLE>), CAST(array() AS ARRAY<DOUBLE>)) AS e")
-      .selectExpr("n IS NULL AS n_null", "e").as[(Boolean, Double)].collect().head
-    assert(got == ((true, 0.0)))
+    Seq("DOUBLE", "BIGINT").foreach { t =>
+      val got = spark.sql(
+        s"SELECT graft_dot(CAST(NULL AS ARRAY<$t>), CAST(array(1) AS ARRAY<$t>)) AS n, " +
+          s"graft_dot(CAST(array() AS ARRAY<$t>), CAST(array() AS ARRAY<$t>)) AS e")
+        .selectExpr("n IS NULL AS n_null", "CAST(e AS DOUBLE)").as[(Boolean, Double)].collect().head
+      assert(got == ((true, 0.0)), t)
+    }
+  }
+
+  test("mixed element types fail the type check, naming both") {
+    val e = intercept[Exception] {
+      spark.sql("SELECT graft_dot(array(1D), array(1L))").collect()
+    }
+    assert(e.getMessage.contains("got array<double> and array<bigint>"), e.getMessage)
   }
 }

@@ -88,4 +88,27 @@ class TopKByCountSpec extends AnyFunSuite {
     }
     assert(e2.getMessage.toLowerCase.contains("literal"), e2.getMessage)
   }
+
+  test("deserialize keeps the best k of a buffer holding more than k entries") {
+    // a partial buffer is bytes: ones this class did not write (or wrote
+    // under another k) must not grow the buffer past k
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+    import org.apache.spark.sql.types.{LongType, StringType}
+    val k = 4
+    val agg = TopKByCount(BoundReference(0, LongType, nullable = true),
+      BoundReference(1, StringType, nullable = true), Literal(k))
+    val entries = Seq(3L -> "c", 9L -> "a", 1L -> "z", 9L -> "b", 5L -> "q",
+      2L -> "m", 7L -> "x") // k + 3
+    val terms = entries.map(_._2.getBytes("UTF-8"))
+    val bb = java.nio.ByteBuffer.allocate(4 + entries.size * 12 + terms.map(_.length).sum)
+    bb.putInt(entries.size)
+    entries.zip(terms).foreach { case ((n, _), t) => bb.putLong(n).putInt(t.length).put(t) }
+    val out = agg.eval(agg.deserialize(bb.array()))
+      .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+    val got = (0 until out.numElements()).map { i =>
+      val r = out.getStruct(i, 2)
+      (r.getUTF8String(0).toString, r.getLong(1))
+    }
+    assert(got == Seq(("a", 9L), ("b", 9L), ("x", 7L), ("q", 5L)))
+  }
 }
