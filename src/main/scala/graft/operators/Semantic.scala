@@ -292,7 +292,7 @@ object Semantic {
   val PqM = 4
   val PqSubDim = 16
   val PqK = 8
-  private val PqQueries = 10L
+  private[graft] val PqQueries = 10L
   private[graft] val PqTopK = 3
 
   /** Per-subspace sliced columns qs{m} / their norms ns{m} attached to a

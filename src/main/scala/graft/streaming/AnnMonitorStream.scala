@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 import graft.operators.Semantic
 
 /** One (query, candidate) ADC score inside the monitor. */
@@ -25,7 +25,7 @@ case class AnnTopkUpdate(q_id: Long, rank: Long, vec_id: Long, adist: Long)
   * FROZEN standing-query tables (a 10-row static broadcast joined to
   * the stream — stream-static joins are stateless), then fold the
   * scored candidates into per-query bounded-heap STATE with
-  * `flatMapGroupsWithState`: state per standing query is its current
+  * [[Streams.keyedFold]]: state per standing query is its current
   * ≤ k (adist, vec_id) pairs — O(queries·k) longs TOTAL regardless of
   * stream length, the same bound [[graft.expressions.TopKMin]] gives
   * the batch ranking and comfortably inside the streaming layer's
@@ -67,39 +67,32 @@ object AnnMonitorStream {
     val scored = Semantic.pqAdcScore(vecs.toDF(), cents, qrel)
       .select(col("q_id"), col("adist"), col("vec_id")).as[AnnScored]
 
-    val updates = scored.groupByKey(_.q_id)
-      .flatMapGroupsWithState[Seq[(Long, Long)], AnnTopkUpdate](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        case (qId, incoming, state: GroupState[Seq[(Long, Long)]]) =>
-          val prev = state.getOption.getOrElse(Seq.empty)
-          // fold the batch into the bounded heap: k smallest under the
-          // kernel's (adist, vec_id) total order, AT MOST ONE entry
-          // per vec_id with the LATEST delivery winning — a vec_id
-          // re-delivered with a changed embedding (vector update /
-          // replay) displaces its old score in BOTH directions: its
-          // stale state entry is dropped first, then its batch-best
-          // score competes fresh. A worsened vector may thus fall out
-          // of the top-k entirely; the freed slot refills only from
-          // later deliveries (bounded O(k) state cannot resurrect
-          // previously evicted candidates — the inherent top-k-monitor
-          // trade, stated in the class scaladoc). Within a batch a
-          // duplicated vec_id folds to its best score (micro-batches
-          // are unordered sets). Batch + state both small (≤ batch
-          // candidates per query; state ≤ k), so group-min +
-          // sort-take IS the bounded heap here
-          val batchBest = incoming.map(s => (s.adist, s.vec_id)).toSeq
-            .groupBy(_._2).valuesIterator.map(_.min).toSeq
-          val redelivered = batchBest.map(_._2).toSet
-          val next = (prev.filterNot(e => redelivered.contains(e._2)) ++ batchBest)
-            .sorted.take(k)
-          if (next == prev) Iterator.empty
-          else {
-            state.update(next)
-            next.iterator.zipWithIndex.map { case ((d, v), i) =>
-              AnnTopkUpdate(qId, (i + 1).toLong, v, d)
-            }
-          }
-      }
+    val updates = Streams.keyedFold(scored, OutputMode.Update())(_.q_id,
+      zero = Seq.empty[(Long, Long)]) { (qId, prev, incoming) =>
+      // fold the batch into the bounded heap: k smallest under the
+      // kernel's (adist, vec_id) total order, AT MOST ONE entry
+      // per vec_id with the LATEST delivery winning — a vec_id
+      // re-delivered with a changed embedding (vector update /
+      // replay) displaces its old score in BOTH directions: its
+      // stale state entry is dropped first, then its batch-best
+      // score competes fresh. A worsened vector may thus fall out
+      // of the top-k entirely; the freed slot refills only from
+      // later deliveries (bounded O(k) state cannot resurrect
+      // previously evicted candidates — the inherent top-k-monitor
+      // trade, stated in the class scaladoc). Within a batch a
+      // duplicated vec_id folds to its best score (micro-batches
+      // are unordered sets). Batch + state both small (≤ batch
+      // candidates per query; state ≤ k), so group-min +
+      // sort-take IS the bounded heap here
+      val batchBest = incoming.map(s => (s.adist, s.vec_id)).toSeq
+        .groupBy(_._2).valuesIterator.map(_.min).toSeq
+      val redelivered = batchBest.map(_._2).toSet
+      val next = (prev.filterNot(e => redelivered.contains(e._2)) ++ batchBest)
+        .sorted.take(k)
+      (next, if (next == prev) Nil else next.zipWithIndex.map { case ((d, v), i) =>
+        AnnTopkUpdate(qId, (i + 1).toLong, v, d)
+      })
+    }
 
     val query = updates.writeStream
       .queryName(name)

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.Tables
 import graft.operators.Curation
 
@@ -45,7 +44,7 @@ final case class BudgetDecision(docId: Long, source: String, nTokens: Long,
   * Scale shape: state per source is ONE long (the cumulative token
   * count), so total state is O(domains) regardless of stream length —
   * nothing per-doc is retained, no watermark is needed.
-  * `flatMapGroupsWithState` keys on source, so domains gate
+  * [[Streams.keyedFold]] keys on source, so domains gate
   * independently and in parallel, exactly like the batch window
   * partitions. TRANSIENT memory is a different bound: the within-batch
   * priority sort materializes one source's micro-batch group in a
@@ -74,22 +73,17 @@ object BudgetStream {
   def gate(docs: Dataset[BudgetDoc], budgets: Map[String, Long]): Dataset[BudgetDecision] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.groupByKey(_.source)
-      .flatMapGroupsWithState[Long, BudgetDecision](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (source, incoming, state: GroupState[Long]) =>
-          var spent = state.getOption.getOrElse(0L)
-          val budget = budgets.getOrElse(source, 0L)
-          // within-batch priority = the batch op's ORDER BY; across
-          // batches, arrival order governs (see contract note above)
-          val out = incoming.toSeq.sortBy(d => (-d.nTokens, d.docId)).map { d =>
-            val before = spent
-            spent += d.nTokens
-            BudgetDecision(d.docId, source, d.nTokens, budget, before,
-              before < budget)
-          }
-          state.update(spent)
-          out.iterator
+    Streams.keyedFold(docs)(_.source, zero = 0L) { (source, spent0, incoming) =>
+      var spent = spent0
+      val budget = budgets.getOrElse(source, 0L)
+      // within-batch priority = the batch op's ORDER BY; across
+      // batches, arrival order governs (see contract note above)
+      val out = incoming.toSeq.sortBy(d => (-d.nTokens, d.docId)).map { d =>
+        val before = spent
+        spent += d.nTokens
+        BudgetDecision(d.docId, source, d.nTokens, budget, before, before < budget)
       }
+      (spent, out)
+    }
   }
 }

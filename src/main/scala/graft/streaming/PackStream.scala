@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.sql.Timestamp
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** A document entering the packer: shard is assigned upstream by the
   * same deterministic doc_id hash the batch packer uses
@@ -28,25 +27,21 @@ final case class PackedDoc(docId: Long, shard: Int, seqInShard: Long, tokOffset:
   * Scale shape: state per shard is ONE long — the shard's running token
   * total — so total state is O(NumShards) regardless of stream length;
   * no watermark is needed to bound it (nothing per-doc is retained).
-  * `flatMapGroupsWithState` keys on shard, so lanes pack independently
+  * [[Streams.keyedFold]] keys on shard, so lanes pack independently
   * and in parallel, exactly like the batch window partitions.
   */
 object PackStream {
   def pack(docs: Dataset[PackDoc], seqLen: Long = 256L): Dataset[PackedDoc] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.groupByKey(_.shard)
-      .flatMapGroupsWithState[Long, PackedDoc](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (shard, incoming, state: GroupState[Long]) =>
-          var running = state.getOption.getOrElse(0L)
-          val out = incoming.toSeq.sortBy(d => (d.ts.getTime, d.docId)).map { d =>
-            val start = running
-            running += d.nTokens
-            PackedDoc(d.docId, shard, start / seqLen, start % seqLen)
-          }
-          state.update(running)
-          out.iterator
+    Streams.keyedFold(docs)(_.shard, zero = 0L) { (shard, total, incoming) =>
+      var running = total
+      val out = incoming.toSeq.sortBy(d => (Streams.micros(d.ts), d.docId)).map { d =>
+        val start = running
+        running += d.nTokens
+        PackedDoc(d.docId, shard, start / seqLen, start % seqLen)
       }
+      (running, out)
+    }
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 import graft.operators.{Dedup, Featurize}
 
 /** A document entering the preference miner. */
@@ -51,34 +51,20 @@ object PrefPairStream {
   def pairs(docs: Dataset[PrefDoc]): Dataset[PrefPair] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.groupByKey(d => (d.source, d.lang))
-      .flatMapGroupsWithState[St, PrefPair](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        case ((source, lang), incoming, state: GroupState[St]) =>
-          // fold the batch: the batch op's exact total order — chosen is
-          // max(score, −id) (ties → smaller id), rejected min(score, id).
-          // Redelivery is a no-op: same doc ⇒ same (score, id) ⇒ the
-          // running extremes are unchanged.
-          val scored = incoming.map(d => (score(d.text), d.docId)).toSeq
-          val bBest = scored.minBy { case (s, id) => (-s, id) }
-          val bWorst = scored.minBy { case (s, id) => (s, id) }
-          val next = state.getOption match {
-            case None => (bBest._1, bBest._2, bWorst._1, bWorst._2)
-            case Some((bs, bi, ws, wi)) =>
-              val (nbs, nbi) =
-                Seq((bs, bi), bBest).minBy { case (s, id) => (-s, id) }
-              val (nws, nwi) =
-                Seq((ws, wi), bWorst).minBy { case (s, id) => (s, id) }
-              (nbs, nbi, nws, nwi)
-          }
-          if (state.getOption.contains(next)) Iterator.empty
-          else {
-            state.update(next)
-            val margin = next._1 - next._3
-            if (margin > 0)
-              Iterator.single(PrefPair(source, lang, next._2, next._4, margin))
-            else Iterator.empty
-          }
-      }
+    // zero: a best and a worst that every real doc displaces
+    Streams.keyedFold(docs, OutputMode.Update())(d => (d.source, d.lang),
+        zero = (Long.MinValue, Long.MaxValue, Long.MaxValue, Long.MaxValue): St) {
+      case ((source, lang), prev @ (bs, bi, ws, wi), incoming) =>
+        // fold the batch: the batch op's exact total order — chosen is
+        // max(score, −id) (ties → smaller id), rejected min(score, id).
+        // Redelivery is a no-op: same doc ⇒ same (score, id) ⇒ the
+        // running extremes are unchanged.
+        val scored = incoming.map(d => (score(d.text), d.docId)).toSeq
+        val (nbs, nbi) = ((bs, bi) +: scored).maxBy { case (s, id) => (s, -id) }
+        val (nws, nwi) = ((ws, wi) +: scored).min
+        val next = (nbs, nbi, nws, nwi)
+        (next, if (next == prev || nbs <= nws) None
+          else Some(PrefPair(source, lang, nbi, nwi, nbs - nws)))
+    }
   }
 }

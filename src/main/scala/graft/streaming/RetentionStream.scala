@@ -2,7 +2,6 @@ package graft.streaming
 
 import java.sql.Timestamp
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** An event entering the retention tracker. */
 final case class RetEvent(userId: Long, ts: Timestamp)
@@ -65,31 +64,27 @@ object RetentionStream {
   def cells(events: Dataset[RetEvent]): Dataset[RetCell] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events.groupByKey(_.userId)
-      .flatMapGroupsWithState[St, RetCell](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        case (user, incoming, state: GroupState[St]) =>
-          val weeks = incoming.map(e => weekIndex(e.ts)).toSeq.distinct
-          val (prevCohort, prevMask) = state.getOption.getOrElse((Long.MaxValue, 0L))
-          val cohort = math.min(prevCohort, weeks.min)
-          val rebased = cohort != prevCohort && prevCohort != Long.MaxValue
-          // on a re-base every previously emitted offset is wrong (its
-          // base moved): clear the mask and fold the OLD weeks back in
-          // at their corrected offsets so the re-emission is complete
-          val carried =
-            if (!rebased) Nil
-            else (0 until HorizonWeeks).filter(b => (prevMask & (1L << b)) != 0L)
-              .map(b => prevCohort + b * 7L)
-          val mask0 = if (rebased) 0L else prevMask
-          val offsets = (weeks ++ carried).map(w => (w - cohort) / 7L).distinct
-          offsets.foreach { o =>
-            require(o >= 0 && o < HorizonWeeks,
-              s"retention horizon exceeded for user $user: offset $o")
-          }
-          val fresh = offsets.filter(o => (mask0 & (1L << o)) == 0L)
-          val mask = fresh.foldLeft(mask0)((m, o) => m | (1L << o))
-          state.update((cohort, mask))
-          fresh.sorted.iterator.map(o => RetCell(user, weekTs(cohort), o))
-      }
+    Streams.keyedFold(events)(_.userId, zero = (Long.MaxValue, 0L): St) {
+      case (user, (prevCohort, prevMask), incoming) =>
+        val weeks = incoming.map(e => weekIndex(e.ts)).toSeq.distinct
+        val cohort = math.min(prevCohort, weeks.min)
+        val rebased = cohort != prevCohort && prevCohort != Long.MaxValue
+        // on a re-base every previously emitted offset is wrong (its
+        // base moved): clear the mask and fold the OLD weeks back in
+        // at their corrected offsets so the re-emission is complete
+        val carried =
+          if (!rebased) Nil
+          else (0 until HorizonWeeks).filter(b => (prevMask & (1L << b)) != 0L)
+            .map(b => prevCohort + b * 7L)
+        val mask0 = if (rebased) 0L else prevMask
+        val offsets = (weeks ++ carried).map(w => (w - cohort) / 7L).distinct
+        offsets.foreach { o =>
+          require(o >= 0 && o < HorizonWeeks,
+            s"retention horizon exceeded for user $user: offset $o")
+        }
+        val fresh = offsets.filter(o => (mask0 & (1L << o)) == 0L)
+        val mask = fresh.foldLeft(mask0)((m, o) => m | (1L << o))
+        ((cohort, mask), fresh.sorted.map(o => RetCell(user, weekTs(cohort), o)))
+    }
   }
 }

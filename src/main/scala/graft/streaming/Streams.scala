@@ -16,6 +16,7 @@ import graft.sources.ChatMessage
   *   - S1 fixed-interval polling       → `Trigger.ProcessingTime` + per-batch
   *                                       error isolation (tasks.py:23-37)
   *   - S7–S9 idempotent/merge sinks    → `foreachBatch` keyed merge
+  *   - per-key state, no timeout       → [[keyedFold]] (the stateful twins)
   *   - keyed-CDC replay gate           → [[replayGated]] (the event twins)
   *   - frozen-artifact scoring         → [[handOff]] (the stateless twins)
   *
@@ -99,6 +100,22 @@ object Streams {
     Timestamp.from(java.time.Instant.ofEpochSecond(
       Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L))
 
+  /** Per-key fold with no timeout, the one `flatMapGroupsWithState` of
+    * every stateful twin but [[lastValueDiff]]. Per micro-batch each key
+    * seen gets its stored state (`zero` for a new key) and its events, in
+    * no order; `fold` returns the key's next state, which is stored, and
+    * its output rows. State is one `S` per key ever seen: nothing evicts
+    * it. `mode` is the query's output mode (Append or Update). */
+  def keyedFold[E, K: Encoder, S: Encoder, O: Encoder](events: Dataset[E],
+      mode: OutputMode = OutputMode.Append())(key: E => K, zero: S)(
+      fold: (K, S, Iterator[E]) => (S, IterableOnce[O])): Dataset[O] =
+    events.groupByKey(key).flatMapGroupsWithState[S, O](mode, GroupStateTimeout.NoTimeout()) {
+      (k: K, incoming: Iterator[E], state: GroupState[S]) =>
+        val (next, out) = fold(k, state.getOption.getOrElse(zero), incoming)
+        state.update(next)
+        out.iterator
+    }
+
   /** Replay-gated per-key fold: the delivery contract of every event
     * twin whose fold is order-sensitive (SCD2 interval closing,
     * transition pairs, funnel steps) or must not double-count under
@@ -118,29 +135,24 @@ object Streams {
     * `fold(key, s, admitted)` gets the key's state (`zero` for a new
     * key) and its admitted events in order, each with its micros; it
     * returns the key's next state and its output rows. State per key is
-    * `(lastTs, lastId, s)`. */
+    * `(lastTs, lastId, s)`, folded by [[keyedFold]] in Append mode. */
   def replayGated[E, K: Encoder, S: Encoder, O: Encoder](events: Dataset[E])(
       key: E => K, ts: E => Timestamp, id: E => Long, zero: S)(
       fold: (K, S, Seq[(E, Long)]) => (S, IterableOnce[O])): Dataset[O] = {
     implicit val stateEnc: Encoder[(Long, Long, S)] =
       Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong, implicitly[Encoder[S]])
-    events.groupByKey(key)
-      .flatMapGroupsWithState[(Long, Long, S), O](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (k: K, incoming: Iterator[E], state: GroupState[(Long, Long, S)]) =>
-          val (ts0, id0, s) = state.getOption.getOrElse((Long.MinValue, Long.MinValue, zero))
-          var (lastTs, lastId) = (ts0, id0)
-          val admitted = incoming.map(e => (e, micros(ts(e)))).toSeq
-            .sortBy { case (e, t) => (t, id(e)) }
-            .filter { case (e, t) =>
-              val fresh = t > lastTs || (t == lastTs && id(e) > lastId)
-              if (fresh) { lastTs = t; lastId = id(e) }
-              fresh
-            }
-          val (next, out) = fold(k, s, admitted)
-          state.update((lastTs, lastId, next))
-          out.iterator
-      }
+    keyedFold(events)(key, (Long.MinValue, Long.MinValue, zero)) { case (k, (ts0, id0, s), incoming) =>
+      var (lastTs, lastId) = (ts0, id0)
+      val admitted = incoming.map(e => (e, micros(ts(e)))).toSeq
+        .sortBy { case (e, t) => (t, id(e)) }
+        .filter { case (e, t) =>
+          val fresh = t > lastTs || (t == lastTs && id(e) > lastId)
+          if (fresh) { lastTs = t; lastId = id(e) }
+          fresh
+        }
+      val (next, out) = fold(k, s, admitted)
+      ((lastTs, lastId, next), out)
+    }
   }
 
   /** A5 `bounded_state_dedup`, streaming form (utils/cache.py:7-17,

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 import graft.operators.{Curation, Dedup}
 
 /** A document entering the weighted sampler: weight is its n_chars. */
@@ -43,25 +43,18 @@ object WorSampleStream {
   def sample(docs: Dataset[WorDoc]): Dataset[WorPick] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.filter(_.nChars > 0) // the batch op's w > 0 precondition
-      .groupByKey(_.source)
-      .flatMapGroupsWithState[Seq[(Long, Long)], WorPick](
-        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
-        case (source, incoming, state: GroupState[Seq[(Long, Long)]]) =>
-          val prev = state.getOption.getOrElse(Seq.empty)
-          // fold the batch in: distinct (pri, id) pairs make redelivery
-          // a no-op (docs are immutable — same id ⇒ same priority), and
-          // the K smallest under (pri ASC, id ASC) is the kernel's
-          // exact total order, so the result is split-invariant
-          val next = (prev ++ incoming.map(d => (priority(d.docId, d.nChars), d.docId)))
-            .distinct.sorted.take(Curation.WorK)
-          if (next == prev) Iterator.empty
-          else {
-            state.update(next)
-            next.iterator.zipWithIndex.map { case ((pri, id), i) =>
-              WorPick(source, (i + 1).toLong, id, pri)
-            }
-          }
-      }
+    val sampled = docs.filter(_.nChars > 0) // the batch op's w > 0 precondition
+    Streams.keyedFold(sampled, OutputMode.Update())(_.source, zero = Seq.empty[(Long, Long)]) {
+      (source, prev, incoming) =>
+        // fold the batch in: distinct (pri, id) pairs make redelivery
+        // a no-op (docs are immutable — same id ⇒ same priority), and
+        // the K smallest under (pri ASC, id ASC) is the kernel's
+        // exact total order, so the result is split-invariant
+        val next = (prev ++ incoming.map(d => (priority(d.docId, d.nChars), d.docId)))
+          .distinct.sorted.take(Curation.WorK)
+        (next, if (next == prev) Nil else next.zipWithIndex.map { case ((pri, id), i) =>
+          WorPick(source, (i + 1).toLong, id, pri)
+        })
+    }
   }
 }

@@ -18,7 +18,6 @@ class AnnMonitorStreamSpec extends AnyFunSuite {
 
   test("replayed corpus converges to the batch pq_adc_topk exactly") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val vecs = graft.Tables.embeddings(spark, Dir)
       .select("vec_id", "embedding").collect()
       .map(r => IncomingVec(r.getLong(0), r.getSeq[Float](1)))
@@ -29,23 +28,12 @@ class AnnMonitorStreamSpec extends AnyFunSuite {
       vecs.filter(v => v.vec_id % 3 == 2).toSeq,
       vecs.filter(v => v.vec_id % 3 == 1).toSeq,
       vecs.filter(v => v.vec_id % 3 == 0).toSeq)
-    val in = MemoryStream[IncomingVec]
+    val outs = StreamDriver.collect(batches)(AnnMonitorStream.start(_, Dir, "ann-monitor-parity"))
     // latest emitted top-k per query wins (Update mode)
-    val latest = scala.collection.mutable.Map.empty[Long, Seq[(Long, Long, Long)]]
-    val emitted = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val q = AnnMonitorStream.start(in.toDS(), Dir, "ann-monitor-parity") {
-      (updates, _) =>
-        val rows = updates.collect()
-        emitted.synchronized { emitted += rows.length; () }
-        latest.synchronized {
-          rows.groupBy(_.q_id).foreach { case (qid, rs) =>
-            latest(qid) = rs.sortBy(_.rank).map(r => (r.rank, r.vec_id, r.adist)).toSeq
-          }
-        }
-    }
-    try {
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-    } finally q.stop()
+    val latest = outs.flatMap(_.groupBy(_.q_id).map { case (qid, rs) =>
+      qid -> rs.sortBy(_.rank).map(r => (r.rank, r.vec_id, r.adist)).toSeq
+    })
+    val emitted = outs.map(_.length)
     val batchRows = SparkEntry.queries("pq_adc_topk")(spark, Dir)
       .collect()
       .groupBy(_.getLong(0)).view.mapValues(
@@ -118,19 +106,12 @@ class AnnMonitorStreamSpec extends AnyFunSuite {
 
   test("a batch that changes nothing emits nothing") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val vecs = graft.Tables.embeddings(spark, Dir)
       .select("vec_id", "embedding").collect()
       .map(r => IncomingVec(r.getLong(0), r.getSeq[Float](1)))
-    val in = MemoryStream[IncomingVec]
-    val counts = scala.collection.mutable.ArrayBuffer.empty[Int]
-    val q = AnnMonitorStream.start(in.toDS(), Dir, "ann-monitor-idem") {
-      (updates, _) => counts.synchronized { counts += updates.collect().length; () }
-    }
-    try {
-      in.addData(vecs.toSeq); q.processAllAvailable()
-      in.addData(vecs.toSeq); q.processAllAvailable() // exact replay: no change
-    } finally q.stop()
+    // the second batch is an exact replay: no change
+    val counts = StreamDriver.collect(Seq(vecs.toSeq, vecs.toSeq))(
+      AnnMonitorStream.start(_, Dir, "ann-monitor-idem")).map(_.length)
     assert(counts.length == 2 && counts(0) > 0 && counts(1) == 0,
       s"replay batch must be silent, got $counts")
   }

@@ -22,26 +22,17 @@ class AnomalyStreamSpec extends AnyFunSuite {
     graft.Tables.events(spark, Dir).selectExpr("event_type", "ts").collect()
       .map(r => VolObs(r.getString(0), r.getTimestamp(1))).toSeq
 
+  /** The MAD flags of a histogram; the driver's rows are a snapshot, so
+    * madOfDaily may join the histogram with itself, and a monitoring
+    * reader snapshots its baseline anyway. */
+  private def flagRows(hist: org.apache.spark.sql.DataFrame): Set[Row] =
+    AnomalyStream.flags(hist).collect()
+      .map(r => (r.getString(0), r.getTimestamp(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getBoolean(5))).toSet
+
   private def run(batches: Seq[Seq[VolObs]]): Set[Row] = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[VolObs]
-    val name = s"vol_${System.nanoTime()}"
-    val q = AnomalyStream.daily(in.toDS()).writeStream
-      .outputMode("complete").format("memory").queryName(name).start()
-    try {
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      // snapshot the (bounded, types × days) histogram before the MAD
-      // extraction: madOfDaily self-joins its input, and a memory-sink
-      // relation joined with itself trips Spark's conflicting-reference
-      // resolution; a monitoring reader snapshots its baseline anyway
-      val t = spark.table(name)
-      val hist = spark.createDataFrame(
-        spark.sparkContext.parallelize(t.collect().toSeq), t.schema)
-      AnomalyStream.flags(hist).collect()
-        .map(r => (r.getString(0), r.getTimestamp(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getBoolean(5))).toSet
-    } finally q.stop()
+    flagRows(StreamDriver.run(batches, "complete")(AnomalyStream.daily).rows)
   }
 
   test("single batch equals batch anomaly_mad") {
@@ -66,24 +57,10 @@ class AnomalyStreamSpec extends AnyFunSuite {
 
   private def runTracked(batches: Seq[Seq[VolEvent]]): Set[Row] = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[VolEvent]
-    val name = s"vdelta_${System.nanoTime()}"
-    val q = AnomalyStream.trackedDeltas(in.toDS()).writeStream
-      .outputMode("append").format("memory").queryName(name).start()
-    try {
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      // downstream monoid rollup: sum of emitted deltas IS the daily
-      // histogram; snapshot before the self-joining MAD extraction
-      val t = spark.table(name).groupBy("eventType", "day")
-        .agg(org.apache.spark.sql.functions.sum("dn").as("n"))
-        .withColumnRenamed("eventType", "event_type")
-      val hist = spark.createDataFrame(
-        spark.sparkContext.parallelize(t.collect().toSeq), t.schema)
-      AnomalyStream.flags(hist).collect()
-        .map(r => (r.getString(0), r.getTimestamp(1), r.getLong(2), r.getLong(3),
-          r.getLong(4), r.getBoolean(5))).toSet
-    } finally q.stop()
+    // downstream monoid rollup: sum of emitted deltas IS the daily histogram
+    flagRows(StreamDriver.run(batches, "append")(AnomalyStream.trackedDeltas).rows
+      .groupBy("eventType", "day").agg(org.apache.spark.sql.functions.sum("dn").as("n"))
+      .withColumnRenamed("eventType", "event_type"))
   }
 
   test("tracked: in-order splits WITH prefix replays converge to the batch flags") {

@@ -27,16 +27,9 @@ class BudgetStreamSpec extends AnyFunSuite {
 
   private def run(batches: Seq[Seq[BudgetDoc]]): Seq[BudgetDecision] = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[BudgetDoc]
     val budgets = BudgetStream.trainBudgets(spark, Dir)
-    val name = s"budget_out_${System.nanoTime()}"
-    val q = BudgetStream.gate(in.toDS(), budgets).writeStream
-      .outputMode("append").format("memory").queryName(name).start()
-    try {
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      spark.table(name).as[BudgetDecision].collect().toSeq
-    } finally q.stop()
+    StreamDriver.run(batches, "append")(BudgetStream.gate(_, budgets))
+      .rows.as[BudgetDecision].collect().toSeq
   }
 
   private def key(d: BudgetDecision): Row6 =

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{SparkEntry, TestSpark}
 
@@ -14,13 +13,12 @@ class CorruptStreamSpec extends AnyFunSuite {
   private val Dir = "/root/testdata/sf0.001"
 
   private type RowT = (Long, Long, Long, Long, Long, Long)
-  private def collectRows(df: org.apache.spark.sql.DataFrame): Seq[RowT] =
-    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+  private def collectRows(rows: Array[org.apache.spark.sql.Row]): Seq[RowT] =
+    rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
       r.getLong(3), r.getLong(4), r.getLong(5))).toSeq
 
   test("streamed corpus equals the batch query; replay is byte-identical") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val docs = graft.Tables.documents(spark, Dir)
       .select("doc_id", "lang", "text").collect()
       .map(r => IncomingDoc(r.getLong(0), r.getString(1), r.getString(2)))
@@ -28,15 +26,7 @@ class CorruptStreamSpec extends AnyFunSuite {
       docs.filter(_.doc_id % 3 == 0).toSeq,
       docs.filter(_.doc_id % 3 != 0).toSeq,
       docs.filter(_.doc_id % 3 == 0).toSeq) // replay of batch 1
-    val in = MemoryStream[IncomingDoc]
-    val seen = scala.collection.mutable.ArrayBuffer.empty[Seq[RowT]]
-    val q = CorruptStream.start(in.toDS(), "corrupt-parity") { (out, _) =>
-      val rows = collectRows(out)
-      seen.synchronized { seen += rows; () }
-    }
-    try {
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-    } finally q.stop()
+    val seen = StreamDriver.collect(batches)(CorruptStream.start(_, "corrupt-parity")).map(collectRows)
     assert(seen.size == 3)
     // replayed batch = first batch, byte-identical, no state involved
     assert(seen(2).sortBy(_._1) == seen(0).sortBy(_._1),
@@ -44,7 +34,7 @@ class CorruptStreamSpec extends AnyFunSuite {
     // union of the first two batches = the batch query exactly
     val streamed = (seen(0) ++ seen(1)).sortBy(_._1)
     val batch = collectRows(
-      SparkEntry.queries("span_corruption")(spark, Dir)).sortBy(_._1)
+      SparkEntry.queries("span_corruption")(spark, Dir).collect()).sortBy(_._1)
     assert(streamed == batch, "stream/batch parity broken")
   }
 }

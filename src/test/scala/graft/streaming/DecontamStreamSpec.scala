@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{SparkEntry, TestSpark}
 import graft.operators.{Dedup, Semantic}
@@ -17,7 +16,6 @@ class DecontamStreamSpec extends AnyFunSuite {
 
   test("stream verdicts equal the batch audit; leaks blocked; replay idempotent") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     // the batch audit's train relation as incoming vectors: corpus
     // minus the eval suite, plus the injected re-keyed leaks
     val all = graft.Tables.embeddings(spark, Dir)
@@ -30,16 +28,8 @@ class DecontamStreamSpec extends AnyFunSuite {
       train.filter(_.vec_id % 2 == 0).toSeq,
       train.filter(_.vec_id % 2 != 0).toSeq,
       train.filter(_.vec_id % 2 == 0).toSeq) // replay of batch 1
-    val in = MemoryStream[IncomingVec]
-    val seen = scala.collection.mutable.ArrayBuffer.empty[Seq[(Long, Long, Boolean)]]
-    val q = DecontamStream.start(in.toDS(), Dir, "decontam-gate") { (gated, _) =>
-      val rows = gated.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
-      seen.synchronized { seen += rows; () }
-    }
-    try {
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-    } finally q.stop()
+    val seen = StreamDriver.collect(batches)(DecontamStream.start(_, Dir, "decontam-gate"))
+      .map(_.map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq)
     assert(seen.size == 3)
     assert(seen(2).sortBy(_._1) == seen(0).sortBy(_._1),
       "replayed batch must gate identically (stateless verdict)")

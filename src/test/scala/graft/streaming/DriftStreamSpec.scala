@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{SparkEntry, TestSpark}
 
@@ -21,7 +20,6 @@ class DriftStreamSpec extends AnyFunSuite {
 
   test("replaying the corpus source-whole through micro-batches equals the batch report") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val docs = graft.Tables.documents(spark, Dir)
       .select("doc_id", "source", "text").collect()
       .map(r => SourcedDoc(r.getLong(0), r.getString(1), r.getString(2)))
@@ -32,14 +30,7 @@ class DriftStreamSpec extends AnyFunSuite {
     val batchOf = srcs.zipWithIndex.toMap
     val batches = (0 until 3).map(i =>
       docs.filter(d => batchOf(d.source) % 3 == i).toSeq)
-    val in = MemoryStream[SourcedDoc]
-    val outs = scala.collection.mutable.ArrayBuffer.empty[Array[Row]]
-    val q = DriftStream.start(in.toDS(), Dir, "drift-parity") {
-      (report, _) => outs.synchronized { outs += report.collect() }
-    }
-    try {
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-    } finally q.stop()
+    val outs = StreamDriver.collect(batches)(DriftStream.start(_, Dir, "drift-parity"))
     val streamed = outs.flatten.map(key).toSet
     val batch = SparkEntry.queries("source_unigram_drift")(spark, Dir)
       .collect().map(key).toSet
@@ -55,7 +46,6 @@ class DriftStreamSpec extends AnyFunSuite {
 
   test("a fully-novel source scores the exact maximum distance") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     // reference mass total, recomputed the model's own way
     val tokens = graft.Tables.documents(spark, Dir)
       .selectExpr("explode(split(text, ' ')) AS term").collect()
@@ -63,18 +53,11 @@ class DriftStreamSpec extends AnyFunSuite {
     val n = tokens.length.toLong
     val pTotal = tokens.groupBy(identity).values
       .map(g => g.size.toLong * Scale / n).sum
-    val in = MemoryStream[SourcedDoc]
-    val outs = scala.collection.mutable.ArrayBuffer.empty[Array[Row]]
-    val q = DriftStream.start(in.toDS(), Dir, "drift-novel") {
-      (report, _) => outs.synchronized { outs += report.collect() }
-    }
-    try {
-      // four equal-count unseen terms: every p_st = 250000 exactly, so
-      // d_present = 10^6 with zero floor loss and pt_present = 0 —
-      // tv = (10^6 + P_total) / 2, exactly
-      in.addData(SourcedDoc(1L, "novel", "zzq1 zzq2 zzq3 zzq4"))
-      q.processAllAvailable()
-    } finally q.stop()
+    // four equal-count unseen terms: every p_st = 250000 exactly, so
+    // d_present = 10^6 with zero floor loss and pt_present = 0 —
+    // tv = (10^6 + P_total) / 2, exactly
+    val outs = StreamDriver.collect(Seq(Seq(SourcedDoc(1L, "novel", "zzq1 zzq2 zzq3 zzq4"))))(
+      DriftStream.start(_, Dir, "drift-novel"))
     val rows = outs.flatten.map(key)
     assert(rows.length == 1, s"expected one report row, got ${rows.toSeq}")
     val (src, nTerms, tv) = rows.head

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{SparkEntry, TestSpark}
 
@@ -21,7 +20,6 @@ class DsirStreamSpec extends AnyFunSuite {
 
   test("replaying the corpus through micro-batches equals the batch selector") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val docs = graft.Tables.documents(spark, Dir)
       .select("doc_id", "lang", "text").collect()
       .map(r => IncomingDoc(r.getLong(0), r.getString(1), r.getString(2)))
@@ -30,14 +28,7 @@ class DsirStreamSpec extends AnyFunSuite {
       docs.filter(_.doc_id % 3 == 0).toSeq,
       docs.filter(_.doc_id % 3 == 1).toSeq,
       docs.filter(_.doc_id % 3 == 2).toSeq)
-    val in = MemoryStream[IncomingDoc]
-    val outs = scala.collection.mutable.ArrayBuffer.empty[Array[Row]]
-    val q = DsirStream.start(in.toDS(), Dir, "dsir-parity") {
-      (scored, _) => outs.synchronized { outs += scored.collect() }
-    }
-    try {
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-    } finally q.stop()
+    val outs = StreamDriver.collect(batches)(DsirStream.start(_, Dir, "dsir-parity"))
     val streamed = outs.flatten.map(key).toSet
     val batch = SparkEntry.queries("dsir_select")(spark, Dir)
       .collect().map(key).toSet
@@ -52,30 +43,22 @@ class DsirStreamSpec extends AnyFunSuite {
 
   test("a doc whose grams miss every trained bucket still scores — at the neutral ratio") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[IncomingDoc]
-    val outs = scala.collection.mutable.ArrayBuffer.empty[Array[Row]]
-    val q = DsirStream.start(in.toDS(), Dir, "dsir-novel") {
-      (scored, _) => outs.synchronized { outs += scored.collect() }
+    // the reference corpus populates a fraction of the 8192-bucket
+    // space; search for a single bigram whose hashed bucket the
+    // trained model never saw (adaptive — a fixed probe phrase would
+    // hit a trained bucket with high probability)
+    val (model, _) = graft.operators.TrainingMix.dsirModel(spark, Dir)
+    val trained = model.select("b").collect().map(_.getLong(0)).toSet
+    val candidates = (1 to 400).map(i => s"zzqa$i zzqb$i")
+    val hit = candidates.find { text =>
+      val b = spark.sql(
+        s"SELECT graft_winhash(split('$text', ' '), 2)[0] % 8192 AS b")
+        .collect().head.getLong(0)
+      !trained.contains(b)
     }
-    try {
-      // the reference corpus populates a fraction of the 8192-bucket
-      // space; search for a single bigram whose hashed bucket the
-      // trained model never saw (adaptive — a fixed probe phrase would
-      // hit a trained bucket with high probability)
-      val (model, _) = graft.operators.TrainingMix.dsirModel(spark, Dir)
-      val trained = model.select("b").collect().map(_.getLong(0)).toSet
-      val candidates = (1 to 400).map(i => s"zzqa$i zzqb$i")
-      val hit = candidates.find { text =>
-        val b = spark.sql(
-          s"SELECT graft_winhash(split('$text', ' '), 2)[0] % 8192 AS b")
-          .collect().head.getLong(0)
-        !trained.contains(b)
-      }
-      assert(hit.nonEmpty, "no untrained bucket in 400 probes — model suspiciously full")
-      in.addData(IncomingDoc(900001L, "xx", hit.get))
-      q.processAllAvailable()
-    } finally q.stop()
+    assert(hit.nonEmpty, "no untrained bucket in 400 probes — model suspiciously full")
+    val outs = StreamDriver.collect(Seq(Seq(IncomingDoc(900001L, "xx", hit.get))))(
+      DsirStream.start(_, Dir, "dsir-novel"))
     val rows = outs.flatten
     assert(rows.length == 1,
       s"the all-novel doc must still be scored (inner-join regression): ${rows.length} rows")

@@ -24,18 +24,10 @@ class FunnelStreamSpec extends AnyFunSuite {
 
   private def run(batches: Seq[Seq[FunnelEvent]]): (Seq[Row], Long) = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[FunnelEvent]
-    val name = s"funnel_${System.nanoTime()}"
-    val q = FunnelStream.completions(in.toDS()).writeStream
-      .outputMode("append").format("memory").queryName(name).start()
-    try {
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      val emitted = spark.table(name)
-      val rows = FunnelStream.report(emitted).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
-      (rows, emitted.count())
-    } finally q.stop()
+    val emitted = StreamDriver.run(batches, "append")(FunnelStream.completions).rows
+    val rows = FunnelStream.report(emitted).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
+    (rows, emitted.count())
   }
 
   test("single batch equals the batch funnel report") {

@@ -21,16 +21,8 @@ class MarkovStreamSpec extends AnyFunSuite {
 
   private def run(batches: Seq[Seq[MkvEvent]]): Map[(String, String), Long] = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[MkvEvent]
-    val name = s"mkv_${System.nanoTime()}"
-    val q = MarkovStream.transitions(in.toDS()).writeStream
-      .outputMode("append").format("memory").queryName(name).start()
-    try {
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      spark.table(name).as[Transition].collect()
-        .groupBy(t => (t.prevType, t.nextType)).view.mapValues(_.length.toLong).toMap
-    } finally q.stop()
+    StreamDriver.run(batches, "append")(MarkovStream.transitions).rows.as[Transition].collect()
+      .groupBy(t => (t.prevType, t.nextType)).view.mapValues(_.length.toLong).toMap
   }
 
   test("single batch equals the batch matrix") {

@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.{SparkEntry, TestSpark}
 import graft.operators.Dedup
@@ -18,7 +17,6 @@ class NearDupStreamSpec extends AnyFunSuite {
 
   test("streamed corpus recovers the batch candidate set; replay idempotent") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val docs = Dedup.withNearDupes(spark, Dir)
       .collect().map(r => NearDupDoc(r.getLong(0), r.getString(1)))
     // odd/even split, then a full replay of the first batch
@@ -26,15 +24,8 @@ class NearDupStreamSpec extends AnyFunSuite {
       docs.filter(_.doc_id % 2 == 0).toSeq,
       docs.filter(_.doc_id % 2 != 0).toSeq,
       docs.filter(_.doc_id % 2 == 0).toSeq)
-    val in = MemoryStream[NearDupDoc]
-    val seen = scala.collection.mutable.ArrayBuffer.empty[Set[(Long, Long)]]
-    val q = NearDupStream.start(in.toDS(), Dir, "near-dup-gate") { (cands, _) =>
-      val rows = cands.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      seen.synchronized { seen += rows; () }
-    }
-    try {
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-    } finally q.stop()
+    val seen = StreamDriver.collect(batches)(NearDupStream.start(_, Dir, "near-dup-gate"))
+      .map(_.map(r => (r.getLong(0), r.getLong(1))).toSet)
     assert(seen.size == 3)
     assert(seen(2) == seen(0), "replayed batch must probe identically (stateless)")
     // normalize both sides to unordered pairs: the stream reports each

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
@@ -20,7 +19,6 @@ class PqStreamSpec extends AnyFunSuite {
 
   test("replaying the corpus through micro-batches equals the batch encode") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     val vecs = graft.Tables.embeddings(spark, Dir)
       .select("vec_id", "embedding").collect()
       .map(r => IncomingVec(r.getLong(0), r.getSeq[Float](1)))
@@ -28,14 +26,7 @@ class PqStreamSpec extends AnyFunSuite {
       vecs.filter(_.vec_id % 3 == 0).toSeq,
       vecs.filter(_.vec_id % 3 == 1).toSeq,
       vecs.filter(_.vec_id % 3 == 2).toSeq)
-    val in = MemoryStream[IncomingVec]
-    val outs = scala.collection.mutable.ArrayBuffer.empty[Array[Row]]
-    val q = PqStream.start(in.toDS(), Dir, "pq-parity") {
-      (encoded, _) => outs.synchronized { outs += encoded.collect(); () }
-    }
-    try {
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-    } finally q.stop()
+    val outs = StreamDriver.collect(batches)(PqStream.start(_, Dir, "pq-parity"))
     val streamed = outs.flatten.map(key).toSet
     val cents = graft.operators.Semantic.pqTrainOn(spark, Dir)
     val batch = graft.operators.Semantic.pqEncode(

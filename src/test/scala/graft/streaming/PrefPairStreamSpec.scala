@@ -27,18 +27,10 @@ class PrefPairStreamSpec extends AnyFunSuite {
   /** Run the stream, returning each stratum's LAST emitted pair. */
   private def run(batches: Seq[Seq[PrefDoc]]): Set[Pair] = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[PrefDoc]
-    val name = s"pref_out_${System.nanoTime()}"
-    val q = PrefPairStream.pairs(in.toDS()).writeStream
-      .outputMode("update").format("memory").queryName(name).start()
-    try {
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      spark.table(name).as[PrefPair].collect().zipWithIndex
-        .groupBy(p => (p._1.source, p._1.lang)).values
-        .map(_.maxBy(_._2)._1) // newest emission per stratum
-        .map(p => (p.source, p.lang, p.chosenId, p.rejectedId, p.margin)).toSet
-    } finally q.stop()
+    StreamDriver.run(batches, "update")(PrefPairStream.pairs).rows.as[PrefPair].collect()
+      .zipWithIndex.groupBy(p => (p._1.source, p._1.lang)).values
+      .map(_.maxBy(_._2)._1) // newest emission per stratum
+      .map(p => (p.source, p.lang, p.chosenId, p.rejectedId, p.margin)).toSet
   }
 
   test("one-batch replay converges to the batch pairs bit-for-bit") {

@@ -20,16 +20,8 @@ class QuantileStreamSpec extends AnyFunSuite {
 
   private def run(batches: Seq[Seq[QObs]]): Set[(String, Long, Long)] = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[QObs]
-    val name = s"qhist_${System.nanoTime()}"
-    val q = QuantileStream.histogram(in.toDS()).writeStream
-      .outputMode("complete").format("memory").queryName(name).start()
-    try {
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      QuantileStream.quantiles(spark.table(name)).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    } finally q.stop()
+    QuantileStream.quantiles(StreamDriver.run(batches, "complete")(QuantileStream.histogram).rows)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
   }
 
   test("single batch equals the batch quantiles") {
@@ -55,20 +47,12 @@ class QuantileStreamSpec extends AnyFunSuite {
 
   private def runTracked(batches: Seq[Seq[QEvent]]): Set[(String, Long, Long)] = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[QEvent]
-    val name = s"qdelta_${System.nanoTime()}"
-    val q = QuantileStream.trackedDeltas(in.toDS()).writeStream
-      .outputMode("append").format("memory").queryName(name).start()
-    try {
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      // downstream monoid rollup: sum of the emitted deltas IS the histogram
-      val hist = spark.table(name).groupBy("eventType", "cents")
-        .agg(org.apache.spark.sql.functions.sum("dc").as("c"))
-        .withColumnRenamed("eventType", "event_type")
-      QuantileStream.quantiles(hist).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    } finally q.stop()
+    // downstream monoid rollup: sum of the emitted deltas IS the histogram
+    val hist = StreamDriver.run(batches, "append")(QuantileStream.trackedDeltas).rows
+      .groupBy("eventType", "cents").agg(org.apache.spark.sql.functions.sum("dc").as("c"))
+      .withColumnRenamed("eventType", "event_type")
+    QuantileStream.quantiles(hist).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
   }
 
   test("tracked: in-order splits WITH prefix replays converge to the batch quantiles") {

@@ -23,19 +23,11 @@ class ReplayGateSpec extends AnyFunSuite {
     * far: the fold's own state, threaded across batches. */
   private def run(batches: Seq[Seq[GateEvent]]): Seq[(Long, Long, Long, Long)] = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[GateEvent]
-    val name = s"gate_${System.nanoTime()}"
-    val gated = Streams.replayGated(in.toDS())(_.key, _.ts, _.eventId, zero = 0L) {
+    StreamDriver.run(batches, "append")(Streams.replayGated(_)(_.key, _.ts, _.eventId, zero = 0L) {
       (key, n, admitted) =>
         (n + admitted.size, admitted.zipWithIndex.map { case ((e, t), i) =>
           (key, e.eventId, t, n + i + 1) })
-    }
-    val q = gated.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try {
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      spark.table(name).as[(Long, Long, Long, Long)].collect().toSeq.sortBy(r => (r._1, r._4))
-    } finally q.stop()
+    }).rows.as[(Long, Long, Long, Long)].collect().toSeq.sortBy(r => (r._1, r._4))
   }
 
   test("an equal-micros event with a larger id in a later batch is admitted") {

@@ -25,20 +25,12 @@ class RetentionStreamSpec extends AnyFunSuite {
   /** Run the stream and apply the authoritative fold. */
   private def run(batches: Seq[Seq[RetEvent]]): Map[(Timestamp, Long), Long] = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[RetEvent]
-    val name = s"ret_out_${System.nanoTime()}"
-    val q = RetentionStream.cells(in.toDS()).writeStream
-      .outputMode("append").format("memory").queryName(name).start()
-    try {
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      val cells = spark.table(name).as[RetCell].collect()
-      // per user: min cohort supersedes; distinct offsets under it
-      cells.groupBy(_.userId).toSeq.flatMap { case (_, cs) =>
-        val c0 = cs.map(_.cohortWeek).minBy(_.getTime)
-        cs.filter(_.cohortWeek == c0).map(c => (c0, c.weekOffset)).distinct
-      }.groupBy(identity).view.mapValues(_.size.toLong).toMap
-    } finally q.stop()
+    val cells = StreamDriver.run(batches, "append")(RetentionStream.cells).rows.as[RetCell].collect()
+    // per user: min cohort supersedes; distinct offsets under it
+    cells.groupBy(_.userId).toSeq.flatMap { case (_, cs) =>
+      val c0 = cs.map(_.cohortWeek).minBy(_.getTime)
+      cs.filter(_.cohortWeek == c0).map(c => (c0, c.weekOffset)).distinct
+    }.groupBy(identity).view.mapValues(_.size.toLong).toMap
   }
 
   test("one-batch replay equals the batch triangle") {

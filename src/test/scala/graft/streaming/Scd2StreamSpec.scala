@@ -29,20 +29,12 @@ class Scd2StreamSpec extends AnyFunSuite {
 
   private def run(batches: Seq[Seq[ScdEvent]]): Set[Row] = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[ScdEvent]
-    val name = s"scd2_out_${System.nanoTime()}"
-    val q = Scd2Stream.versions(in.toDS()).writeStream
-      .outputMode("append").format("memory").queryName(name).start()
-    try {
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      val rows = spark.table(name).as[ScdVersion].collect()
-      // authoritative fold: closed row supersedes the open emission
-      rows.groupBy(v => (v.userId, v.version)).values.map { vs =>
-        val v = vs.find(_.validTo.isDefined).getOrElse(vs.head)
-        (v.userId, v.eventType, v.validFrom, v.validTo, v.version, v.isCurrent)
-      }.toSet
-    } finally q.stop()
+    val rows = StreamDriver.run(batches, "append")(Scd2Stream.versions).rows.as[ScdVersion].collect()
+    // authoritative fold: closed row supersedes the open emission
+    rows.groupBy(v => (v.userId, v.version)).values.map { vs =>
+      val v = vs.find(_.validTo.isDefined).getOrElse(vs.head)
+      (v.userId, v.eventType, v.validFrom, v.validTo, v.version, v.isCurrent)
+    }.toSet
   }
 
   test("single batch equals batch scd2_history bit-for-bit") {

@@ -24,18 +24,10 @@ class WindowFunnelStreamSpec extends AnyFunSuite {
 
   private def run(batches: Seq[Seq[FunnelEvent]]): (Seq[Row], Long) = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[FunnelEvent]
-    val name = s"wfunnel_${System.nanoTime()}"
-    val q = WindowFunnelStream.levelUps(in.toDS()).writeStream
-      .outputMode("append").format("memory").queryName(name).start()
-    try {
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      val emitted = spark.table(name)
-      val rows = WindowFunnelStream.report(emitted).collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
-      (rows, emitted.count())
-    } finally q.stop()
+    val emitted = StreamDriver.run(batches, "append")(WindowFunnelStream.levelUps).rows
+    val rows = WindowFunnelStream.report(emitted).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3))).toSeq
+    (rows, emitted.count())
   }
 
   test("single batch equals the batch window_funnel report") {
@@ -58,7 +50,6 @@ class WindowFunnelStreamSpec extends AnyFunSuite {
 
   test("off-inventory event types sharing a step's initial never match (r19 ADVICE)") {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
     def ts(h: Long) = new java.sql.Timestamp(h * 3600 * 1000L)
     // 'checkout' and 'pageview' collide with 'click'/'purchase'/'view'
     // on first letters — under exact-name matching the user converts
@@ -69,16 +60,9 @@ class WindowFunnelStreamSpec extends AnyFunSuite {
       FunnelEvent(1L, ts(2), 3L, "checkout"),  // decoy 'c' — must not level-up
       FunnelEvent(1L, ts(3), 4L, "click"),
       FunnelEvent(1L, ts(4), 5L, "purchase"))
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[FunnelEvent]
-    val name = s"wfunnel_decoy_${System.nanoTime()}"
-    val q = WindowFunnelStream.levelUps(in.toDS()).writeStream
-      .outputMode("append").format("memory").queryName(name).start()
-    try {
-      in.addData(evs); q.processAllAvailable()
-      val got = spark.table(name).collect()
-        .map(r => (r.getLong(1), r.getTimestamp(2))).sortBy(_._1).toSeq
-      assert(got == Seq((1L, ts(1)), (2L, ts(3)), (3L, ts(4))),
-        s"decoy initials leaked into the funnel: $got")
-    } finally q.stop()
+    val got = StreamDriver.run(Seq(evs), "append")(WindowFunnelStream.levelUps).rows.collect()
+      .map(r => (r.getLong(1), r.getTimestamp(2))).sortBy(_._1).toSeq
+    assert(got == Seq((1L, ts(1)), (2L, ts(3)), (3L, ts(4))),
+      s"decoy initials leaked into the funnel: $got")
   }
 }

@@ -27,25 +27,17 @@ class WorSampleStreamSpec extends AnyFunSuite {
   /** Run the stream, returning each source's LAST emitted sample. */
   private def run(batches: Seq[Seq[WorDoc]]): Set[Pick] = {
     import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[WorDoc]
-    val name = s"wor_out_${System.nanoTime()}"
-    val q = WorSampleStream.sample(in.toDS()).writeStream
-      .outputMode("update").format("memory").queryName(name).start()
-    try {
-      batches.foreach { b => in.addData(b); q.processAllAvailable() }
-      // update sink appends each emission; the final sample per source
-      // is the set of rows from its LAST emitting batch — reconstruct
-      // by folding emissions in order
-      val rows = spark.table(name).as[WorPick].collect()
-      rows.zipWithIndex.groupBy(_._1.source).view.mapValues { rs =>
-        // ranks re-emit as full samples; keep the suffix after the last
-        // rank-1 row (the newest full emission)
-        val lastStart = rs.lastIndexWhere(_._1.rank == 1L)
-        rs.drop(lastStart).map(_._1)
-      }.toMap.values.flatten
-        .map(p => (p.source, p.rank, p.docId, p.priority)).toSet
-    } finally q.stop()
+    // update sink appends each emission; the final sample per source
+    // is the set of rows from its LAST emitting batch — reconstruct
+    // by folding emissions in order
+    val rows = StreamDriver.run(batches, "update")(WorSampleStream.sample).rows.as[WorPick].collect()
+    rows.zipWithIndex.groupBy(_._1.source).view.mapValues { rs =>
+      // ranks re-emit as full samples; keep the suffix after the last
+      // rank-1 row (the newest full emission)
+      val lastStart = rs.lastIndexWhere(_._1.rank == 1L)
+      rs.drop(lastStart).map(_._1)
+    }.toMap.values.flatten
+      .map(p => (p.source, p.rank, p.docId, p.priority)).toSet
   }
 
   test("one-batch replay converges to the batch sample bit-for-bit") {
